@@ -138,11 +138,8 @@ object ChangeFeed {
     else if (touched.size > wideTouchedThreshold)
       restrictByTupleJoin(stats, partitionCols, touched, anti = false)
     else stats.where(touched.map { tuple =>
-      val seg = partitionCols.zip(tuple).map { case (c, v) =>
-        s"$c=" + org.apache.spark.sql.catalyst.catalog
-          .ExternalCatalogUtils.escapePathName(v)
-      }.mkString("/", "/", "/")
-      col("file").contains(seg)
+      col("file").contains(
+        s"/${StatsIndex.partitionDir(stats.sparkSession, partitionCols, tuple)}/")
     }.reduce(_ || _))
 
   /** Join-based touched-partition restriction — the WIDE-hop shape:

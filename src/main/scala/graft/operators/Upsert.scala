@@ -162,6 +162,8 @@ object Upsert {
         .unionByName(d.select(keys.map(col): _*)))
     def applyDeletes(df: DataFrame): DataFrame = deletes.fold(df)(d =>
       df.join(d.select(keys.map(col): _*), keys, "left_anti"))
+    def partDirName(v: Any): String =
+      graft.sources.StatsIndex.partitionDir(spark, Seq(partitionCol), Seq(v))
     val merged =
       if (!exists) applyDeletes(updates)
       else {
@@ -180,8 +182,8 @@ object Upsert {
               // DROP its rows from the merge and then overwrite the
               // directory. One bounded exists() per touched partition.
               val unmatched = touched.filter { v =>
-                fs.exists(new org.apache.hadoop.fs.Path(dest, partDirName(partitionCol, v))) &&
-                  !files.exists(_.contains(s"/${partDirName(partitionCol, v)}/"))
+                fs.exists(new org.apache.hadoop.fs.Path(dest, partDirName(v))) &&
+                  !files.exists(_.contains(s"/${partDirName(v)}/"))
               }
               require(unmatched.isEmpty,
                 s"mergeInto: stats index at $idx names no files for existing " +
@@ -222,7 +224,7 @@ object Upsert {
       // match AND the exists() for exactly those values, leaving the
       // old generation (and its deleted rows) to resurrect (ADVICE r17)
       val emptied = touched
-        .map(v => new org.apache.hadoop.fs.Path(dest, partDirName(partitionCol, v)))
+        .map(v => new org.apache.hadoop.fs.Path(dest, partDirName(v)))
         .filterNot(p => published.contains(p))
         .filter(fs.exists(_))
       emptied.foreach(p => fs.delete(p, true))
@@ -345,11 +347,14 @@ object Upsert {
       if (gens.isEmpty) None
       else Some(graft.sources.StatsIndex.load(spark, s"$indexRoot/_v=${gens.last}"))
 
-    val touched: Seq[Seq[Any]] =
+    // the touched slice is needed BEFORE the write (the snapshot read),
+    // and a delete-only partition stages no file — so unlike the replace
+    // it is collected up front, rendered as the writer renders it
+    val touched = graft.sources.StatsIndex.partitionTuples(
       deletes.fold(updates.select(partitionCols.map(col): _*))(d =>
         updates.select(partitionCols.map(col): _*)
-          .unionByName(d.select(partitionCols.map(col): _*)))
-      .distinct().collect().map(_.toSeq).toSeq
+          .unionByName(d.select(partitionCols.map(col): _*))),
+      partitionCols)
     require(!touched.exists(_.contains(null)),
       s"mergeIntoVersioned: updates/deletes carry a NULL partition value " +
         s"in ${partitionCols.mkString(", ")}")
@@ -380,10 +385,17 @@ object Upsert {
       else splitByBlooms(spark, sliceFiles, probeKeys,
         Some(graft.sources.StatsIndex.generationBloomsPath(indexRoot, gens.last)),
         bloomColumns, maxBloomProbeKeys)
+    // the slice is read under the table's schema, partition columns
+    // included: inferring them from the directory names would turn a
+    // DECIMAL into a DOUBLE (or `007` into 7) and re-land the slice
+    // under a directory name its old files do not share
+    val sliceSchema = org.apache.spark.sql.types.StructType(
+      dataSchema.fields ++ partitionCols.map(updates.schema(_)))
     val merged = applyDeletes(
       if (mergeFiles.isEmpty) align(updates)
       else merge(
-        align(spark.read.option("basePath", path).parquet(mergeFiles: _*)),
+        align(spark.read.schema(sliceSchema).option("basePath", path)
+          .parquet(mergeFiles: _*)),
         align(updates), keys))
     commitVersioned(spark, path, indexRoot, gens, current, merged,
       partitionCols, touched, passFiles, dataSchema, statsColumns,
@@ -401,7 +413,15 @@ object Upsert {
     * batch, because re-landing a slice re-replaces exactly itself
     * (a new generation with identical logical content). Schema
     * evolution as in [[mergeIntoVersionedCols]]. Returns the committed
-    * generation. */
+    * generation.
+    *
+    * The frame is evaluated ONCE, by the staged write: the touched
+    * partitions are the `c=v` directories that write staged, so the
+    * frame's plan never runs a second time to find them. The guards
+    * therefore fire after the staged write and before anything moves
+    * into the table — an empty frame stages no partition directory, a
+    * NULL value stages the default partition; either raises, publishes
+    * nothing, and the staging directory is deleted. */
   def replacePartitionsVersioned(path: String, df: DataFrame,
                                  partitionCols: Seq[String], indexRoot: String,
                                  statsColumns: Seq[String] = Nil): Long = {
@@ -425,19 +445,18 @@ object Upsert {
     val current =
       if (gens.isEmpty) None
       else Some(graft.sources.StatsIndex.load(spark, s"$indexRoot/_v=${gens.last}"))
-    val touched: Seq[Seq[Any]] = df.select(partitionCols.map(col): _*)
-      .distinct().collect().map(_.toSeq).toSeq
-    require(touched.nonEmpty,
-      "replacePartitionsVersioned: empty frame — nothing to replace " +
-        "(an empty landing is the caller's no-op, not a generation)")
-    require(!touched.exists(_.contains(null)),
-      s"replacePartitionsVersioned: NULL partition value " +
-        s"in ${partitionCols.mkString(", ")}")
     val (dataSchema, align) = evolveVersioned(spark, indexRoot, gens,
       current, df, partitionCols)
     commitVersioned(spark, path, indexRoot, gens, current, align(df),
-      partitionCols, touched, Nil, dataSchema, statsColumns, Nil,
-      1L << 20, 0.01)
+      partitionCols, Nil, Nil, dataSchema, statsColumns, Nil,
+      1L << 20, 0.01, checkTouched = { touched =>
+        require(touched.nonEmpty,
+          "replacePartitionsVersioned: empty frame — nothing to replace " +
+            "(an empty landing is the caller's no-op, not a generation)")
+        require(!touched.exists(_.contains(null)),
+          s"replacePartitionsVersioned: NULL partition value " +
+            s"in ${partitionCols.mkString(", ")}")
+      })
   }
 
   /** SCHEMA EVOLUTION for the versioned writers: the incoming frame may
@@ -490,17 +509,28 @@ object Upsert {
     * a corrupt table), and commit generation N+1 = survivors + fresh
     * stats (+ carried/fresh blooms). `passFiles` are bloom-proven
     * unchanged files that survive the manifest despite sitting in
-    * touched partitions. */
+    * touched partitions.
+    *
+    * The touched partitions are `knownTouched` (tuples the caller had to
+    * collect before writing — a merge's delete-only partitions stage no
+    * file) plus every `c=v` directory the staged write produced, read
+    * back from the directory names (unescaped; the default partition
+    * reads as NULL) — so `out` runs exactly once, as the write.
+    * `checkTouched` sees that set after the staged write and before any
+    * file moves in: a guard that raises publishes nothing, and the
+    * staging directory is deleted either way. */
   private def commitVersioned(spark: org.apache.spark.sql.SparkSession,
                               path: String, indexRoot: String,
                               gens: Seq[Long], current: Option[DataFrame],
                               out: DataFrame, partitionCols: Seq[String],
-                              touched: Seq[Seq[Any]], passFiles: Seq[String],
+                              knownTouched: Seq[Seq[String]],
+                              passFiles: Seq[String],
                               dataSchema: org.apache.spark.sql.types.StructType,
                               statsColumns: Seq[String],
                               bloomColumns: Seq[String],
                               bloomItemsPerFile: Long,
-                              bloomFpp: Double): Long = {
+                              bloomFpp: Double,
+                              checkTouched: Seq[Seq[String]] => Unit = _ => ()): Long = {
     val dest = new org.apache.hadoop.fs.Path(path)
     val fs = dest.getFileSystem(spark.sessionState.newHadoopConf())
     val staging = new org.apache.hadoop.fs.Path(dest,
@@ -524,7 +554,16 @@ object Upsert {
             Seq((st.getPath, rel))
           else Nil
         }
-      val movedIn = staged(staging, Nil).map { case (f, rel) =>
+      val stagedFiles = staged(staging, Nil)
+      val touched = locally {
+        import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils._
+        (knownTouched ++ stagedFiles.map(_._2).distinct.map(_.map { seg =>
+          val v = seg.substring(seg.indexOf('=') + 1)
+          if (v == DEFAULT_PARTITION_NAME) null else unescapePathName(v)
+        })).distinct
+      }
+      checkTouched(touched)
+      val movedIn = stagedFiles.map { case (f, rel) =>
         val target = new org.apache.hadoop.fs.Path(dest, rel.mkString("/"))
         fs.mkdirs(target)
         val in = new org.apache.hadoop.fs.Path(target,
@@ -543,7 +582,8 @@ object Upsert {
       // commit: generation N+1 = untouched survivors + the new files
       val hconf = spark.sessionState.newHadoopConf()
       val prefixes = touched.map { t =>
-        val p = new org.apache.hadoop.fs.Path(dest, partDirName(partitionCols, t))
+        val p = new org.apache.hadoop.fs.Path(dest,
+          graft.sources.StatsIndex.partitionDir(spark, partitionCols, t))
         val q = p.getFileSystem(hconf).makeQualified(p).toString
         if (q.endsWith("/")) q else q + "/"
       }
@@ -613,7 +653,7 @@ object Upsert {
     * ([[ChangeFeed.restrictByTupleJoin]]). */
   private def untouchedByAntiJoin(spark: org.apache.spark.sql.SparkSession,
                                   stats: DataFrame, partitionCols: Seq[String],
-                                  touched: Seq[Seq[Any]]): DataFrame =
+                                  touched: Seq[Seq[String]]): DataFrame =
     ChangeFeed.restrictByTupleJoin(stats, partitionCols, touched, anti = true)
 
   /** Bounded retry loop around a VERSIONED commit — the Delta-style
@@ -642,18 +682,6 @@ object Upsert {
     }
     throw new IllegalStateException("unreachable")
   }
-
-  /** The directory name Spark actually writes for `col=value` — the
-    * value Hive-escaped (`%` → `%25`, `:`/`=`/control chars → `%xx`),
-    * via the same catalyst utility `partitionBy` uses. */
-  private def partDirName(partitionCol: String, v: Any): String =
-    s"$partitionCol=" + org.apache.spark.sql.catalyst.catalog
-      .ExternalCatalogUtils.escapePathName(String.valueOf(v))
-
-  /** The nested directory path `partitionBy(cols…)` writes for one
-    * partition value tuple — `c1=v1/c2=v2`, each value Hive-escaped. */
-  private def partDirName(partitionCols: Seq[String], t: Seq[Any]): String =
-    partitionCols.zip(t).map { case (c, v) => partDirName(c, v) }.mkString("/")
 
   /** (files that must enter the merge, files bloom-PROVEN to hold none of
     * the updates' key values). No bloom index / oversized probe set /

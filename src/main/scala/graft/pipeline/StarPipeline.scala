@@ -126,8 +126,12 @@ object StarPipeline {
       // partition swap: idempotent under Airflow retry, and a reader
       // holding yesterday's manifest keeps a consistent snapshot through
       // the republish (the publish-window race of the dynamic overwrite
-      // this replaces). The commit maintains the manifest incrementally
-      // (one footer read per new file); downstream tasks read the fact
+      // this replaces). The day's fact join runs ONCE, as the staged
+      // write: the replaced partition is read off the `order_date=`
+      // directory that write staged, so the join never runs a second
+      // time to find it (likewise the summary refresh's aggregate
+      // below). The commit maintains the manifest incrementally (one
+      // footer read per new file); downstream tasks read the fact
       // THROUGH it and open only their date's files.
       graft.operators.Upsert.replacePartitionsVersioned(factPath,
         dayFact(spark, srcDir, warehouse, executionDate),

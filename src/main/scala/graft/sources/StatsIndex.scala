@@ -868,12 +868,53 @@ object StatsIndex extends org.apache.spark.internal.Logging {
     doomed
   }
 
+  /** One partition value as the directory-name component `partitionBy`
+    * writes for it: the value cast to string in the session time zone
+    * (the writer's own cast), Hive-escaped (`%` → `%25`, `:`/`=`/control
+    * chars → `%xx`); NULL or empty names the default partition. A String
+    * is taken as already cast — the form [[partitionTuples]] collects
+    * and staged directory names read back as. `String.valueOf` is not
+    * this rendering: a TIMESTAMP prints `…10:00:00.0` and a DECIMAL zero
+    * of scale 8 `0E-8`, directories the writer never makes. */
+  private[graft] def partitionDirValue(spark: SparkSession, v: Any): String = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    val s = v match {
+      case null => null
+      case s: String => s
+      case other => Cast(Literal(other), org.apache.spark.sql.types.StringType,
+        Some(spark.sessionState.conf.sessionLocalTimeZone)).eval().toString
+    }
+    if (s == null || s.isEmpty) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+    else ExternalCatalogUtils.escapePathName(s)
+  }
+
+  /** The nested `c1=v1/c2=v2` directory path `partitionBy(cols…)` writes
+    * for one value tuple (outermost first), each value rendered by
+    * [[partitionDirValue]]. */
+  private[graft] def partitionDir(spark: SparkSession, partitionCols: Seq[String],
+                                  tuple: Seq[Any]): String =
+    partitionCols.zip(tuple).map { case (c, v) =>
+      s"$c=${partitionDirValue(spark, v)}"
+    }.mkString("/")
+
+  /** The distinct `partitionCols` tuples of `df`, collected through
+    * Spark's string cast — exactly the values the writer renders into
+    * directory names; NULL stays null. One job over `df`. */
+  private[graft] def partitionTuples(df: DataFrame,
+                                     partitionCols: Seq[String]): Seq[Seq[String]] =
+    df.select(partitionCols.map(c => col(c).cast("string")): _*)
+      .distinct().collect()
+      .map(r => partitionCols.indices.map(i =>
+        if (r.isNullAt(i)) null else r.getString(i)))
+      .toSeq
+
   /** The indexed files under the given `col=value` partition directories —
     * the file list a partition-pruned read needs, answered from the index
     * relation instead of a table-tree listing (at millions of files the
     * listing is exactly the planning cost the index removes). Values are
-    * Hive-escaped before the path-segment match, so they compare against
-    * the directory names Spark actually writes. */
+    * rendered by [[partitionDirValue]] before the path-segment match, so
+    * they compare against the directory names Spark actually writes. */
   def partitionFiles(stats: DataFrame, partitionCol: String,
                      values: Seq[Any]): Seq[String] =
     partitionTupleFiles(stats, Seq(partitionCol), values.map(Seq(_)))
@@ -894,8 +935,8 @@ object StatsIndex extends org.apache.spark.internal.Logging {
     * file path EXECUTOR-side, then semi-joined (`anti = false`: keep
     * matching) or anti-joined (`anti = true`: keep the rest) against the
     * broadcast tuple relation. Values compare ESCAPED-to-escaped (the
-    * tuples re-escape through the same catalyst utility `partitionBy`
-    * used to write the paths), so no unescape runs on the data path.
+    * tuples render through [[partitionDirValue]], as `partitionBy`
+    * rendered the paths), so no unescape runs on the data path.
     * Cost ∝ manifest size with a broadcast hash probe per row; the
     * expression tree stays O(columns) however many tuples. */
   private[graft] def restrictByTupleJoin(stats: DataFrame,
@@ -907,9 +948,8 @@ object StatsIndex extends org.apache.spark.internal.Logging {
     val schema = StructType(tcols.map(c =>
       org.apache.spark.sql.types.StructField(c,
         org.apache.spark.sql.types.StringType, nullable = false)))
-    val escaped = tuples.map(t => org.apache.spark.sql.Row.fromSeq(t.map(v =>
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .escapePathName(String.valueOf(v)))))
+    val escaped = tuples.map(t => org.apache.spark.sql.Row.fromSeq(
+      t.map(partitionDirValue(spark, _))))
     val tuplesDf = spark.createDataFrame(
       spark.sparkContext.parallelize(escaped,
         math.max(1, math.min(tuples.size / 50000 + 1, 32))), schema)
@@ -939,11 +979,8 @@ object StatsIndex extends org.apache.spark.internal.Logging {
       if (tuples.size > wideTupleThreshold)
         restrictByTupleJoin(stats, partitionCols, tuples, anti = false)
       else stats.where(tuples.map { t =>
-        val seg = partitionCols.zip(t).map { case (c, v) =>
-          s"$c=" + org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .escapePathName(String.valueOf(v))
-        }.mkString("/", "/", "/")
-        col("file").contains(seg)
+        col("file").contains(
+          s"/${partitionDir(stats.sparkSession, partitionCols, t)}/")
       }.reduce(_ || _))
     hits.select(col("file")).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
