@@ -54,7 +54,7 @@ object Bench {
 
   /** Per-query minimum across two references — how the previous artifact
     * and the rolling best-known combine into pass 3's yardstick, and how
-    * each run folds into `dev/bench_best.json`. A rolling minimum only
+    * each run folds into `dev/bench_best_<sf>.json`. A rolling minimum only
     * ratchets down, so one quiet sweep anywhere in history keeps the
     * contention defense armed (VERDICT r20: retiming against the previous
     * artifact alone let a contended sweep become the next yardstick). */
@@ -173,7 +173,8 @@ object Bench {
     // while a genuine regression (slow in both windows) still reports slow.
     //
     // Best-known = per-query MIN over (a) the previous artifact and (b) the
-    // rolling `dev/bench_best.json` this bench min-merges after every run.
+    // rolling `dev/bench_best_<sf>.json` this bench min-merges after every
+    // run.
     // Retiming against the previous artifact ALONE self-contaminated
     // (VERDICT r20 "What's wrong" #2): when the previous sweep was itself
     // contended, its inflated numbers became the yardstick and the next
@@ -184,19 +185,16 @@ object Bench {
     val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV",
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "dev/bench_out.json"))
     // best-known file keyed BY SCALE FACTOR (ADVICE r21): a single
-    // dev/bench_best.json was clobbered whenever runs alternated SFs —
+    // un-keyed file was clobbered whenever runs alternated SFs —
     // parseQueries returned empty for the other sf and the write
     // discarded its rolling best, disarming that sf's contention
-    // defense. The legacy un-keyed file still feeds the min-merge (its
-    // own sf guard applies), so an existing sf0.1 ratchet stays armed.
+    // defense.
     val sfName = new java.io.File(sfDir).getName
       .replaceAll("[^A-Za-z0-9._-]", "_")
     val bestPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_BEST",
       s"dev/bench_best_$sfName.json")
-    val legacyBestPath = "dev/bench_best.json"
     val prevQueries: Map[String, Double] =
-      minMerge(parseQueries(prevPath),
-        minMerge(parseQueries(bestPath), parseQueries(legacyBestPath)))
+      minMerge(parseQueries(prevPath), parseQueries(bestPath))
     val byName = sorted.toMap
     val retimed = scala.collection.mutable.ArrayBuffer[String]()
     val results = pass2.map { case (name, steady, cold) =>
@@ -265,10 +263,7 @@ object Bench {
     // subset run is a diagnostic, its JVM warms fewer shared kernels and
     // its numbers must not become anyone's yardstick
     if (only.isEmpty) try {
-      // fold the legacy un-keyed best file in once so the first sf-keyed
-      // write inherits the old ratchet instead of starting cold
-      val merged = minMerge(
-        minMerge(parseQueries(bestPath), parseQueries(legacyBestPath)),
+      val merged = minMerge(parseQueries(bestPath),
         results.filter(_._2 > 0).map { case (k, v, _) => k -> v }.toMap)
       val bq = merged.toSeq.sortBy(_._1)
         .map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")

@@ -17,12 +17,14 @@ import graft.sources.{IndexedScan, StatsIndex}
   *    still on disk until vacuum, so the old snapshot is bit-identical;
   *  - `between(from, to)` emits the keyed change rows
   *    (insert / delete / update with before/after values,
-  *    [[SnapshotDiff]] semantics) WITHOUT diffing the whole table: the
-  *    two generations' manifests are diffed on FILE NAMES
-  *    (distributed — the driver sees one row per CHANGED partition,
-  *    never the manifests' file lists), and only partitions whose file
-  *    sets changed enter the join — a merge that touched 3 of 10 000
-  *    partitions costs a 3-partition diff, not a table scan. A side
+  *    [[SnapshotDiff]] semantics) WITHOUT diffing the whole table: one
+  *    distributed job ([[touchedSlices]]) diffs the two generations'
+  *    manifests on FILE NAMES and collects only the stats rows of the
+  *    partitions whose file sets changed (never the manifests' full
+  *    file lists), and only those partitions enter the join — a merge
+  *    that touched 3 of 10 000 partitions costs a 3-partition diff, not
+  *    a table scan. Partition values come off the paths through
+  *    [[graft.sources.StatsIndex]]'s partition-path codec. A side
   *    whose restricted slice is FILE-EMPTY (the append-only hop: every
   *    touched partition is new on the other side — the most common
   *    daily-ingest hop) reads as a correctly-schemed empty relation,
@@ -49,113 +51,6 @@ object ChangeFeed {
            gen: Long): DataFrame =
     IndexedScan.readIndexedGeneration(spark, tablePath, indexRoot, gen)
 
-  /** Hive-unescaped value TUPLES of `partitionCols` whose FILE SETS
-    * differ between the two manifests (either direction). DISTRIBUTED:
-    * the symmetric set difference of the manifests' `file` columns and
-    * the per-file partition-value extraction both run executor-side,
-    * deduplicated BEFORE the collect — the driver receives one row per
-    * CHANGED partition, bounded by partition count, never a manifest's
-    * file list (a one-partition hop on a million-file table collects
-    * one row). */
-  private[graft] def changedPartitionValues(spark: SparkSession,
-                                            fromStats: DataFrame,
-                                            toStats: DataFrame,
-                                            partitionCols: Seq[String]): Seq[Seq[String]] = {
-    require(partitionCols.nonEmpty, "changedPartitionValues: no partition columns")
-    // Symmetric set difference in ONE shuffle: tag each side, group by
-    // file, keep files seen on exactly one side. The former
-    // `a.exceptAll(b) ∪ b.exceptAll(a)` formulation planned THREE
-    // exchanges (two except-alls + the downstream distinct); file paths
-    // are compared as whole strings either way, so the changed set is
-    // identical — untouched partitions' files appear verbatim in both
-    // manifests and drop out, rewritten files appear once and survive.
-    val changed = fromStats.select(col("file"), lit(1).as("_side"))
-      .unionByName(toStats.select(col("file"), lit(2).as("_side")))
-      .groupBy(col("file"))
-      .agg(min(col("_side")).as("_mn"), max(col("_side")).as("_mx"))
-      .where(col("_mn") === col("_mx"))
-      .select(col("file"))
-    // Pattern.quote: a partition column name containing regex
-    // metacharacters must match literally (the compactVersioned
-    // discipline — the two call sites must agree)
-    val extracted = partitionCols.zipWithIndex.map { case (c, i) =>
-      regexp_extract(col("file"),
-        "/" + java.util.regex.Pattern.quote(c) + "=([^/]+)/", 1).as(s"_p$i")
-    }
-    // LOUD invariant (ADVICE r19): a changed file whose path does not
-    // yield EVERY partition column means the caller's partitionCols do
-    // not describe this table's layout — silently dropping it would
-    // make a CDC follower apply nothing and still advance its cursor
-    // (unrecoverable replica loss). ONE distributed pass: the distinct
-    // collect below already runs over the extracted tuples, and a
-    // parse failure is a function of the tuple (an empty component), so
-    // the same collected rows answer both questions — no second job
-    // over the (possibly expensive) manifest diff.
-    val rows = changed.select(extracted: _*)
-      .distinct()
-      .collect()
-    if (rows.exists(r => partitionCols.indices.exists(r.getString(_).isEmpty)))
-      throw new IllegalStateException(
-        s"changedPartitionValues: changed file(s) whose paths do not carry " +
-          s"partition column(s) ${partitionCols.mkString(", ")} — the given " +
-          "partition columns do not match the table's on-disk layout")
-    rows
-      .map(r => partitionCols.indices.map(i =>
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(r.getString(i))).toSeq)
-      .toSeq
-      .sortBy(_.mkString("/"))
-  }
-
-  /** Single-column face of [[changedPartitionValues]]. */
-  private[graft] def changedPartitions(spark: SparkSession,
-                                       fromStats: DataFrame, toStats: DataFrame,
-                                       partitionCol: String): Seq[String] =
-    changedPartitionValues(spark, fromStats, toStats, Seq(partitionCol))
-      .map(_.head)
-
-  /** Past this many touched partitions the OR-of-prefix-tests
-    * restriction stops being "a bounded expression" and starts being a
-    * driver/Catalyst problem (a full-table rewrite or compaction-heavy
-    * hop touches 10⁴–10⁶ partitions; an expression tree that size kills
-    * planning before any data is read) — switch to the distributed
-    * tuple join. 64 keeps the common small hop on the zero-shuffle
-    * filter path. */
-  private[graft] val wideTouchedThreshold: Int =
-    StatsIndex.wideTupleThreshold
-
-  /** The manifest rows under the touched partitions' path prefixes
-    * (Hive-escaped, nested in `partitionCols` order — the layout
-    * `partitionBy` writes). Empty `touched` restricts to nothing.
-    * Small `touched` compiles to an OR of segment tests (pure filter,
-    * no shuffle); past [[wideTouchedThreshold]] it becomes a broadcast
-    * SEMI-JOIN on executor-extracted partition tuples — same result,
-    * O(1) expression tree. */
-  private[graft] def restrictToTouched(stats: DataFrame,
-                                       partitionCols: Seq[String],
-                                       touched: Seq[Seq[String]]): DataFrame =
-    if (touched.isEmpty) stats.where(lit(false))
-    else if (touched.size > wideTouchedThreshold)
-      restrictByTupleJoin(stats, partitionCols, touched, anti = false)
-    else stats.where(touched.map { tuple =>
-      col("file").contains(
-        s"/${StatsIndex.partitionDir(stats.sparkSession, partitionCols, tuple)}/")
-    }.reduce(_ || _))
-
-  /** Join-based touched-partition restriction — the WIDE-hop shape:
-    * extract each manifest row's Hive-escaped partition values from its
-    * file path EXECUTOR-side (the [[changedPartitionValues]] regexes),
-    * then semi-join (`anti = false`: keep touched) or anti-join
-    * (`anti = true`: keep untouched) against the broadcast touched-tuple
-    * relation. Values compare ESCAPED-to-escaped, so no unescape runs on
-    * the data path. Cost ∝ manifest size with a broadcast hash probe per
-    * row; the expression tree stays O(columns) however wide the hop. */
-  private[graft] def restrictByTupleJoin(stats: DataFrame,
-                                         partitionCols: Seq[String],
-                                         touched: Seq[Seq[Any]],
-                                         anti: Boolean): DataFrame =
-    StatsIndex.restrictByTupleJoin(stats, partitionCols, touched, anti)
-
   /** Keyed change rows between generations `fromGen` → `toGen`:
     * [[SnapshotDiff.diff]] columns (`op`, keys, `b_*`/`a_*`), computed
     * over ONLY the partitions whose file manifests changed. `columns`
@@ -178,76 +73,8 @@ object ChangeFeed {
     require(partitionCols.nonEmpty, "between: no partition columns")
     val fromStats = StatsIndex.load(spark, s"$indexRoot/_v=$fromGen")
     val toStats = StatsIndex.load(spark, s"$indexRoot/_v=$toGen")
-    // ONE distributed job answers everything the hop needs from the
-    // manifests (was four: changed-tuple collect, emptiness probe, and a
-    // per-side stats collect inside each GraftFileIndex): tag each
-    // manifest row with its side, extract the partition tuple
-    // executor-side, mark files present on exactly ONE side as changed
-    // (the file-set diff), mark partitions containing any changed file as
-    // touched, and collect exactly the touched partitions' stats rows —
-    // the same rows the two slice indexes hold driver-side anyway (the
-    // Delta-manifest shape; bounded by the touched slice, which is the
-    // quantity the index minimizes). The repartition establishes ONE
-    // tuple-keyed exchange both window frames below reuse.
-    val pIdx = partitionCols.indices
-    val extracted = partitionCols.zipWithIndex.map { case (c, i) =>
-      regexp_extract(col("file"),
-        "/" + java.util.regex.Pattern.quote(c) + "=([^/]+)/", 1).as(s"_p$i")
-    }
-    val pCols = pIdx.map(i => col(s"_p$i"))
-    val u = fromStats.withColumn("_side", lit(1))
-      .unionByName(toStats.withColumn("_side", lit(2)))
-      .select(col("*") +: extracted: _*)
-      .repartition(pCols: _*)
-    val wFile = org.apache.spark.sql.expressions.Window
-      .partitionBy(pCols :+ col("file"): _*)
-    val wPart = org.apache.spark.sql.expressions.Window.partitionBy(pCols: _*)
-    val statCols = Seq("file", "rows", "column", "typ", "min_num", "max_num",
-      "min_str", "max_str", "null_count")
-    val collected = u
-      .withColumn("_chg",
-        when(min(col("_side")).over(wFile) === max(col("_side")).over(wFile),
-          1).otherwise(0))
-      .withColumn("_touched", max(col("_chg")).over(wPart))
-      .where(col("_touched") === 1)
-      .select(col("_side") +: (statCols.map(col) ++ pCols): _*)
-      .collect()
-    // LOUD invariant (ADVICE r19): a touched partition's file whose path
-    // does not yield EVERY partition column means the caller's
-    // partitionCols do not describe this table's layout — silently
-    // dropping it would make a CDC follower apply nothing and still
-    // advance its cursor (unrecoverable replica loss).
-    val pOff = 1 + statCols.size
-    if (collected.exists(r => pIdx.exists(i => r.getString(pOff + i).isEmpty)))
-      throw new IllegalStateException(
-        s"betweenCols: changed file(s) whose paths do not carry " +
-          s"partition column(s) ${partitionCols.mkString(", ")} — the given " +
-          "partition columns do not match the table's on-disk layout")
-    // Per-column extraction is order-independent, but the caller's
-    // partitionCols order is a CONTRACT (it names the on-disk nesting,
-    // and downstream consumers key partition tuples by it) — verify each
-    // touched file's path carries the segments in exactly that order.
-    collected.foreach { r =>
-      val f = r.getString(1)
-      val positions = partitionCols.zipWithIndex.map { case (c, i) =>
-        f.indexOf(s"/$c=" + r.getString(pOff + i) + "/")
-      }
-      if (positions.exists(_ < 0) || positions != positions.sorted)
-        throw new IllegalStateException(
-          s"betweenCols: partition column(s) " +
-            s"(${partitionCols.mkString(", ")}) are not in the table's " +
-            s"on-disk nesting order for file $f")
-    }
-    def fcs(r: Row): StatsIndex.FileColStats =
-      StatsIndex.FileColStats(r.getString(1), r.getLong(2), r.getString(3),
-        r.getString(4),
-        if (r.isNullAt(5)) None else Some(r.getDouble(5)),
-        if (r.isNullAt(6)) None else Some(r.getDouble(6)),
-        if (r.isNullAt(7)) None else Some(r.getString(7)),
-        if (r.isNullAt(8)) None else Some(r.getString(8)),
-        r.getLong(9))
-    val fromRows = collected.filter(_.getInt(0) == 1).map(fcs)
-    val toRows = collected.filter(_.getInt(0) == 2).map(fcs)
+    val slices = touchedSlices(fromStats, toStats, partitionCols)
+    val (fromRows, toRows) = (slices.from, slices.to)
     def project(df: DataFrame): DataFrame =
       if (columns.isEmpty) df
       else df.select((keys ++ partitionCols ++ columns).distinct.map(col): _*)
@@ -315,6 +142,83 @@ object ChangeFeed {
         else lit(null).cast(f.dataType).as(f.name)
       }.toIndexedSeq: _*)
     SnapshotDiff.diff(aligned(from), aligned(to), keys)
+  }
+
+  /** The touched slice of a hop: the partitions containing any file
+    * present in only one of the two manifests (the file-set diff), as
+    * decoded value tuples (sorted), and each side's stats rows under
+    * them. */
+  private[graft] final case class Slices(touched: Seq[Seq[String]],
+                                         from: Array[StatsIndex.FileColStats],
+                                         to: Array[StatsIndex.FileColStats])
+
+  /** [[Slices]] of the hop `fromStats` → `toStats` in ONE distributed
+    * job, which `betweenCols` counts on: tag each manifest row
+    * with its side, extract the partition tuple executor-side
+    * ([[StatsIndex.partitionSegmentValues]]), mark files present on
+    * exactly ONE side as changed, mark partitions containing any changed
+    * file as touched, and collect exactly the touched partitions' stats
+    * rows — the same rows the two slice indexes hold driver-side anyway
+    * (the Delta-manifest shape; bounded by the touched slice, which is
+    * the quantity the index minimizes). The repartition establishes ONE
+    * tuple-keyed exchange both window frames reuse.
+    *
+    * LOUD invariants (ADVICE r19): a touched file whose path does not
+    * carry every partition column, or carries them in another nesting
+    * order, means `partitionCols` do not describe the table's layout —
+    * silently dropping it would make a CDC follower apply nothing and
+    * still advance its cursor (unrecoverable replica loss). */
+  private[graft] def touchedSlices(fromStats: DataFrame, toStats: DataFrame,
+                                   partitionCols: Seq[String]): Slices = {
+    val pIdx = partitionCols.indices
+    val pCols = pIdx.map(i => col(s"_p$i"))
+    val u = fromStats.withColumn("_side", lit(1))
+      .unionByName(toStats.withColumn("_side", lit(2)))
+      .select(col("*") +: StatsIndex.partitionSegmentValues(partitionCols)
+        .zip(pIdx).map { case (e, i) => e.as(s"_p$i") }: _*)
+      .repartition(pCols: _*)
+    val wFile = org.apache.spark.sql.expressions.Window
+      .partitionBy(pCols :+ col("file"): _*)
+    val wPart = org.apache.spark.sql.expressions.Window.partitionBy(pCols: _*)
+    val statCols = Seq("file", "rows", "column", "typ", "min_num", "max_num",
+      "min_str", "max_str", "null_count")
+    val collected = u
+      .withColumn("_chg",
+        when(min(col("_side")).over(wFile) === max(col("_side")).over(wFile),
+          1).otherwise(0))
+      .withColumn("_touched", max(col("_chg")).over(wPart))
+      .where(col("_touched") === 1)
+      .select(col("_side") +: (statCols.map(col) ++ pCols): _*)
+      .collect()
+    val pOff = 1 + statCols.size
+    if (collected.exists(r => pIdx.exists(i => r.getString(pOff + i).isEmpty)))
+      throw new IllegalStateException(
+        s"betweenCols: changed file(s) whose paths do not carry " +
+          s"partition column(s) ${partitionCols.mkString(", ")} — the given " +
+          "partition columns do not match the table's on-disk layout")
+    // Per-column extraction is order-independent, but the caller's
+    // partitionCols order is a CONTRACT (it names the on-disk nesting,
+    // and downstream consumers key partition tuples by it) — each
+    // touched file's decoded directory must carry them in that order.
+    val touched = collected.map(_.getString(1)).distinct.map { f =>
+      val segs = StatsIndex.partitionOf(f.substring(0, f.lastIndexOf('/')))
+      if (segs.map(_._1).filter(partitionCols.contains) != partitionCols)
+        throw new IllegalStateException(
+          s"betweenCols: partition column(s) " +
+            s"(${partitionCols.mkString(", ")}) are not in the table's " +
+            s"on-disk nesting order for file $f")
+      partitionCols.map(segs.toMap)
+    }.distinct.toSeq.sortBy(_.mkString("/"))
+    def fcs(r: Row): StatsIndex.FileColStats =
+      StatsIndex.FileColStats(r.getString(1), r.getLong(2), r.getString(3),
+        r.getString(4),
+        if (r.isNullAt(5)) None else Some(r.getDouble(5)),
+        if (r.isNullAt(6)) None else Some(r.getDouble(6)),
+        if (r.isNullAt(7)) None else Some(r.getString(7)),
+        if (r.isNullAt(8)) None else Some(r.getString(8)),
+        r.getLong(9))
+    Slices(touched, collected.filter(_.getInt(0) == 1).map(fcs),
+      collected.filter(_.getInt(0) == 2).map(fcs))
   }
 
   /** Apply one hop's change rows to a DOWNSTREAM table — the

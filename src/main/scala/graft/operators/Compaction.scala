@@ -166,6 +166,10 @@ object Compaction {
       else None
     }
     if (todo.isEmpty) return None
+    val parts = todo.map { case (dir, _, _) => StatsIndex.partitionOf(dir) }
+    val cols = parts.head.map(_._1)
+    require(parts.forall(_.map(_._1) == cols),
+      s"compactVersioned: inconsistent partition layouts under $path")
 
     val staging = new Path(root,
       s"_staging_${java.util.UUID.randomUUID().toString.take(8)}")
@@ -195,17 +199,10 @@ object Compaction {
             fs.makeQualified(in).toString
           }
       }
-      // survivors by PARTITION PREFIX (the mergeIntoVersioned discipline)
-      // — bounded by compacted-partition count, never a per-file
-      // equality chain that grows with manifest size
-      import org.apache.spark.sql.functions.col
-      val prefixes = todo.map { case (dir, _, _) =>
-        val q = fs.makeQualified(new Path(root, dir)).toString
-        if (q.endsWith("/")) q else q + "/"
-      }
-      val under = prefixes.map(p => col("file").startsWith(p)).reduce(_ || _)
+      // survivors: manifest rows outside every compacted partition
       val fresh = StatsIndex.statsForFiles(spark, movedIn, statsColumns)
-      val nextGen = current.where(!under).unionByName(fresh)
+      val nextGen = StatsIndex.restrictToPartitions(current, cols,
+        parts.map(_.map(_._2)), keep = false).unionByName(fresh)
       val partCols = StatsIndex.generationPartitionCols(spark, indexRoot,
         gens.last).getOrElse(Seq(partitionCol))
       // optimistic commit: a merge racing this compaction wins or loses

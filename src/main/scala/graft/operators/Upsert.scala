@@ -514,7 +514,8 @@ object Upsert {
     * The touched partitions are `knownTouched` (tuples the caller had to
     * collect before writing — a merge's delete-only partitions stage no
     * file) plus every `c=v` directory the staged write produced, read
-    * back from the directory names (unescaped; the default partition
+    * back from the directory names by
+    * [[graft.sources.StatsIndex.partitionOf]] (the default partition
     * reads as NULL) — so `out` runs exactly once, as the write.
     * `checkTouched` sees that set after the staged write and before any
     * file moves in: a guard that raises publishes nothing, and the
@@ -555,13 +556,8 @@ object Upsert {
           else Nil
         }
       val stagedFiles = staged(staging, Nil)
-      val touched = locally {
-        import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils._
-        (knownTouched ++ stagedFiles.map(_._2).distinct.map(_.map { seg =>
-          val v = seg.substring(seg.indexOf('=') + 1)
-          if (v == DEFAULT_PARTITION_NAME) null else unescapePathName(v)
-        })).distinct
-      }
+      val touched = (knownTouched ++ stagedFiles.map(_._2).distinct.map(rel =>
+        graft.sources.StatsIndex.partitionOf(rel.mkString("/")).map(_._2))).distinct
       checkTouched(touched)
       val movedIn = stagedFiles.map { case (f, rel) =>
         val target = new org.apache.hadoop.fs.Path(dest, rel.mkString("/"))
@@ -580,31 +576,11 @@ object Upsert {
       }
 
       // commit: generation N+1 = untouched survivors + the new files
-      val hconf = spark.sessionState.newHadoopConf()
-      val prefixes = touched.map { t =>
-        val p = new org.apache.hadoop.fs.Path(dest,
-          graft.sources.StatsIndex.partitionDir(spark, partitionCols, t))
-        val q = p.getFileSystem(hconf).makeQualified(p).toString
-        if (q.endsWith("/")) q else q + "/"
-      }
-      // survivor filter: manifest rows NOT under a touched partition
-      // prefix. Small touched sets compile to a bounded OR of prefix
-      // tests; a WIDE commit (full-table rewrite, compaction-heavy
-      // generation — 10⁴+ partitions) would make that OR an
-      // expression-tree the driver/Catalyst chokes on before any data
-      // moves, so past the threshold the restriction becomes a
-      // distributed ANTI-JOIN: partition values extracted from the file
-      // paths executor-side, joined against the (broadcast) touched
-      // tuples — cost ∝ manifest size, expression tree O(1).
       val fresh = graft.sources.StatsIndex.statsForFiles(
         spark, movedIn, statsColumns)
       val nextGen = current.map { c =>
-        val untouchedRows =
-          if (touched.size <= wideTouchedThreshold) {
-            val under = prefixes.map(p => col("file").startsWith(p))
-              .reduceOption(_ || _).getOrElse(lit(false))
-            c.where(!under)
-          } else untouchedByAntiJoin(spark, c, partitionCols, touched)
+        val untouchedRows = graft.sources.StatsIndex.restrictToPartitions(
+          c, partitionCols, touched, keep = false)
         // bloom pass-through files SURVIVE the manifest despite sitting
         // in touched partitions — their rows are provably unchanged
         val survivors =
@@ -642,19 +618,6 @@ object Upsert {
         expectedBase = Some(gens.lastOption.getOrElse(0L)))
     } finally fs.delete(staging, true)
   }
-
-  /** Shared width threshold with the CDF reader — one policy for "when
-    * does an OR of partition-prefix tests stop being an expression and
-    * start being a planning problem". */
-  private def wideTouchedThreshold: Int = ChangeFeed.wideTouchedThreshold
-
-  /** Manifest rows NOT under any touched partition — the wide-commit
-    * survivor filter as a distributed anti-join
-    * ([[ChangeFeed.restrictByTupleJoin]]). */
-  private def untouchedByAntiJoin(spark: org.apache.spark.sql.SparkSession,
-                                  stats: DataFrame, partitionCols: Seq[String],
-                                  touched: Seq[Seq[String]]): DataFrame =
-    ChangeFeed.restrictByTupleJoin(stats, partitionCols, touched, anti = true)
 
   /** Bounded retry loop around a VERSIONED commit — the Delta-style
     * optimistic loop completed: [[mergeIntoVersioned]]/

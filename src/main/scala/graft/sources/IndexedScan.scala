@@ -231,6 +231,7 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
   private var bloomCovered: Set[String] = Set.empty
   private var bloomColumns: Set[String] = Set.empty
   private var partCols: Seq[String] = Nil
+  private var partitions: Map[String, Seq[(String, String)]] = Map.empty
   private var totalBytes: Long = 0L
 
   refresh()
@@ -257,7 +258,14 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
       s"GraftFileIndex: ${missing.size} indexed files missing on disk, " +
         s"e.g. ${missing.head} — refresh the index")
     totalBytes = statuses.valuesIterator.map(_.getLen).sum
-    partCols = partitionColsOf(qualifiedRoot, byFile.keySet)
+    // each file's `col=value` directory segments below the root, decoded
+    // once per snapshot; every file must agree on the column sequence
+    partitions = byFile.keysIterator.map(f => f -> StatsIndex.partitionOf(
+      f.substring(0, f.lastIndexOf('/')).stripPrefix(qualifiedRoot))).toMap
+    val layouts = partitions.valuesIterator.map(_.map(_._1)).toSet
+    require(layouts.size == 1,
+      s"GraftFileIndex: inconsistent partition layouts under $tablePath: $layouts")
+    partCols = layouts.head
     bloomCovered = blooms match {
       case Some(b) => b.select("file").distinct().as[String].collect().toSet
       case None => Set.empty
@@ -266,15 +274,6 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
       case Some(b) => b.select("column").distinct().as[String].collect().toSet
       case None => Set.empty
     }
-  }
-
-  /** `col=value` segments between the table root and the file, parsed
-    * once per snapshot; every file must agree on the column sequence. */
-  private def partitionColsOf(root: String, files: Set[String]): Seq[String] = {
-    val all = files.map(f => partSegments(root, f).map(_._1))
-    require(all.size == 1,
-      s"GraftFileIndex: inconsistent partition layouts under $tablePath: $all")
-    all.head
   }
 
   def isOrc: Boolean = byFile.keysIterator.next().endsWith(".orc")
@@ -300,14 +299,9 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(tablePath).getFileSystem(conf)
-      .makeQualified(new Path(tablePath)).toString
-
     // 1. partition pruning: evaluate the pushed partition predicates
     //    against each directory's path-derived values, driver-side
-    val byPartition = byFile.keySet.groupBy(f =>
-      partSegments(root, f).map(_._2))
+    val byPartition = byFile.keySet.groupBy(f => partitions(f).map(_._2))
     val partPred = compilePartitionPredicate(partitionFilters)
     val partSurvivors = byPartition.filter { case (values, _) =>
       partPred(InternalRow.fromSeq(values.map(UTF8String.fromString)))
@@ -380,36 +374,6 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
 }
 
 object GraftFileIndex {
-
-  /** `(column, value)` for each `col=value` DIRECTORY segment of
-    * `file`'s path below `root` (both fully qualified). The final
-    * segment is the file name and never participates — a data file
-    * whose name happens to contain `=` must not fabricate a column. */
-  private def partSegments(root: String, file: String): Seq[(String, String)] = {
-    val rel = file.stripPrefix(root).stripPrefix("/")
-    rel.split('/').dropRight(1).iterator.filter(_.contains('=')).map { seg =>
-      val i = seg.indexOf('=')
-      (seg.substring(0, i), unescapePathName(seg.substring(i + 1)))
-    }.toSeq
-  }
-
-  /** Hive-style `%xx` path unescaping (the inverse of what
-    * `partitionBy` writes for special characters). */
-  private def unescapePathName(s: String): String = {
-    if (!s.contains('%')) return s
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        try {
-          sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-          i += 3
-        } catch { case _: NumberFormatException => sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
 
   /** One per-column probe set: the values an equality/IN conjunct pins
     * (exactly one of the two lists is populated). */

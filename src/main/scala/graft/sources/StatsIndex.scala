@@ -7,7 +7,9 @@ import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{
+  DEFAULT_PARTITION_NAME, escapePathName, unescapePathName}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
@@ -868,16 +870,33 @@ object StatsIndex extends org.apache.spark.internal.Logging {
     doomed
   }
 
+  // -------------------------------------------------------------------
+  // Partition-path codec: the one mapping between a partition value
+  // tuple and the manifest paths under it
+  // -------------------------------------------------------------------
+  //
+  // A tuple over `partitionCols` (outermost first) names the nested
+  // `c1=v1/c2=v2` directory `partitionBy` writes. Every module that maps
+  // tuples to paths or back goes through four pieces:
+  //  - encode: [[partitionDir]] (each value rendered by [[partitionDirValue]]);
+  //  - decode: [[partitionOf]];
+  //  - extract: [[partitionSegmentValues]], executor-side;
+  //  - restrict: [[restrictToPartitions]].
+  //
+  // Matching rule: a manifest row is under tuple `t` when, for every
+  // partition column `c`, the first `/c=…/` directory segment of its
+  // `file` carries `t`'s encoded value for `c`. Values compare encoded to
+  // encoded, so no unescape runs on the data path.
+
   /** One partition value as the directory-name component `partitionBy`
     * writes for it: the value cast to string in the session time zone
     * (the writer's own cast), Hive-escaped (`%` → `%25`, `:`/`=`/control
     * chars → `%xx`); NULL or empty names the default partition. A String
     * is taken as already cast — the form [[partitionTuples]] collects
-    * and staged directory names read back as. `String.valueOf` is not
-    * this rendering: a TIMESTAMP prints `…10:00:00.0` and a DECIMAL zero
-    * of scale 8 `0E-8`, directories the writer never makes. */
+    * and [[partitionOf]] decodes. `String.valueOf` is not this
+    * rendering: a TIMESTAMP prints `…10:00:00.0` and a DECIMAL zero of
+    * scale 8 `0E-8`, directories the writer never makes. */
   private[graft] def partitionDirValue(spark: SparkSession, v: Any): String = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
     val s = v match {
       case null => null
@@ -885,18 +904,31 @@ object StatsIndex extends org.apache.spark.internal.Logging {
       case other => Cast(Literal(other), org.apache.spark.sql.types.StringType,
         Some(spark.sessionState.conf.sessionLocalTimeZone)).eval().toString
     }
-    if (s == null || s.isEmpty) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-    else ExternalCatalogUtils.escapePathName(s)
+    if (s == null || s.isEmpty) DEFAULT_PARTITION_NAME else escapePathName(s)
   }
 
   /** The nested `c1=v1/c2=v2` directory path `partitionBy(cols…)` writes
-    * for one value tuple (outermost first), each value rendered by
-    * [[partitionDirValue]]. */
+    * for one value tuple (outermost first): column names and values
+    * escaped as the writer escapes them. */
   private[graft] def partitionDir(spark: SparkSession, partitionCols: Seq[String],
                                   tuple: Seq[Any]): String =
     partitionCols.zip(tuple).map { case (c, v) =>
-      s"$c=${partitionDirValue(spark, v)}"
+      s"${escapePathName(c)}=${partitionDirValue(spark, v)}"
     }.mkString("/")
+
+  /** The inverse of [[partitionDir]]: the `(column, value)` pairs of the
+    * trailing `c=v` segments of directory path `dir`, outermost first —
+    * the segments Spark's own partition discovery parses (it too stops
+    * at the first segment without `=`). Both sides unescape with Spark's
+    * `unescapePathName`; the default partition decodes to NULL. */
+  private[graft] def partitionOf(dir: String): Seq[(String, String)] =
+    dir.split('/').reverseIterator.takeWhile(_.contains('=')).toSeq.reverse
+      .map { seg =>
+        val i = seg.indexOf('=')
+        val v = seg.substring(i + 1)
+        (unescapePathName(seg.substring(0, i)),
+          if (v == DEFAULT_PARTITION_NAME) null else unescapePathName(v))
+      }
 
   /** The distinct `partitionCols` tuples of `df`, collected through
     * Spark's string cast — exactly the values the writer renders into
@@ -919,70 +951,76 @@ object StatsIndex extends org.apache.spark.internal.Logging {
                      values: Seq[Any]): Seq[String] =
     partitionTupleFiles(stats, Seq(partitionCol), values.map(Seq(_)))
 
-  /** Past this many partition tuples, an OR-of-segment-tests filter
-    * stops being "a bounded expression" and starts being a
-    * driver/Catalyst planning problem (a full-table rewrite or
-    * compaction-heavy commit touches 10⁴–10⁶ partitions; an expression
-    * tree that size kills planning before any data is read) — the
-    * restriction switches to [[restrictByTupleJoin]]. 64 keeps the
-    * common small hop/merge on the zero-shuffle filter path. One policy
-    * shared by [[partitionTupleFiles]], the versioned commit's survivor
-    * filter, and [[graft.operators.ChangeFeed]]'s slice restriction. */
+  /** Executor-side: for each partition column, the encoded value of the
+    * first `/c=…/` directory segment of a manifest row's `file`, or ""
+    * when the path has no such segment. */
+  private[graft] def partitionSegmentValues(partitionCols: Seq[String]): Seq[Column] =
+    partitionCols.map(c => regexp_extract(col("file"),
+      "/" + java.util.regex.Pattern.quote(escapePathName(c)) + "=([^/]+)/", 1))
+
+  /** Past this many partition tuples an OR of segment tests stops being
+    * "a bounded expression" and starts being a driver/Catalyst planning
+    * problem (a full-table rewrite or compaction-heavy commit touches
+    * 10⁴–10⁶ partitions; a left-deep OR that size overflows the
+    * optimizer's recursion before any data is read), so
+    * [[restrictToPartitions]] switches to the broadcast join. 64 keeps
+    * the common small hop/merge on the zero-shuffle filter path. Every
+    * tuple restriction goes through [[restrictToPartitions]], so this
+    * one threshold governs [[partitionTupleFiles]]/[[partitionFiles]]
+    * (the versioned merge's slice read), [[replacePartitions]], the
+    * versioned commit's survivor filter in
+    * [[graft.operators.Upsert]] and
+    * [[graft.operators.Compaction.compactVersioned]]'s. */
   private[graft] val wideTupleThreshold: Int = 64
 
-  /** Tuple restriction as a distributed join — the WIDE shape: each
-    * manifest row's Hive-escaped partition values are extracted from its
-    * file path EXECUTOR-side, then semi-joined (`anti = false`: keep
-    * matching) or anti-joined (`anti = true`: keep the rest) against the
-    * broadcast tuple relation. Values compare ESCAPED-to-escaped (the
-    * tuples render through [[partitionDirValue]], as `partitionBy`
-    * rendered the paths), so no unescape runs on the data path.
-    * Cost ∝ manifest size with a broadcast hash probe per row; the
-    * expression tree stays O(columns) however many tuples. */
-  private[graft] def restrictByTupleJoin(stats: DataFrame,
-                                         partitionCols: Seq[String],
-                                         tuples: Seq[Seq[Any]],
-                                         anti: Boolean): DataFrame = {
+  /** The manifest rows under (`keep = true`) or not under (`keep =
+    * false`) any of `tuples`, by the codec's matching rule. Up to
+    * [[wideTupleThreshold]] tuples the test is a filter (an OR of
+    * per-column segment equalities, no shuffle); past it, a semi- or
+    * anti-join of the extracted segment values against the broadcast
+    * tuple relation — cost ∝ manifest size, expression tree
+    * O(columns). No tuples keeps nothing (`keep`) or everything. */
+  private[graft] def restrictToPartitions(stats: DataFrame,
+                                          partitionCols: Seq[String],
+                                          tuples: Seq[Seq[Any]],
+                                          keep: Boolean): DataFrame = {
+    if (tuples.isEmpty) return if (keep) stats.where(lit(false)) else stats
     val spark = stats.sparkSession
     val tcols = partitionCols.indices.map(i => s"_tp$i")
-    val schema = StructType(tcols.map(c =>
-      org.apache.spark.sql.types.StructField(c,
-        org.apache.spark.sql.types.StringType, nullable = false)))
-    val escaped = tuples.map(t => org.apache.spark.sql.Row.fromSeq(
-      t.map(partitionDirValue(spark, _))))
-    val tuplesDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(escaped,
-        math.max(1, math.min(tuples.size / 50000 + 1, 32))), schema)
-      .distinct()
-    val extracted = partitionCols.zipWithIndex.map { case (c, i) =>
-      regexp_extract(col("file"),
-        "/" + java.util.regex.Pattern.quote(c) + "=([^/]+)/", 1).as(s"_tp$i")
-    }
-    stats.select(col("*") +: extracted: _*)
-      .join(broadcast(tuplesDf), tcols,
-        if (anti) "left_anti" else "left_semi")
-      .drop(tcols: _*)
+    val encoded = tuples.map(_.map(partitionDirValue(spark, _)))
+    val tagged = stats.select(col("*") +: partitionSegmentValues(partitionCols)
+      .zip(tcols).map { case (e, n) => e.as(n) }: _*)
+    val restricted =
+      if (tuples.size > wideTupleThreshold) {
+        val schema = StructType(tcols.map(c =>
+          org.apache.spark.sql.types.StructField(c,
+            org.apache.spark.sql.types.StringType, nullable = false)))
+        val tuplesDf = spark.createDataFrame(
+          spark.sparkContext.parallelize(
+            encoded.map(org.apache.spark.sql.Row.fromSeq),
+            math.max(1, math.min(tuples.size / 50000 + 1, 32))), schema)
+          .distinct()
+        tagged.join(broadcast(tuplesDf), tcols,
+          if (keep) "left_semi" else "left_anti")
+      } else {
+        val under = encoded.map(t => tcols.zip(t)
+          .map { case (c, v) => col(c) === v }.reduce(_ && _)).reduce(_ || _)
+        tagged.where(if (keep) under else !under)
+      }
+    restricted.drop(tcols: _*)
   }
 
   /** [[partitionFiles]] for a MULTI-LEVEL layout: each wanted partition
-    * is a value TUPLE over `partitionCols` (outermost first), matched as
-    * the nested `c1=v1/c2=v2` path segment `partitionBy` writes. Past
-    * [[wideTupleThreshold]] tuples the match runs as the distributed
-    * tuple join instead of an N-term OR. */
+    * is a value TUPLE over `partitionCols` (outermost first), restricted
+    * by [[restrictToPartitions]]. */
   def partitionTupleFiles(stats: DataFrame, partitionCols: Seq[String],
                           tuples: Seq[Seq[Any]]): Seq[String] = {
     require(tuples.nonEmpty, "partitionTupleFiles: empty tuple list")
     require(partitionCols.nonEmpty, "partitionTupleFiles: no partition columns")
     tuples.foreach(t => require(t.size == partitionCols.size,
       s"partitionTupleFiles: tuple $t does not match columns $partitionCols"))
-    val hits =
-      if (tuples.size > wideTupleThreshold)
-        restrictByTupleJoin(stats, partitionCols, tuples, anti = false)
-      else stats.where(tuples.map { t =>
-        col("file").contains(
-          s"/${partitionDir(stats.sparkSession, partitionCols, t)}/")
-      }.reduce(_ || _))
-    hits.select(col("file")).distinct()
+    restrictToPartitions(stats, partitionCols, tuples, keep = true)
+      .select(col("file")).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
   }
 
@@ -991,47 +1029,36 @@ object StatsIndex extends org.apache.spark.internal.Logging {
     * partition-grain rewrite ([[graft.operators.Upsert.mergeInto]],
     * compaction) owes an index it reads from: after the rewrite the old
     * file names are gone and the new ones unindexed, and an index used
-    * AS the file listing must never name a deleted file. Survivor rows
-    * are pinned eagerly (localCheckpoint) before the overwrite so the
-    * rewrite never reads the files it replaces. The index is derivable
-    * metadata — a crash mid-overwrite loses nothing [[build]] cannot
-    * recreate. */
+    * AS the file listing must never name a deleted file. The directories
+    * decode ([[partitionOf]]) to tuples of one partition layout; survivor
+    * rows are pinned eagerly (localCheckpoint) before the overwrite so
+    * the rewrite never reads the files it replaces. The index is
+    * derivable metadata — a crash mid-overwrite loses nothing [[build]]
+    * cannot recreate. */
   def replacePartitions(spark: SparkSession, indexPath: String,
                         partitionDirs: Seq[String],
                         columns: Seq[String] = Nil): Unit = {
     if (partitionDirs.isEmpty) return
+    val parts = partitionDirs.map(partitionOf)
+    val cols = parts.head.map(_._1)
+    require(cols.nonEmpty && parts.forall(_.map(_._1) == cols),
+      s"replacePartitions: ${partitionDirs.mkString(", ")} are not partition " +
+        "directories of one layout")
     val hconf = spark.sessionState.newHadoopConf()
-    // fs-qualify the prefixes: index file strings are qualified
-    // (`file:/…`, `hdfs://…`) while callers often pass bare paths
-    val prefixes = partitionDirs.map { d =>
-      val p = new Path(d)
-      val q = p.getFileSystem(hconf).makeQualified(p).toString
-      if (q.endsWith("/")) q else q + "/"
-    }
     val fs = new Path(indexPath).getFileSystem(hconf)
-    val under = prefixes.map(p => col("file").startsWith(p)).reduce(_ || _)
     val survivors =
       if (!fs.exists(new Path(indexPath))) None
-      else Some(load(spark, indexPath).where(!under).localCheckpoint())
-    val fresh = prefixes.flatMap { p =>
-      val dir = new Path(p)
+      else Some(restrictToPartitions(load(spark, indexPath), cols,
+        parts.map(_.map(_._2)), keep = false).localCheckpoint())
+    val fresh = partitionDirs.flatMap { d =>
+      val dir = new Path(d)
       val dfs = dir.getFileSystem(hconf)
       if (!dfs.exists(dir)) Nil
-      else dfs.listStatus(dir).toSeq
+      else dfs.listStatus(dfs.makeQualified(dir)).toSeq
         .filter(st => !st.isDirectory && isDataFile(st.getPath.getName))
         .map(_.getPath.toString)
     }
-    import spark.implicits._
-    val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
-    val columnSet = columns.toSet
-    val freshStats =
-      if (fresh.isEmpty) spark.emptyDataset[FileColStats].toDF()
-      else {
-        val par = math.min(fresh.size, spark.sparkContext.defaultParallelism)
-        spark.createDataset(fresh).repartition(par)
-          .mapPartitions(_.flatMap(f => footerStats(f, conf, columnSet)))
-          .toDF()
-      }
+    val freshStats = statsForFiles(spark, fresh, columns)
     survivors.map(_.unionByName(freshStats)).getOrElse(freshStats)
       .write.mode("overwrite").parquet(indexPath)
   }

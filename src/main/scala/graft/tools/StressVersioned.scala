@@ -70,7 +70,7 @@ object StressVersioned {
     val sa = StatsIndex.load(spark, s"$idx/_v=$g1")
     val sb = StatsIndex.load(spark, s"$idx/_v=$g2")
     println("   changed partitions: " +
-      ChangeFeed.changedPartitions(spark, sa, sb, "day").size + " of 400; " +
+      ChangeFeed.touchedSlices(sa, sb, Seq("day")).touched.size + " of 400; " +
       s"identical change rows: $cdfRows")
 
     // snapshot isolation at scale: the pre-merge snapshot still answers
@@ -219,8 +219,8 @@ object StressVersioned {
 
       // scan-metric assertion: the hop's two restricted slices together
       // name exactly the changed day's files — never the table
-      val touched = ChangeFeed.changedPartitions(spark, bman1, bman2, "day")
-      assert(touched == Seq("d007"), s"touched: $touched")
+      val touched = ChangeFeed.touchedSlices(bman1, bman2, Seq("day")).touched
+      assert(touched == Seq(Seq("d007")), s"touched: $touched")
       val fromFiles = StatsIndex.partitionFiles(bman1, "day", Seq("d007")).size
       val toFiles = StatsIndex.partitionFiles(bman2, "day", Seq("d007")).size
       val dayFiles = math.max(1L, bFiles / 400)

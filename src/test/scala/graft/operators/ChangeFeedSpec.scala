@@ -48,7 +48,7 @@ class ChangeFeedSpec extends SparkSpec {
     // file sets changed — day=2024-01-02 never enters the hop
     val sa = StatsIndex.load(spark, s"$idx/_v=$g1")
     val sb = StatsIndex.load(spark, s"$idx/_v=$g2")
-    assert(ChangeFeed.changedPartitions(spark, sa, sb, "day") ==
+    assert(ChangeFeed.touchedSlices(sa, sb, Seq("day")).touched.map(_.head) ==
       Seq("2024-01-01", "2024-01-03", "2024-01-04"))
 
     val feed = ChangeFeed.between(spark, path, idx, g1, g2,
@@ -102,11 +102,13 @@ class ChangeFeedSpec extends SparkSpec {
 
     val sa = StatsIndex.load(spark, s"$idx/_v=$g1")
     val sb = StatsIndex.load(spark, s"$idx/_v=$g2")
-    val touched = ChangeFeed.changedPartitionValues(spark, sa, sb, Seq("day"))
+    val slices = ChangeFeed.touchedSlices(sa, sb, Seq("day"))
+    val touched = slices.touched
     assert(touched == Seq(Seq("2024-01-07")))
     // the restricted from-slice is FILE-EMPTY: the hop must not fall back
     // to the full manifests
-    assert(ChangeFeed.restrictToTouched(sa, Seq("day"), touched)
+    assert(slices.from.isEmpty)
+    assert(StatsIndex.restrictToPartitions(sa, Seq("day"), touched, keep = true)
       .select("file").isEmpty)
 
     // behavioral proof that no fallback reads the untouched partitions:
@@ -162,9 +164,12 @@ class ChangeFeedSpec extends SparkSpec {
     assert(outOf == Set(("insert", 9L)))
   }
 
+  /** A synthetic manifest: one stats row per named file. */
+  private def stats(files: String*): DataFrame = files.toSeq
+    .map(StatsIndex.FileColStats(_, 1L, "x", "INT64", None, None, None, None, 0L))
+    .toDF()
+
   test("changedPartitionValues extracts multi-level tuples, quoted-metachar columns, and escaped values") {
-    import spark.implicits._
-    def stats(files: String*) = files.toSeq.toDF("file")
     val a = stats(
       "file:/t/d=2024-01-01/b.id=1/f1.parquet",
       "file:/t/d=2024-01-02/b.id=1/f2.parquet")
@@ -173,24 +178,22 @@ class ChangeFeedSpec extends SparkSpec {
       "file:/t/d=2024-01-02/b.id=1/f2b.parquet", // replaced
       "file:/t/d=2024-01-03/b.id=2/f3.parquet") // new
     // `b.id` contains a regex metachar — Pattern.quote keeps it literal
-    assert(ChangeFeed.changedPartitionValues(spark, a, b, Seq("d", "b.id")) ==
+    assert(ChangeFeed.touchedSlices(a, b, Seq("d", "b.id")).touched ==
       Seq(Seq("2024-01-02", "1"), Seq("2024-01-03", "2")))
     // Hive-escaped partition values unescape on the way out
     val esc = stats("file:/t/k=a%3Ab/f.parquet")
-    assert(ChangeFeed.changedPartitionValues(spark, esc, stats(), Seq("k")) ==
+    assert(ChangeFeed.touchedSlices(esc, stats(), Seq("k")).touched ==
       Seq(Seq("a:b")))
   }
 
   test("wrong partition columns fail LOUDLY instead of returning an empty feed (ADVICE r19)") {
-    import spark.implicits._
-    def stats(files: String*) = files.toSeq.toDF("file")
     // a changed file whose path carries none of the claimed partition
-    // columns → changedPartitionValues throws (silently dropping it
+    // columns → the hop's slice construction throws (silently dropping it
     // would let a CDC follower apply nothing and advance its cursor)
     val a = stats("file:/t/day=d1/f1.parquet")
     val b = stats("file:/t/day=d1/f1.parquet", "file:/t/day=d2/f2.parquet")
     intercept[IllegalStateException] {
-      ChangeFeed.changedPartitionValues(spark, a, b, Seq("not_a_col"))
+      ChangeFeed.touchedSlices(a, b, Seq("not_a_col"))
     }
     // and end-to-end: partitionCols passed in the WRONG NESTING ORDER —
     // extraction parses (per-column regexes are order-independent) but
@@ -271,7 +274,8 @@ class ChangeFeedSpec extends SparkSpec {
     val manyFiles = (0 until 1200).map(i => s"file:/t/day=d$i/f$i.parquet")
     val manifest = manyFiles.toDF("file")
     val touched = (0 until 1100).map(i => Seq(s"d$i"))
-    val restricted = ChangeFeed.restrictToTouched(manifest, Seq("day"), touched)
+    val restricted = StatsIndex.restrictToPartitions(manifest, Seq("day"),
+      touched, keep = true)
     val plan = restricted.queryExecution.analyzed.toString
     assert(!plan.contains("Contains("),
       s"wide restriction still compiles Contains tests:\n${plan.take(2000)}")
@@ -279,8 +283,8 @@ class ChangeFeedSpec extends SparkSpec {
       s"wide restriction is not a semi-join:\n${plan.take(2000)}")
     assert(restricted.count() == 1100)
     // the small-hop path is unchanged (pure filter, no join)
-    val narrow = ChangeFeed.restrictToTouched(manifest, Seq("day"),
-      Seq(Seq("d1"), Seq("d2")))
+    val narrow = StatsIndex.restrictToPartitions(manifest, Seq("day"),
+      Seq(Seq("d1"), Seq("d2")), keep = true)
     assert(!narrow.queryExecution.analyzed.toString.contains("Join"))
     assert(narrow.count() == 2)
 

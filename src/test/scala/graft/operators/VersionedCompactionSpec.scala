@@ -83,4 +83,34 @@ class VersionedCompactionSpec extends SparkSpec {
     assert(all.count() == 9 &&
       all.where(col("note") === "x").count() == 1)
   }
+
+  test("a compaction wider than the tuple threshold keeps survivors through the anti-join; rows unchanged") {
+    val root = Files.createTempDirectory("graft-vcomp-wide").toString
+    val (path, idx) = (s"$root/t", s"$root/t/_stats_v")
+    val n = StatsIndex.wideTupleThreshold + 6
+    // 8 rows per day hashed over 4 write tasks: every day lands fragmented
+    val rows = (0 until 8 * n).map(i => (i.toLong, f"d${i % n}%03d", i * 1.5))
+    val g1 = Upsert.mergeIntoVersioned(path,
+      rows.toDF("order_id", "day", "amount").repartition(4, col("order_id")),
+      Seq("order_id"), "day", idx)
+    val perDay = StatsIndex.load(spark, s"$idx/_v=$g1")
+      .select("file").distinct().as[String].collect().toSeq
+      .groupBy(_.split('/').find(_.startsWith("day=")))
+    assert(perDay.size == n && perDay.values.forall(_.size >= 2),
+      s"fixture wants every day fragmented: ${perDay.view.mapValues(_.size).toMap}")
+    def read() = IndexedScan.readIndexedVersioned(spark, path, idx)
+      .select("order_id", "day", "amount")
+      .as[(Long, String, Double)].collect().toSet
+    assert(read() == rows.toSet)
+
+    val (g2, plans) = sqlPlansOf(Compaction.compactVersioned(spark, path,
+      idx, "day", targetBytes = 1L << 30, minFiles = 2))
+    assert(g2.contains(g1 + 1))
+    assert(plans.exists(_.contains("LeftAnti")),
+      s"no anti-join survivor plan among:\n${plans.mkString("\n")}")
+    assert(!plans.exists(_.contains("StartsWith")))
+    assert(read() == rows.toSet, "compaction must never change rows")
+    assert(StatsIndex.load(spark, s"$idx/_v=${g2.get}")
+      .select("file").distinct().count() == n)
+  }
 }

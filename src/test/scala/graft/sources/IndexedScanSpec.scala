@@ -407,4 +407,20 @@ class IndexedScanSpec extends SparkSpec {
       .join(broadcast(dim), "id")
     assert(joined.count() == 2)
   }
+
+  test("a NULL partition reads back as NULL through the index, row for row with spark.read") {
+    val root = Files.createTempDirectory("graft-iscan-null").toString
+    val (path, idx) = (s"$root/t", s"$root/idx")
+    Seq((1L, "a"), (2L, null), (3L, "b"), (4L, null)).toDF("id", "k")
+      .write.partitionBy("k").parquet(path)
+    StatsIndex.save(StatsIndex.build(spark, path), idx)
+    val indexed = IndexedScan.readIndexed(spark, path, idx)
+    val plain = spark.read.parquet(path)
+    def rows(df: DataFrame) = df.select(col("id"), col("k"))
+      .as[(Long, String)].collect().sortBy(_._1).toSeq
+    assert(rows(indexed) == rows(plain))
+    assert(rows(plain).count(_._2 == null) == 2)
+    assert(indexed.where(col("k").isNull).count() ==
+      plain.where(col("k").isNull).count())
+  }
 }

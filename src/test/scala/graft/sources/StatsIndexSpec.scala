@@ -581,4 +581,75 @@ class StatsIndexSpec extends SparkSpec {
       fs.exists(new org.apache.hadoop.fs.Path(t)),
       "live partition and table root must stay")
   }
+
+  test("restrictToPartitions: past the width threshold keep and drop plan a join, no segment-test chain; rows == the narrow form") {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString
+    // two-level synthetic manifest named by Spark's own writer function:
+    // a NULL (default partition) and Hive-escaped values included
+    def value(i: Int): String =
+      if (i == 0) null else if (i % 7 == 0) s"a:$i" else f"v$i%03d"
+    val n = StatsIndex.wideTupleThreshold + 16
+    val parts = for (i <- 0 until n; b <- Seq("0", "1")) yield (value(i), b)
+    def file(t: (String, String)) = "file:/t/" +
+      getPartitionPathString("d", t._1) + "/" +
+      getPartitionPathString("b", t._2) + "/f.parquet"
+    val manifest = parts.map(file).toDF("file")
+    val tuples = (0 until StatsIndex.wideTupleThreshold + 6)
+      .map(i => Seq(value(i), "0"))
+    val under = tuples.map(t => file((t(0), t(1)))).toSet
+    def files(df: org.apache.spark.sql.DataFrame) =
+      df.select("file").as[String].collect().toSet
+    def plan(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.toString
+
+    val chunks = tuples.grouped(StatsIndex.wideTupleThreshold).toSeq
+    assert(chunks.size == 2)
+    for ((keep, join) <- Seq(true -> "Join LeftSemi", false -> "Join LeftAnti")) {
+      val wide = StatsIndex.restrictToPartitions(manifest, Seq("d", "b"),
+        tuples, keep)
+      assert(plan(wide).contains(join), s"keep=$keep: no $join:\n${plan(wide)}")
+      assert(!plan(wide).contains("StartsWith(") &&
+        !plan(wide).contains("Contains("), s"keep=$keep: ${plan(wide)}")
+      // the narrow form, chunk by chunk under the threshold, on the
+      // same manifest: union of keeps, successive drops
+      val narrow =
+        if (keep) chunks.map(c => StatsIndex.restrictToPartitions(manifest,
+          Seq("d", "b"), c, keep = true)).reduce(_.unionByName(_))
+        else chunks.foldLeft(manifest)((m, c) =>
+          StatsIndex.restrictToPartitions(m, Seq("d", "b"), c, keep = false))
+      assert(!plan(narrow).contains("Join"))
+      val want = if (keep) under else parts.map(file).toSet -- under
+      assert(files(wide) == want)
+      assert(files(narrow) == want)
+    }
+  }
+
+  test("replacePartitions wider than the tuple threshold keeps survivors through the anti-join; index == a fresh build") {
+    val root = Files.createTempDirectory("graft-statsidx-wide").toString
+    val (path, idx) = (s"$root/t", s"$root/idx")
+    val n = StatsIndex.wideTupleThreshold + 10
+    val wide = StatsIndex.wideTupleThreshold + 6
+    (0 until n).map(i => (i.toLong, f"p$i%03d")).toDF("id", "p")
+      .repartition(1).write.partitionBy("p").parquet(path)
+    StatsIndex.save(StatsIndex.build(spark, path), idx)
+    // re-land the first `wide` partitions under fresh file names
+    (0 until wide).map(i => (1000L + i, f"p$i%03d")).toDF("id", "p")
+      .repartition(1).write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("p").parquet(path)
+    val (_, plans) = sqlPlansOf(StatsIndex.replacePartitions(spark, idx,
+      (0 until wide).map(i => f"$path/p=p$i%03d")))
+    assert(plans.exists(_.contains("LeftAnti")),
+      s"no anti-join survivor plan among:\n${plans.mkString("\n")}")
+    assert(!plans.exists(_.contains("StartsWith")))
+    def statRows(df: org.apache.spark.sql.DataFrame) =
+      df.select("file", "column", "rows", "min_num", "max_num")
+        .collect().map(_.toString).toSet
+    assert(statRows(StatsIndex.load(spark, idx)) ==
+      statRows(StatsIndex.build(spark, path)))
+    assert(IndexedScan.readIndexed(spark, path, idx)
+      .select(col("id"), col("p")).as[(Long, String)].collect().toSet ==
+      ((0 until wide).map(i => (1000L + i, f"p$i%03d")) ++
+        (wide until n).map(i => (i.toLong, f"p$i%03d"))).toSet)
+  }
 }

@@ -179,8 +179,8 @@ class VersionedIndexSpec extends SparkSpec {
     // CDF over the tuple layout: only (d1,1) and (d3,0) changed
     val sa = StatsIndex.load(spark, s"$idx/_v=$g1")
     val sb = StatsIndex.load(spark, s"$idx/_v=$g2")
-    assert(graft.operators.ChangeFeed.changedPartitionValues(
-      spark, sa, sb, Seq("day", "batch")) ==
+    assert(graft.operators.ChangeFeed.touchedSlices(
+      sa, sb, Seq("day", "batch")).touched ==
       Seq(Seq("d1", "1"), Seq("d3", "0")))
     val feed = graft.operators.ChangeFeed.betweenCols(spark, path, idx,
         g1, g2, Seq("order_id"), Seq("day", "batch"))
