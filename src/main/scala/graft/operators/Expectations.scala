@@ -65,6 +65,12 @@ object Expectations {
   final case class Freshness(tsCol: String, anchorTs: String,
                              maxLagDays: Int) extends Check {
     val name = s"freshness($tsCol,${maxLagDays}d)"
+    /** Violations given the newest timestamp: fresh → 0; stale → the
+      * when is false → null → 1; empty/all-null → null → 1. */
+    private[operators] def violations(newest: Column): Column =
+      coalesce(when(newest >=
+          to_timestamp(lit(anchorTs)) - expr(s"INTERVAL $maxLagDays DAYS"), 0L),
+        lit(1L))
   }
 
   /** Violations = rows (not keys) whose non-null `column` has no match
@@ -78,54 +84,118 @@ object Expectations {
   // "Did today's load look like the last trusted one?" — the profiling
   // census ([[Profile]]) and the sketch monitor ([[SketchStats]]) turned
   // into publish gates. Scale shape: every check's today-side metric
-  // folds into the SAME single aggregation as the row-local checks (the
-  // scan count stays one), and each baseline reduces to a one-row
-  // aggregate crossJoined in (broadcast 1×1 — the audited
-  // constant-sided-crossJoin pattern). A missing or empty baseline is a
-  // VIOLATION, not a pass: an unevaluable contract never gates anything
-  // open (the [[Predicate]] rule).
+  // folds into the SAME single aggregation as the row-local checks, and
+  // so does a [[Slice]] baseline's (the scan count stays one); a
+  // [[Materialized]] baseline reduces to a one-row aggregate crossJoined
+  // in (broadcast 1×1 — the audited constant-sided-crossJoin pattern). A
+  // missing or empty baseline is a VIOLATION, not a pass: an unevaluable
+  // contract never gates anything open (the [[Predicate]] rule).
+
+  /** What a drift check compares today against. Both forms yield the
+    * same baseline quantities for the same rows, so a check's verdict
+    * does not depend on which one carries them. */
+  sealed trait Baseline {
+    /** The relation the baseline aggregates run over; None = the gated
+      * table itself (the aggregates are conditional on the slice). */
+    private[operators] def relation: Option[DataFrame]
+    /** Baseline row count. */
+    private[operators] def rows: Column
+    /** `column`'s row count, null count, non-null count and sum (round
+      * at 4) — [[Profile.numeric]]'s `n_rows`, `n_nulls`, `n_rows −
+      * n_nulls`, `sum_v`; NULL when the baseline has no row for it. */
+    private[operators] def rowsOf(column: String): Column
+    private[operators] def nullsOf(column: String): Column
+    private[operators] def valuesOf(column: String): Column
+    private[operators] def sumOf(column: String): Column
+    /** Baseline count of bin `i`, where `bin` bins a gated-table row
+      * ([[Profile.histogram]]'s `cnt`). */
+    private[operators] def binCount(bin: Column, i: Int): Column
+  }
+
+  /** A persisted [[Profile.numeric]] / [[Profile.histogram]] relation —
+    * yesterday's profile, the trusted load's histogram. */
+  final case class Materialized(df: DataFrame) extends Baseline {
+    private def of(column: String, metric: Column): Column =
+      max(when(col("column") === column, metric))
+    private[operators] def relation: Option[DataFrame] = Some(df)
+    private[operators] def rows: Column = max(col("n_rows"))
+    private[operators] def rowsOf(column: String): Column = of(column, col("n_rows"))
+    private[operators] def nullsOf(column: String): Column = of(column, col("n_nulls"))
+    private[operators] def valuesOf(column: String): Column =
+      of(column, col("n_rows") - col("n_nulls"))
+    private[operators] def sumOf(column: String): Column = of(column, col("sum_v"))
+    private[operators] def binCount(bin: Column, i: Int): Column =
+      max(when(col("bin") === i, col("cnt")))
+  }
+
+  /** The rows of the gated table matching `pred` — yesterday's
+    * partition, the trusted date range. Its aggregates are conditional
+    * counts and sums over the same scan as everything else, equal to the
+    * [[Materialized]] profile of `df.where(pred)` (the sum carries
+    * [[Profile.numeric]]'s round-at-4). Every column is "profiled"; an
+    * empty slice has 0 rows, which violates like an empty profile. */
+  final case class Slice(pred: Column) extends Baseline {
+    private[operators] def relation: Option[DataFrame] = None
+    private[operators] def rows: Column = count(when(pred, 1))
+    private[operators] def rowsOf(column: String): Column = rows
+    private[operators] def nullsOf(column: String): Column =
+      count(when(pred && col(column).isNull, 1))
+    private[operators] def valuesOf(column: String): Column =
+      count(when(pred, col(column)))
+    private[operators] def sumOf(column: String): Column =
+      round(sum(when(pred, col(column).cast("double"))), 4)
+    private[operators] def binCount(bin: Column, i: Int): Column =
+      count(when(pred && bin === i, 1))
+  }
+
   sealed trait DriftCheck extends Check {
-    /** The persisted baseline relation this check compares against. */
-    def baseline: DataFrame
+    /** Where the baseline aggregates run: a relation crossJoined in, or
+      * None to fold them into the gated table's single aggregation. */
+    private[operators] def baselineRelation: Option[DataFrame]
     /** Today-side aggregates over the gated table, aliased under `p`. */
     private[operators] def todayAggs(p: String): Seq[Column]
-    /** Baseline-side aggregates (reduce `baseline` to one row). */
+    /** Baseline-side aggregates, aliased under `p`. */
     private[operators] def baselineAggs(p: String): Seq[Column]
     /** Violation count (0 or 1) over the joined today+baseline row. */
     private[operators] def violationCount(p: String): Column
   }
 
-  /** Row-count drift vs a [[Profile.numeric]] (or any `n_rows`-bearing)
-    * baseline: violated when today's count falls outside
-    * [base/maxRatio, base·maxRatio]. */
-  final case class RowCountDrift(baseline: DataFrame,
-                                 maxRatio: Double) extends DriftCheck {
+  /** The drift checks whose baseline is a [[Baseline]]. */
+  sealed trait ProfileDrift extends DriftCheck {
+    def baseline: Baseline
+    private[operators] def baselineRelation: Option[DataFrame] = baseline.relation
+  }
+
+  /** Row-count drift: violated when today's count falls outside
+    * [base/maxRatio, base·maxRatio] or the baseline has no rows. */
+  final case class RowCountDrift(baseline: Baseline,
+                                 maxRatio: Double) extends ProfileDrift {
     require(maxRatio >= 1.0, s"row_count_drift: maxRatio=$maxRatio < 1")
     val name = s"row_count_drift($maxRatio)"
     private[operators] def todayAggs(p: String): Seq[Column] =
       Seq(count(lit(1)).as(s"${p}_t"))
     private[operators] def baselineAggs(p: String): Seq[Column] =
-      Seq(max(col("n_rows")).as(s"${p}_b"))
+      Seq(baseline.rows.as(s"${p}_b"))
     private[operators] def violationCount(p: String): Column = {
       val t = col(s"${p}_t"); val b = col(s"${p}_b")
-      when(b.isNull, lit(1L))
+      when(b.isNull || b === 0, lit(1L))
         .when(t > b * maxRatio || t * maxRatio < b, lit(1L))
         .otherwise(lit(0L))
     }
   }
 
-  /** Null-rate drift for `column` vs its [[Profile.numeric]] baseline
-    * row: violated when |rate_today − rate_base| > maxDelta (or either
-    * side is unevaluable — empty table, missing baseline row). */
-  final case class NullRateDrift(column: String, baseline: DataFrame,
-                                 maxDelta: Double) extends DriftCheck {
+  /** Null-rate drift for `column`: violated when |rate_today −
+    * rate_base| > maxDelta (or either side is unevaluable — empty table,
+    * missing baseline row, empty baseline). */
+  final case class NullRateDrift(column: String, baseline: Baseline,
+                                 maxDelta: Double) extends ProfileDrift {
     val name = s"null_rate_drift($column,$maxDelta)"
     private[operators] def todayAggs(p: String): Seq[Column] = Seq(
       count(lit(1)).as(s"${p}_n"),
       sum(when(col(column).isNull, 1L).otherwise(0L)).as(s"${p}_z"))
     private[operators] def baselineAggs(p: String): Seq[Column] = Seq(
-      max(when(col("column") === column, col("n_nulls"))).as(s"${p}_bz"),
-      max(when(col("column") === column, col("n_rows"))).as(s"${p}_bn"))
+      baseline.nullsOf(column).as(s"${p}_bz"),
+      baseline.rowsOf(column).as(s"${p}_bn"))
     private[operators] def violationCount(p: String): Column = {
       val n = col(s"${p}_n"); val z = col(s"${p}_z")
       val bn = col(s"${p}_bn"); val bz = col(s"${p}_bz")
@@ -136,21 +206,19 @@ object Expectations {
     }
   }
 
-  /** Mean drift for `column` vs its [[Profile.numeric]] baseline row
-    * (baseline mean = `sum_v / (n_rows − n_nulls)`): violated when
-    * |mean_today − mean_base| > maxDelta. The baseline `sum_v` carries
-    * Profile's round-at-4 — pick maxDelta ≫ 1e-4, which any real drift
-    * band is. */
-  final case class MeanDrift(column: String, baseline: DataFrame,
-                             maxDelta: Double) extends DriftCheck {
+  /** Mean drift for `column` (baseline mean = `sum_v / (n_rows −
+    * n_nulls)`): violated when |mean_today − mean_base| > maxDelta. The
+    * baseline sum carries Profile's round-at-4 — pick maxDelta ≫ 1e-4,
+    * which any real drift band is. */
+  final case class MeanDrift(column: String, baseline: Baseline,
+                             maxDelta: Double) extends ProfileDrift {
     val name = s"mean_drift($column,$maxDelta)"
     private[operators] def todayAggs(p: String): Seq[Column] = Seq(
       count(col(column)).as(s"${p}_c"),
       sum(col(column).cast("double")).as(s"${p}_s"))
     private[operators] def baselineAggs(p: String): Seq[Column] = Seq(
-      max(when(col("column") === column, col("sum_v"))).as(s"${p}_bs"),
-      max(when(col("column") === column, col("n_rows") - col("n_nulls")))
-        .as(s"${p}_bc"))
+      baseline.sumOf(column).as(s"${p}_bs"),
+      baseline.valuesOf(column).as(s"${p}_bc"))
     private[operators] def violationCount(p: String): Column = {
       val c = col(s"${p}_c"); val s = col(s"${p}_s")
       val bc = col(s"${p}_bc"); val bs = col(s"${p}_bs")
@@ -163,181 +231,38 @@ object Expectations {
   /** Distribution drift via the POPULATION STABILITY INDEX over a fixed
     * equi-width binning: `PSI = Σ (p_i − q_i)·ln(p_i / q_i)` with
     * ε-smoothed proportions (the industry-standard monitoring metric;
-    * rule of thumb: <0.1 stable, >0.25 shifted). `baseline` is a
-    * persisted [[Profile.histogram]] relation — pin (lo, hi, bins) once
-    * and reuse them on both sides, the same fixed-range discipline that
-    * makes the histogram itself reproducible. Today's bin counts fold
-    * into the shared single aggregation (bins+2 conditional sums — the
-    * out-of-range bins count too, a mass shift OUT of range is drift);
-    * the baseline reduces to one broadcast row of bin counts. Violated
-    * when PSI > maxPsi or either side is empty/missing. */
+    * rule of thumb: <0.1 stable, >0.25 shifted). A [[Materialized]]
+    * baseline is a persisted [[Profile.histogram]] relation — pin (lo,
+    * hi, bins) once and reuse them on both sides, the same fixed-range
+    * discipline that makes the histogram itself reproducible; both sides
+    * bin with [[Profile.binOf]]. Today's bin counts fold into the shared
+    * single aggregation (bins+2 conditional counts — the out-of-range
+    * bins count too, a mass shift OUT of range is drift). `todayExpr`
+    * optionally swaps the TODAY side's value expression (the what-if /
+    * shifted-twin gate) while the check keeps `column`'s name and
+    * baseline. Bin counts are exact longs on every side, so PSI is the
+    * same for either baseline form. Violated when PSI > maxPsi or either
+    * side is empty/missing. */
   final case class HistogramDrift(column: String, lo: Double, hi: Double,
-                                  bins: Int, baseline: DataFrame,
-                                  maxPsi: Double, eps: Double = 1e-4)
-      extends DriftCheck {
+                                  bins: Int, baseline: Baseline,
+                                  maxPsi: Double, eps: Double = 1e-4,
+                                  todayExpr: Option[Column] = None)
+      extends ProfileDrift {
     require(bins >= 1 && lo < hi, s"histogram_drift: bins=$bins lo=$lo hi=$hi")
-    // each bin is one conditional-sum column in the shared aggregation —
-    // PSI over more than ~1k bins is a misuse (smoothing dominates), so
-    // refuse rather than build a pathological plan
+    // each bin is one conditional-count column in the shared aggregation
+    // — PSI over more than ~1k bins is a misuse (smoothing dominates),
+    // so refuse rather than build a pathological plan
     require(bins <= 1024, s"histogram_drift: bins=$bins > 1024 — coarsen")
     require(maxPsi > 0 && eps > 0, s"histogram_drift: maxPsi=$maxPsi eps=$eps")
     val name = s"histogram_drift($column,$bins,$maxPsi)"
-    // the [[Profile.histogram]] bin expression, verbatim — both sides of
-    // the comparison must bin identically or PSI measures the binning
-    private def binOf: Column = {
-      val v = col(column).cast("double")
-      val raw = floor((v - lo) / (hi - lo) * bins).cast("int")
-      when(v.isNull, lit(null))
-        .when(v < lo, lit(-1)).when(v > hi, lit(bins))
-        .when(raw === bins, lit(bins - 1))
-        .otherwise(raw)
-    }
     private def allBins: Seq[Int] = -1 to bins
-    private[operators] def todayAggs(p: String): Seq[Column] =
-      allBins.map(i => coalesce(
-        sum(when(binOf === i, 1L)), lit(0L)).as(s"${p}_t${i + 1}"))
-    private[operators] def baselineAggs(p: String): Seq[Column] =
-      allBins.map(i =>
-        max(when(col("bin") === i, col("cnt"))).as(s"${p}_b${i + 1}"))
-    private[operators] def violationCount(p: String): Column = {
-      val t = allBins.map(i => col(s"${p}_t${i + 1}"))
-      val b = allBins.map(i => coalesce(col(s"${p}_b${i + 1}"), lit(0L)))
-      val tTot = t.reduce(_ + _).cast("double")
-      val bTot = b.reduce(_ + _).cast("double")
-      val psi = t.zip(b).map { case (ti, bi) =>
-        val pi = greatest(ti / tTot, lit(eps))
-        val qi = greatest(bi / bTot, lit(eps))
-        (pi - qi) * log(pi / qi)
-      }.reduce(_ + _)
-      when(tTot === 0.0 || bTot.isNull || bTot === 0.0, lit(1L))
-        .when(psi > maxPsi, lit(1L))
-        .otherwise(lit(0L))
+    private[operators] def todayAggs(p: String): Seq[Column] = {
+      val tBin = Profile.binOf(todayExpr.getOrElse(col(column)), lo, hi, bins)
+      allBins.map(i => count(when(tBin === i, 1)).as(s"${p}_t${i + 1}"))
     }
-  }
-
-  // ── Self-baselined drift checks ─────────────────────────────────────
-  // The common monitoring shape where BOTH sides live in one table: the
-  // baseline is a slice of the gated table itself (yesterday's
-  // partition, the trusted date range). A materialized-baseline
-  // DriftCheck pays one extra scan per baseline aggregation; these fold
-  // the baseline's aggregates into the SAME single aggregation as
-  // everything else (conditional on `baselinePred`), so the whole report
-  // stays one scan however many checks it carries. Every aggregate is a
-  // conditional count/sum over the same rows the materialized twin
-  // scans, so verdicts are identical (counts are exact longs; the one
-  // double, MeanSelfDrift's baseline sum, carries the same round-at-4 as
-  // [[Profile.numeric]]'s `sum_v`).
-  sealed trait SelfDriftCheck extends Check {
-    /** Aggregates over the gated table, aliased under `p` — today-side
-      * AND baseline-side (conditional) in one list. */
-    private[operators] def aggs(p: String): Seq[Column]
-    /** Violation count (0 or 1) over the aggregated row. */
-    private[operators] def violationCount(p: String): Column
-  }
-
-  /** [[RowCountDrift]] with the baseline = rows matching `baselinePred`.
-    * Same name and verdict arithmetic as the materialized twin fed a
-    * [[Profile.numeric]] of the `baselinePred` slice. */
-  final case class RowCountSelfDrift(baselinePred: Column,
-                                     maxRatio: Double) extends SelfDriftCheck {
-    require(maxRatio >= 1.0, s"row_count_drift: maxRatio=$maxRatio < 1")
-    val name = s"row_count_drift($maxRatio)"
-    private[operators] def aggs(p: String): Seq[Column] = Seq(
-      count(lit(1)).as(s"${p}_t"),
-      coalesce(sum(when(baselinePred, 1L).otherwise(0L)), lit(0L)).as(s"${p}_b"))
-    private[operators] def violationCount(p: String): Column = {
-      val t = col(s"${p}_t"); val b = col(s"${p}_b")
-      when(b.isNull, lit(1L))
-        .when(t > b * maxRatio || t * maxRatio < b, lit(1L))
-        .otherwise(lit(0L))
-    }
-  }
-
-  /** [[NullRateDrift]] with the baseline = the `baselinePred` slice of
-    * the same table. `baselineHasColumn = false` reproduces the
-    * missing-baseline-row case (a column the baseline never profiled is
-    * a VIOLATION, never a silent pass). */
-  final case class NullRateSelfDrift(column: String, baselinePred: Column,
-                                     maxDelta: Double,
-                                     baselineHasColumn: Boolean = true)
-      extends SelfDriftCheck {
-    val name = s"null_rate_drift($column,$maxDelta)"
-    private[operators] def aggs(p: String): Seq[Column] = Seq(
-      count(lit(1)).as(s"${p}_n"),
-      sum(when(col(column).isNull, 1L).otherwise(0L)).as(s"${p}_z")) ++ (
-      if (baselineHasColumn) Seq(
-        coalesce(sum(when(baselinePred && col(column).isNull, 1L)
-          .otherwise(0L)), lit(0L)).as(s"${p}_bz"),
-        coalesce(sum(when(baselinePred, 1L).otherwise(0L)), lit(0L))
-          .as(s"${p}_bn"))
-      else Seq(lit(null).cast("long").as(s"${p}_bz"),
-        lit(null).cast("long").as(s"${p}_bn")))
-    private[operators] def violationCount(p: String): Column = {
-      val n = col(s"${p}_n"); val z = col(s"${p}_z")
-      val bn = col(s"${p}_bn"); val bz = col(s"${p}_bz")
-      when(n === 0 || bn.isNull || bn === 0, lit(1L))
-        .when(abs(z.cast("double") / n - bz.cast("double") / bn) > maxDelta,
-          lit(1L))
-        .otherwise(lit(0L))
-    }
-  }
-
-  /** [[MeanDrift]] with the baseline = the `baselinePred` slice of the
-    * same table. The baseline sum carries [[Profile.numeric]]'s
-    * round-at-4, so the verdict arithmetic matches the materialized twin
-    * input for input. */
-  final case class MeanSelfDrift(column: String, baselinePred: Column,
-                                 maxDelta: Double) extends SelfDriftCheck {
-    val name = s"mean_drift($column,$maxDelta)"
-    private[operators] def aggs(p: String): Seq[Column] = {
-      val v = col(column).cast("double")
-      Seq(
-        count(col(column)).as(s"${p}_c"),
-        sum(v).as(s"${p}_s"),
-        round(sum(when(baselinePred, v)), 4).as(s"${p}_bs"),
-        coalesce(sum(when(baselinePred && col(column).isNotNull, 1L)
-          .otherwise(0L)), lit(0L)).as(s"${p}_bc"))
-    }
-    private[operators] def violationCount(p: String): Column = {
-      val c = col(s"${p}_c"); val s = col(s"${p}_s")
-      val bc = col(s"${p}_bc"); val bs = col(s"${p}_bs")
-      when(c === 0 || bc.isNull || bc === 0 || bs.isNull, lit(1L))
-        .when(abs(s / c - bs / bc) > maxDelta, lit(1L))
-        .otherwise(lit(0L))
-    }
-  }
-
-  /** [[HistogramDrift]] with the baseline = the fixed-range histogram of
-    * `column` over the `baselinePred` slice of the same table.
-    * `todayExpr` optionally swaps the TODAY side's value expression (the
-    * what-if / shifted-twin gate) while the check keeps `column`'s name
-    * and baseline — bin counts on both sides are exact longs, so PSI is
-    * bit-identical to the materialized [[Profile.histogram]] twin. */
-  final case class HistogramSelfDrift(column: String, lo: Double, hi: Double,
-                                      bins: Int, baselinePred: Column,
-                                      maxPsi: Double, eps: Double = 1e-4,
-                                      todayExpr: Option[Column] = None)
-      extends SelfDriftCheck {
-    require(bins >= 1 && lo < hi, s"histogram_drift: bins=$bins lo=$lo hi=$hi")
-    require(bins <= 1024, s"histogram_drift: bins=$bins > 1024 — coarsen")
-    require(maxPsi > 0 && eps > 0, s"histogram_drift: maxPsi=$maxPsi eps=$eps")
-    val name = s"histogram_drift($column,$bins,$maxPsi)"
-    private def binOf(value: Column): Column = {
-      val v = value.cast("double")
-      val raw = floor((v - lo) / (hi - lo) * bins).cast("int")
-      when(v.isNull, lit(null))
-        .when(v < lo, lit(-1)).when(v > hi, lit(bins))
-        .when(raw === bins, lit(bins - 1))
-        .otherwise(raw)
-    }
-    private def allBins: Seq[Int] = -1 to bins
-    private[operators] def aggs(p: String): Seq[Column] = {
-      val tBin = binOf(todayExpr.getOrElse(col(column)))
-      val bBin = binOf(col(column))
-      allBins.flatMap(i => Seq(
-        coalesce(sum(when(tBin === i, 1L)), lit(0L)).as(s"${p}_t${i + 1}"),
-        coalesce(sum(when(baselinePred && bBin === i, 1L)), lit(0L))
-          .as(s"${p}_b${i + 1}")))
+    private[operators] def baselineAggs(p: String): Seq[Column] = {
+      val bBin = Profile.binOf(col(column), lo, hi, bins)
+      allBins.map(i => baseline.binCount(bBin, i).as(s"${p}_b${i + 1}"))
     }
     private[operators] def violationCount(p: String): Column = {
       val t = allBins.map(i => col(s"${p}_t${i + 1}"))
@@ -370,6 +295,7 @@ object Expectations {
       extends DriftCheck {
     require(prob > 0 && prob < 1, s"quantile_drift: prob=$prob")
     val name = s"quantile_drift($column,p${(prob * 100).round},$band)"
+    private[operators] def baselineRelation: Option[DataFrame] = Some(baseline)
     private[operators] def todayAggs(p: String): Seq[Column] = Seq(
       kll_sketch_agg_double(col(column).cast("double"), kllK).as(s"${p}_sk"))
     private[operators] def baselineAggs(p: String): Seq[Column] = Seq(
@@ -390,111 +316,66 @@ object Expectations {
     require(checks.nonEmpty, "expectations: no checks")
     require(checks.map(_.name).distinct.size == checks.size,
       "expectations: duplicate check names")
-    val onePass: Seq[(String, Column)] = checks.collect {
-      case c: RowCheck =>
-        // sum over zero rows is NULL — coalesce so an empty table reports
-        // 0 violations / pass=true instead of a NULL the gate would skip
-        c.name -> coalesce(sum(when(c.violated, 1L).otherwise(0L)), lit(0L))
-      case c: Freshness =>
-        // fresh → 0; stale → the when is false → null → coalesce to 1;
-        // empty/all-null → max is null → null → 1 (stale by definition)
-        c.name -> coalesce(
-          when(max(col(c.tsCol)) >=
-            to_timestamp(lit(c.anchorTs)) -
-              expr(s"INTERVAL ${c.maxLagDays} DAYS"), 0L),
-          lit(1L))
-    }
+    val rowChecks = checks.collect { case c: RowCheck => c }
+    val freshes = checks.collect { case c: Freshness => c }
     val uniques = checks.collect { case c: UniqueKey => c }
     val drifts = checks.collect { case c: DriftCheck => c }
-    val selfs = checks.collect { case c: SelfDriftCheck => c }
-    // ONE UniqueKey riding alongside other aggregates would plan an
-    // Expand (2× the scan through the aggregate, the multi-distinct
-    // price — measured ~3-8× the whole aggregation at gate scale). When
-    // exactly one key is checked and every other aggregate recombines
-    // exactly under regrouping (plain/conditional long sums and max —
-    // i.e. RowCheck and Freshness; NOT the KLL sketch a
+    // When exactly one key is checked and every other aggregate
+    // recombines exactly under regrouping (plain/conditional long sums
+    // and max — i.e. RowCheck and Freshness; NOT the KLL sketch a
     // QuantileBandDrift carries, and drift checks are left on the
-    // single-level path wholesale), aggregate in TWO LEVELS instead:
-    // group at the key, then fold the per-key partials — the distinct
-    // count becomes "number of groups", no Expand, same longs.
-    val twoLevel = uniques.size == 1 && drifts.isEmpty && selfs.isEmpty &&
-      checks.forall {
-        // RefIntegrity runs as its own anti-join report either way, so
-        // it neither needs nor blocks the two-level aggregation
-        case _: RowCheck | _: UniqueKey | _: Freshness | _: RefIntegrity => true
-        case _ => false
-      }
+    // single-level path wholesale), aggregate in TWO LEVELS: group at the
+    // key, then fold the per-key partials — the distinct count becomes
+    // "number of groups", same longs. Neither path plans an Expand for
+    // one key (Spark plans a single distinct group without one; two keys
+    // do plan one — ExpectationsSpec pins both), and dq_check plans the
+    // same exchanges on either path.
+    val twoLevel = uniques.size == 1 && checks.forall {
+      // RefIntegrity runs as its own anti-join report either way, so
+      // it neither needs nor blocks the two-level aggregation
+      case _: RowCheck | _: UniqueKey | _: Freshness | _: RefIntegrity => true
+      case _ => false
+    }
     val scalarReport =
-      if (onePass.isEmpty && uniques.isEmpty && drifts.isEmpty && selfs.isEmpty) None
+      if (checks.forall(_.isInstanceOf[RefIntegrity])) None
       else if (twoLevel) {
         val key = uniques.head
-        val rowChecks = checks.collect { case c: RowCheck => c }
-        val freshes = checks.collect { case c: Freshness => c }
         val lvl1 =
           rowChecks.zipWithIndex.map { case (c, i) =>
             sum(when(c.violated, 1L).otherwise(0L)).as(s"p_r$i") } ++
           freshes.zipWithIndex.map { case (c, i) =>
             max(col(c.tsCol)).as(s"p_f$i") }
-        val grouped =
-          if (lvl1.isEmpty) df.groupBy(key.columns.map(col): _*)
-            .agg(count(lit(1)).as("p_k"))
-          else df.groupBy(key.columns.map(col): _*)
-            .agg(count(lit(1)).as("p_k"), lvl1: _*)
+        val grouped = df.groupBy(key.columns.map(col): _*)
+          .agg(count(lit(1)).as("p_k"), lvl1: _*)
         // level 2 recombines exactly: sums of long sums, max of maxes;
         // an empty table leaves every sum NULL → the same coalesces as
         // the single-level path (0 violations; stale freshness)
-        val lvl2: Seq[(String, Column)] =
+        Some(report(a => grouped.agg(a.head, a.tail: _*),
           rowChecks.zipWithIndex.map { case (c, i) =>
             c.name -> coalesce(sum(col(s"p_r$i")), lit(0L)) } ++
           Seq(key.name ->
             (coalesce(sum(col("p_k")), lit(0L)) - count(lit(1)))) ++
           freshes.zipWithIndex.map { case (c, i) =>
-            c.name -> coalesce(
-              when(max(col(s"p_f$i")) >=
-                to_timestamp(lit(c.anchorTs)) -
-                  expr(s"INTERVAL ${c.maxLagDays} DAYS"), 0L),
-              lit(1L)) }
-        val aggCols = lvl2.zipWithIndex.map { case ((_, a), i) => a.as(s"c$i") }
-        val aggRow = grouped.agg(aggCols.head, aggCols.tail: _*)
-        val stackExpr = lvl2.zipWithIndex
-          .map { case ((n, _), i) => s"'${n.replace("'", "''")}', c$i" }
-          .mkString(", ")
-        Some(aggRow.selectExpr(
-          s"stack(${lvl2.size}, $stackExpr) AS (check, violations)"))
+            c.name -> c.violations(max(col(s"p_f$i"))) },
+          Nil))
       } else {
         // ONE aggregation over df carries every scalar check AND every
-        // drift check's today-side metrics (self-baselined drifts fold
-        // their baseline aggregates in too); each materialized-baseline
-        // drift joins in as a broadcast one-row aggregate.
-        val uniqueAggs: Seq[(String, Column)] = uniques.map { c =>
-          c.name -> (count(lit(1)) -
-            countDistinct(struct(c.columns.map(col): _*)))
-        }
-        val scalar = onePass ++ uniqueAggs
-        val aggs = scalar.zipWithIndex.map { case ((_, a), i) => a.as(s"c$i") } ++
-          drifts.zipWithIndex.flatMap { case (c, i) => c.todayAggs(s"_d$i") } ++
-          selfs.zipWithIndex.flatMap { case (c, i) => c.aggs(s"_sf$i") }
-        val aggRow = df.agg(aggs.head, aggs.tail: _*)
-        val joined = drifts.zipWithIndex.foldLeft(aggRow) { case (acc, (c, i)) =>
-          val bAggs = c.baselineAggs(s"_d$i")
-          acc.crossJoin(c.baseline.agg(bAggs.head, bAggs.tail: _*))
-        }
-        val withDrift = drifts.zipWithIndex.foldLeft(joined) { case (acc, (c, i)) =>
-          acc.withColumn(s"vd$i", c.violationCount(s"_d$i"))
-        }
-        val withViol = selfs.zipWithIndex.foldLeft(withDrift) { case (acc, (c, i)) =>
-          acc.withColumn(s"vs$i", c.violationCount(s"_sf$i"))
-        }
-        val stackExpr = (scalar.zipWithIndex
-          .map { case ((n, _), i) => s"'${n.replace("'", "''")}', c$i" } ++
-          drifts.zipWithIndex
-            .map { case (c, i) => s"'${c.name.replace("'", "''")}', vd$i" } ++
-          selfs.zipWithIndex
-            .map { case (c, i) => s"'${c.name.replace("'", "''")}', vs$i" })
-          .mkString(", ")
-        Some(withViol.selectExpr(
-          s"stack(${scalar.size + drifts.size + selfs.size}, $stackExpr) " +
-            "AS (check, violations)"))
+        // drift check's today-side metrics (a Slice baseline's aggregates
+        // fold in too); each materialized baseline joins in as a
+        // broadcast one-row aggregate.
+        Some(report(a => df.agg(a.head, a.tail: _*),
+          rowChecks.map { c =>
+            // sum over zero rows is NULL — coalesce so an empty table
+            // reports 0 violations / pass=true instead of a NULL the
+            // gate would skip
+            c.name -> coalesce(sum(when(c.violated, 1L).otherwise(0L)), lit(0L))
+          } ++
+          freshes.map(c => c.name -> c.violations(max(col(c.tsCol)))) ++
+          uniques.map { c =>
+            c.name -> (count(lit(1)) -
+              countDistinct(struct(c.columns.map(col): _*)))
+          },
+          drifts))
       }
     val refReports = checks.collect { case c: RefIntegrity =>
       df.select(col(c.column)).where(col(c.column).isNotNull)
@@ -506,6 +387,35 @@ object Expectations {
     (scalarReport.toSeq ++ refReports).reduce(_ unionByName _)
       .withColumn("pass", col("violations") === 0L)
       .orderBy("check")
+  }
+
+  /** The `(check, violations)` rows of one aggregation: `aggregate` runs
+    * every `scalar` violation count plus each drift's today-side
+    * aggregates (and a [[Slice]] baseline's); each materialized baseline
+    * joins in as a one-row aggregate; one `stack` unpivots the verdicts. */
+  private def report(aggregate: Seq[Column] => DataFrame,
+                     scalar: Seq[(String, Column)],
+                     drifts: Seq[DriftCheck]): DataFrame = {
+    val prefixed = drifts.zipWithIndex.map { case (c, i) => (c, s"_d$i") }
+    val row = aggregate(
+      scalar.zipWithIndex.map { case ((_, a), i) => a.as(s"c$i") } ++
+      prefixed.flatMap { case (c, p) =>
+        c.todayAggs(p) ++ (if (c.baselineRelation.isEmpty) c.baselineAggs(p) else Nil)
+      })
+    val joined = prefixed.foldLeft(row) { case (acc, (c, p)) =>
+      c.baselineRelation.fold(acc) { b =>
+        val bAggs = c.baselineAggs(p)
+        acc.crossJoin(b.agg(bAggs.head, bAggs.tail: _*))
+      }
+    }
+    val verdicts =
+      scalar.zipWithIndex.map { case ((n, _), i) => n -> col(s"c$i") } ++
+      prefixed.map { case (c, p) => c.name -> c.violationCount(p) }
+    val stackExpr = verdicts.zipWithIndex
+      .map { case ((n, _), i) => s"'${n.replace("'", "''")}', v$i" }
+      .mkString(", ")
+    joined.select(verdicts.zipWithIndex.map { case ((_, v), i) => v.as(s"v$i") }: _*)
+      .selectExpr(s"stack(${verdicts.size}, $stackExpr) AS (check, violations)")
   }
 
   /** The gate: throw, naming every failing check and its count, unless

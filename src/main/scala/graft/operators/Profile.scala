@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** One-pass table profiling — the data-quality census run before a table
@@ -99,13 +99,8 @@ object Profile {
     require(bins >= 1, s"histogram: bins=$bins")
     require(lo < hi, s"histogram: lo=$lo >= hi=$hi")
     require(df.columns.contains(c), s"histogram: no such column '$c'")
-    val v = col(c).cast("double")
-    val raw = floor((v - lo) / (hi - lo) * bins).cast("int")
-    val bin = when(v.isNull, lit(null))
-      .when(v < lo, lit(-1)).when(v > hi, lit(bins))
-      .when(raw === bins, lit(bins - 1)) // v == hi: right-closed last bin
-      .otherwise(raw)
-    val counts = df.select(bin.as("bin")).where(col("bin").isNotNull)
+    val counts = df.select(binOf(col(c), lo, hi, bins).as("bin"))
+      .where(col("bin").isNotNull)
       .groupBy("bin").agg(count(lit(1)).as("cnt"))
     val spark = df.sparkSession
     val allBins = spark.range(-1, bins + 1)
@@ -117,5 +112,20 @@ object Profile {
         round(lit(lo) + (col("bin") + 1) * w, 6).as("bin_hi"),
         coalesce(col("cnt"), lit(0L)).as("cnt"))
       .orderBy("bin")
+  }
+
+  /** The [[histogram]] bin of `value` (cast to double): `bins` equi-width
+    * bins over [lo, hi], the last right-closed, -1 / `bins` outside the
+    * range, NULL for NULL. Every comparison against a histogram bins
+    * through this one expression — two sides binned differently would
+    * measure the binning, not the data. */
+  private[operators] def binOf(value: Column, lo: Double, hi: Double,
+                               bins: Int): Column = {
+    val v = value.cast("double")
+    val raw = floor((v - lo) / (hi - lo) * bins).cast("int")
+    when(v.isNull, lit(null))
+      .when(v < lo, lit(-1)).when(v > hi, lit(bins))
+      .when(raw === bins, lit(bins - 1)) // v == hi: right-closed last bin
+      .otherwise(raw)
   }
 }

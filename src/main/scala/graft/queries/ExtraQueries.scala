@@ -217,33 +217,31 @@ object ExtraQueries {
       |) ORDER BY "check"""".stripMargin
 
   /** Profile-drift gate over orders — "did today's load look like the
-    * last trusted one?" as a publish blocker. Baseline = the profile of
-    * the pre-1997 slice (a stand-in for yesterday's persisted
-    * [[Profile.numeric]] output); current = the full table. Bands are
-    * chosen with wide margins on both sides of every threshold (full ≈
-    * 3.3× the slice; mean shift ≈ 3.1k at sf0.01) so pass/violate is
-    * pinned, including one unevaluable case (o_custkey was never
-    * profiled → violation, never a silent pass). The oracle re-derives
-    * the drift arithmetic end to end. */
+    * last trusted one?" as a publish blocker. Baseline = the pre-1997
+    * slice (a stand-in for yesterday's persisted [[Profile.numeric]]
+    * output); current = the full table. Bands are chosen with wide
+    * margins on both sides of every threshold (full ≈ 3.3× the slice;
+    * mean shift ≈ 3.1k at sf0.01) so pass/violate is pinned, including
+    * one unevaluable case (o_custkey against an empty baseline slice →
+    * violation, never a silent pass). The oracle re-derives the drift
+    * arithmetic end to end. */
   def dqDrift(s: SparkSession, dir: String): DataFrame = {
     import Expectations._
     val orders = t(s, dir, "orders")
     // the baseline is a SLICE OF THE SAME TABLE (the pre-1997 stand-in
-    // for yesterday's profile), so the self-baselined checks fold it
-    // into the report's single aggregation — one orders scan total,
-    // where the materialized-Profile formulation paid a second scan
-    // (with a countDistinct Expand) just to re-derive three numbers.
-    // Names, verdict arithmetic, and the round-at-4 baseline sum are
-    // unchanged (ExpectationsSpec pins self == materialized).
-    val pre97 = col("o_orderdate") < to_timestamp(lit("1997-01-01"))
+    // for yesterday's profile), so its aggregates fold into the report's
+    // single aggregation — one orders scan total, where a Materialized
+    // Profile baseline paid a second scan just to re-derive three
+    // numbers. Names, verdict arithmetic, and the round-at-4 baseline
+    // sum are the same (ExpectationsSpec pins Slice == Materialized).
+    val pre97 = Slice(col("o_orderdate") < to_timestamp(lit("1997-01-01")))
     run(orders, Seq(
-      RowCountSelfDrift(pre97, 4.0),            // 3.3× within 4× → pass
-      RowCountSelfDrift(pre97, 1.5),            // beyond 1.5× → violated
-      NullRateSelfDrift("o_totalprice", pre97, 0.01), // 0 vs 0 → pass
-      NullRateSelfDrift("o_custkey", pre97, 0.5,
-        baselineHasColumn = false),             // no baseline row → violated
-      MeanSelfDrift("o_totalprice", pre97, 50000.0),  // pass
-      MeanSelfDrift("o_totalprice", pre97, 100.0)))   // violated
+      RowCountDrift(pre97, 4.0),             // 3.3× within 4× → pass
+      RowCountDrift(pre97, 1.5),             // beyond 1.5× → violated
+      NullRateDrift("o_totalprice", pre97, 0.01), // 0 vs 0 → pass
+      NullRateDrift("o_custkey", Slice(lit(false)), 0.5), // empty → violated
+      MeanDrift("o_totalprice", pre97, 50000.0),  // pass
+      MeanDrift("o_totalprice", pre97, 100.0)))   // violated
   }
 
   private val dqDriftOracle: String =
@@ -295,17 +293,17 @@ object ExtraQueries {
     import Expectations._
     val orders = t(s, dir, "orders")
     // both checks' baseline is the pre-1997 slice of the same table and
-    // the shifted twin is an expression over the same scan, so ONE
-    // self-baselined run computes all three histograms in one orders
-    // pass — the materialized-Profile formulation scanned orders three
-    // times (baseline histogram + one run() per check). Bin counts are
-    // exact longs on every side, so the PSI doubles are bit-identical
-    // (ExpectationsSpec pins self == materialized on this exact gate).
-    val pre97 = col("o_orderdate") < to_timestamp(lit("1997-01-01"))
+    // the shifted twin is an expression over the same scan, so ONE run
+    // computes all three histograms in one orders pass — a Materialized
+    // Profile.histogram baseline scanned orders three times (baseline
+    // histogram + one run() per check). Bin counts are exact longs on
+    // every side, so the PSI doubles are bit-identical (ExpectationsSpec
+    // pins Slice == Materialized).
+    val pre97 = Slice(col("o_orderdate") < to_timestamp(lit("1997-01-01")))
     run(orders, Seq(
-        HistogramSelfDrift("o_totalprice", 0.0, 600000.0, 8, pre97,
+        HistogramDrift("o_totalprice", 0.0, 600000.0, 8, pre97,
           maxPsi = 0.1),
-        HistogramSelfDrift("o_totalprice", 0.0, 600000.0, 8, pre97,
+        HistogramDrift("o_totalprice", 0.0, 600000.0, 8, pre97,
           maxPsi = 0.5, todayExpr = Some(col("o_totalprice") * 1.5))))
       .orderBy("check")
   }

@@ -11,8 +11,9 @@ import graft.operators.Expectations
   * lands under its own `_batch_id` partition (dynamic overwrite — replay
   * REPLACES, the [[StreamSink]] discipline), so the report stream is an
   * auditable history of every batch's contract, including the
-  * baseline-relative drift checks (their persisted baselines are static
-  * relations, legal inside `foreachBatch`).
+  * baseline-relative drift checks (a `Materialized` baseline is a static
+  * relation, legal inside `foreachBatch`; a `Slice` baseline is a slice
+  * of the micro-batch itself).
   *
   * With `gate = true` a red batch THROWS inside `foreachBatch` and fails
   * the streaming query — the stream-native `requirePass`: offsets for

@@ -1,6 +1,10 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
+import graft.queries.ExtraQueries
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{ExpandExec, FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions.lit
 
 /** [[Expectations]]: hand-computed violation counts for every check
@@ -106,7 +110,8 @@ class ExpectationsSpec extends SparkSpec {
   // baseline corpus: 100 rows, x = 0..99 (mean 49.5, no nulls)
   private lazy val driftBase =
     Seq.tabulate(100)(i => (i.toLong, Option(i.toDouble))).toDF("id", "x")
-  private lazy val driftBaseline = Profile.numeric(driftBase, Seq("x"))
+  private lazy val driftProfile = Profile.numeric(driftBase, Seq("x"))
+  private lazy val driftBaseline = Materialized(driftProfile)
   // today: 3× rows, 10% nulls, non-null mean 100 (drift +50.5)
   private lazy val driftToday = Seq.tabulate(300)(i =>
       (i.toLong, if (i % 10 == 0) None else Option((i % 100) + 50.0)))
@@ -133,7 +138,7 @@ class ExpectationsSpec extends SparkSpec {
 
   test("drift: shrink direction violates symmetrically") {
     // today 100 rows vs baseline 300: ratio 1/3 beyond 2× either way
-    val shrunkBaseline = Profile.numeric(driftToday, Seq("x"))
+    val shrunkBaseline = Materialized(Profile.numeric(driftToday, Seq("x")))
     val rows = Expectations.run(driftBase, Seq(RowCountDrift(shrunkBaseline, 2.0)))
       .as[(String, Long, Boolean)].collect().toList
     assert(rows == List(("row_count_drift(2.0)", 1L, false)))
@@ -147,7 +152,7 @@ class ExpectationsSpec extends SparkSpec {
       .as[(String, Long, Boolean)].collect().toList
     assert(noRow.forall { case (_, v, p) => v == 1L && !p })
     // a zero-row baseline relation proves nothing → violation
-    val emptyBaseline = driftBaseline.where($"column" === "no_such")
+    val emptyBaseline = Materialized(driftProfile.where($"column" === "no_such"))
     val empty = Expectations.run(driftToday,
         Seq(RowCountDrift(emptyBaseline, 10.0)))
       .as[(String, Long, Boolean)].collect().toList
@@ -175,7 +180,7 @@ class ExpectationsSpec extends SparkSpec {
     val baseHist = Profile.histogram(base, "x", 0.0, 100.0, 10)
     def psiOf(today: org.apache.spark.sql.DataFrame, maxPsi: Double) =
       Expectations.run(today,
-          Seq(HistogramDrift("x", 0.0, 100.0, 10, baseHist, maxPsi)))
+          Seq(HistogramDrift("x", 0.0, 100.0, 10, Materialized(baseHist), maxPsi)))
         .as[(String, Long, Boolean)].head()
     // same distribution: PSI == 0 exactly (identical proportions)
     assert(psiOf(base, 0.01) ==
@@ -190,7 +195,7 @@ class ExpectationsSpec extends SparkSpec {
     assert(psiOf(skewed, 0.25)._2 == 1L)
     // unevaluable: empty baseline relation violates
     assert(Expectations.run(base, Seq(HistogramDrift("x", 0.0, 100.0, 10,
-        baseHist.where($"bin" === 999), 10.0)))
+        Materialized(baseHist.where($"bin" === 999)), 10.0)))
       .as[(String, Long, Boolean)].head()._2 == 1L)
   }
 
@@ -203,7 +208,7 @@ class ExpectationsSpec extends SparkSpec {
     assert(!e.getMessage.contains("not_null(id)"))
   }
 
-  // ── self-baselined drift checks (one-scan twins) ────────────────────
+  // ── Slice baselines (the baseline is a slice of the gated table) ────
 
   // one table carrying both sides: pred selects the "trusted" slice
   private lazy val selfTable = Seq.tabulate(400) { i =>
@@ -216,30 +221,24 @@ class ExpectationsSpec extends SparkSpec {
 
   test("self-baselined drift == materialized-baseline drift, check for check") {
     val pred = $"is_base"
-    val mBase = Profile.numeric(selfTable.where(pred), Seq("x"))
-    val mHist = Profile.histogram(selfTable.where(pred), "x", 0.0, 100.0, 10)
-    val materialized = Expectations.run(selfTable, Seq(
-        RowCountDrift(mBase, 5.0), RowCountDrift(mBase, 2.0),
-        NullRateDrift("x", mBase, 0.2), NullRateDrift("x", mBase, 0.05),
-        MeanDrift("x", mBase, 100.0), MeanDrift("x", mBase, 10.0),
-        NullRateDrift("id", mBase, 0.9), // no baseline row → violated
-        HistogramDrift("x", 0.0, 100.0, 10, mHist, 0.01),
-        HistogramDrift("x", 0.0, 100.0, 10, mHist, 10.0)))
+    val mBase = Materialized(Profile.numeric(selfTable.where(pred), Seq("x")))
+    val mHist = Materialized(
+      Profile.histogram(selfTable.where(pred), "x", 0.0, 100.0, 10))
+    def checks(b: Baseline, hist: Baseline) = Seq(
+      RowCountDrift(b, 5.0), RowCountDrift(b, 2.0),
+      NullRateDrift("x", b, 0.2), NullRateDrift("x", b, 0.05),
+      MeanDrift("x", b, 100.0), MeanDrift("x", b, 10.0),
+      HistogramDrift("x", 0.0, 100.0, 10, hist, 0.01),
+      HistogramDrift("x", 0.0, 100.0, 10, hist, 10.0))
+    val materialized = Expectations.run(selfTable, checks(mBase, mHist))
       .as[(String, Long, Boolean)].collect().toList
-    val self = Expectations.run(selfTable, Seq(
-        RowCountSelfDrift(pred, 5.0), RowCountSelfDrift(pred, 2.0),
-        NullRateSelfDrift("x", pred, 0.2), NullRateSelfDrift("x", pred, 0.05),
-        MeanSelfDrift("x", pred, 100.0), MeanSelfDrift("x", pred, 10.0),
-        NullRateSelfDrift("id", pred, 0.9, baselineHasColumn = false),
-        HistogramSelfDrift("x", 0.0, 100.0, 10, pred, 0.01),
-        HistogramSelfDrift("x", 0.0, 100.0, 10, pred, 10.0)))
+    val slice = Expectations.run(selfTable, checks(Slice(pred), Slice(pred)))
       .as[(String, Long, Boolean)].collect().toList
-    assert(self == materialized)
+    assert(slice == materialized)
     // and the verdicts themselves are the hand-computable ones
-    val byName = self.map { case (n, v, p) => n -> ((v, p)) }.toMap
+    val byName = slice.map { case (n, v, p) => n -> ((v, p)) }.toMap
     assert(byName("row_count_drift(5.0)") == ((0L, true)))   // 4.0× in 5×
     assert(byName("row_count_drift(2.0)") == ((1L, false)))  // 4.0× beyond 2×
-    assert(byName("null_rate_drift(id,0.9)") == ((1L, false)))
     assert(byName("histogram_drift(x,10,10.0)") == ((0L, true)))
     assert(byName("histogram_drift(x,10,0.01)") == ((1L, false)))
   }
@@ -247,30 +246,45 @@ class ExpectationsSpec extends SparkSpec {
   test("self-baselined histogram drift: todayExpr swaps the today side only") {
     // today = x+200 pushes all mass out of range vs the in-table baseline
     val shifted = Expectations.run(selfTable.where($"x".isNotNull), Seq(
-        HistogramSelfDrift("x", 0.0, 100.0, 10, $"is_base", 0.25,
+        HistogramDrift("x", 0.0, 100.0, 10, Slice($"is_base"), 0.25,
           todayExpr = Some($"x" + 200.0))))
       .as[(String, Long, Boolean)].head()
     assert(shifted == (("histogram_drift(x,10,0.25)", 1L, false)))
     // ... and the check NAME still carries the declared column
     val same = Expectations.run(selfTable.where($"x".isNotNull), Seq(
-        HistogramSelfDrift("x", 0.0, 100.0, 10, $"is_base", 10.0)))
+        HistogramDrift("x", 0.0, 100.0, 10, Slice($"is_base"), 10.0)))
       .as[(String, Long, Boolean)].head()
     assert(same == (("histogram_drift(x,10,10.0)", 0L, true)))
   }
 
   test("self-baselined drift: empty baseline slice violates (unevaluable ≠ pass)") {
+    val empty = Slice(lit(false))
     val rows = Expectations.run(selfTable, Seq(
-        RowCountSelfDrift(lit(false), 10.0),
-        NullRateSelfDrift("x", lit(false), 0.9),
-        MeanSelfDrift("x", lit(false), 1e9),
-        HistogramSelfDrift("x", 0.0, 100.0, 10, lit(false), 10.0)))
+        RowCountDrift(empty, 10.0),
+        NullRateDrift("x", empty, 0.9),
+        MeanDrift("x", empty, 1e9),
+        HistogramDrift("x", 0.0, 100.0, 10, empty, 10.0)))
       .as[(String, Long, Boolean)].collect().toList
     // today is the whole 400-row table, so row_count compares 400 with
-    // an empty slice — unevaluable, like the materialized twin's
-    // zero-row baseline: all four checks violate
+    // an empty slice — unevaluable, like a zero-row Materialized
+    // baseline: all four checks violate
     assert(rows.count { case (_, v, p) => v == 1L && !p } == 4,
       s"an empty baseline slice makes every drift check violate: $rows")
     assert(rows.find(_._1.startsWith("row_count")).get._2 == 1L)
+  }
+
+  test("row-count drift: an empty table against an empty baseline violates, both forms") {
+    // 0 rows today vs 0 baseline rows: no ratio band can hold or break,
+    // so the contract is unevaluable — a violation, as for null rate and
+    // mean — whether the baseline is an empty table's profile (n_rows = 0)
+    // or a slice that matches nothing
+    val emptyTable = selfTable.where(lit(false))
+    val profiled = Materialized(Profile.numeric(emptyTable, Seq("x")))
+    for (b <- Seq(profiled, Slice($"is_base"))) {
+      val rows = Expectations.run(emptyTable, Seq(RowCountDrift(b, 2.0)))
+        .as[(String, Long, Boolean)].collect().toList
+      assert(rows == List(("row_count_drift(2.0)", 1L, false)), s"baseline $b")
+    }
   }
 
   // ── two-level UniqueKey path (no-Expand twin) ───────────────────────
@@ -316,5 +330,36 @@ class ExpectationsSpec extends SparkSpec {
     assert(fresh == List(
       ("freshness(ts,30d)", 0L, true),
       ("unique(k)", 1L, false)))
+  }
+
+  // ── plan shape: the scans and Expands the operator comments claim ───
+
+  private object Executed extends AdaptiveSparkPlanHelper
+  /** The nodes of `df`'s executed plan, after running it: AQE query
+    * stages and subqueries included, a reused exchange counted once. */
+  private def executedNodes(df: DataFrame): Seq[SparkPlan] = {
+    df.collect()
+    Executed.collectWithSubqueries(df.queryExecution.executedPlan) { case p => p }
+  }
+
+  test("dq_drift and dq_drift_psi each scan orders exactly once (Slice baselines)") {
+    for ((name, q) <- Seq("dq_drift" -> ExtraQueries.dqDrift _,
+                          "dq_drift_psi" -> ExtraQueries.dqDriftPsi _)) {
+      val scanned = executedNodes(q(spark, sf001)).collect {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.getName)
+      }
+      assert(scanned == Seq(Seq("orders.parquet")), s"$name scans $scanned")
+    }
+  }
+
+  test("UniqueKey plans: one key with row checks plans no Expand, two keys plan one") {
+    def expands(df: DataFrame) = executedNodes(df).count(_.isInstanceOf[ExpandExec])
+    assert(expands(ExtraQueries.dqCheck(spark, sf001)) == 0)
+    val li = Tables.load(spark, sf001, "lineitem")
+    assert(expands(Expectations.run(li, Seq(
+      UniqueKey(Seq("l_orderkey", "l_linenumber")), NotNull("l_orderkey")))) == 0)
+    assert(expands(Expectations.run(li, Seq(
+      UniqueKey(Seq("l_orderkey", "l_linenumber")), UniqueKey(Seq("l_orderkey")),
+      NotNull("l_orderkey")))) == 1)
   }
 }
