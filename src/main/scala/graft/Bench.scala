@@ -65,6 +65,19 @@ object Bench {
         b.getOrElse(k, Double.MaxValue))
     }.toMap
 
+  /** A JSON string literal: quote, backslash and ALL control chars
+    * (< 0x20) escaped — a tab or CR in a query's oracle SQL would
+    * otherwise make `json.load` of `oracle_sql.json` fail. */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -75,15 +88,6 @@ object Bench {
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Steady-state warmup OUTSIDE the timed region: whichever query runs
     // first otherwise absorbs one-time session costs (parquet footer
     // listing, whole-stage codegen compilation, shuffle infrastructure

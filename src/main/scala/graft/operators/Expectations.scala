@@ -320,63 +320,26 @@ object Expectations {
     val freshes = checks.collect { case c: Freshness => c }
     val uniques = checks.collect { case c: UniqueKey => c }
     val drifts = checks.collect { case c: DriftCheck => c }
-    // When exactly one key is checked and every other aggregate
-    // recombines exactly under regrouping (plain/conditional long sums
-    // and max — i.e. RowCheck and Freshness; NOT the KLL sketch a
-    // QuantileBandDrift carries, and drift checks are left on the
-    // single-level path wholesale), aggregate in TWO LEVELS: group at the
-    // key, then fold the per-key partials — the distinct count becomes
-    // "number of groups", same longs. Neither path plans an Expand for
-    // one key (Spark plans a single distinct group without one; two keys
-    // do plan one — ExpectationsSpec pins both), and dq_check plans the
-    // same exchanges on either path.
-    val twoLevel = uniques.size == 1 && checks.forall {
-      // RefIntegrity runs as its own anti-join report either way, so
-      // it neither needs nor blocks the two-level aggregation
-      case _: RowCheck | _: UniqueKey | _: Freshness | _: RefIntegrity => true
-      case _ => false
-    }
+    // ONE aggregation over df carries every scalar check AND every drift
+    // check's today-side metrics (a Slice baseline's aggregates fold in
+    // too); each materialized baseline joins in as a broadcast one-row
+    // aggregate. Spark plans a single distinct group without an Expand;
+    // two UniqueKeys plan one (ExpectationsSpec pins both).
     val scalarReport =
       if (checks.forall(_.isInstanceOf[RefIntegrity])) None
-      else if (twoLevel) {
-        val key = uniques.head
-        val lvl1 =
-          rowChecks.zipWithIndex.map { case (c, i) =>
-            sum(when(c.violated, 1L).otherwise(0L)).as(s"p_r$i") } ++
-          freshes.zipWithIndex.map { case (c, i) =>
-            max(col(c.tsCol)).as(s"p_f$i") }
-        val grouped = df.groupBy(key.columns.map(col): _*)
-          .agg(count(lit(1)).as("p_k"), lvl1: _*)
-        // level 2 recombines exactly: sums of long sums, max of maxes;
-        // an empty table leaves every sum NULL → the same coalesces as
-        // the single-level path (0 violations; stale freshness)
-        Some(report(a => grouped.agg(a.head, a.tail: _*),
-          rowChecks.zipWithIndex.map { case (c, i) =>
-            c.name -> coalesce(sum(col(s"p_r$i")), lit(0L)) } ++
-          Seq(key.name ->
-            (coalesce(sum(col("p_k")), lit(0L)) - count(lit(1)))) ++
-          freshes.zipWithIndex.map { case (c, i) =>
-            c.name -> c.violations(max(col(s"p_f$i"))) },
-          Nil))
-      } else {
-        // ONE aggregation over df carries every scalar check AND every
-        // drift check's today-side metrics (a Slice baseline's aggregates
-        // fold in too); each materialized baseline joins in as a
-        // broadcast one-row aggregate.
-        Some(report(a => df.agg(a.head, a.tail: _*),
-          rowChecks.map { c =>
-            // sum over zero rows is NULL — coalesce so an empty table
-            // reports 0 violations / pass=true instead of a NULL the
-            // gate would skip
-            c.name -> coalesce(sum(when(c.violated, 1L).otherwise(0L)), lit(0L))
-          } ++
-          freshes.map(c => c.name -> c.violations(max(col(c.tsCol)))) ++
-          uniques.map { c =>
-            c.name -> (count(lit(1)) -
-              countDistinct(struct(c.columns.map(col): _*)))
-          },
-          drifts))
-      }
+      else Some(report(df,
+        rowChecks.map { c =>
+          // sum over zero rows is NULL — coalesce so an empty table
+          // reports 0 violations / pass=true instead of a NULL the gate
+          // would skip
+          c.name -> coalesce(sum(when(c.violated, 1L).otherwise(0L)), lit(0L))
+        } ++
+        freshes.map(c => c.name -> c.violations(max(col(c.tsCol)))) ++
+        uniques.map { c =>
+          c.name -> (count(lit(1)) -
+            countDistinct(struct(c.columns.map(col): _*)))
+        },
+        drifts))
     val refReports = checks.collect { case c: RefIntegrity =>
       df.select(col(c.column)).where(col(c.column).isNotNull)
         .join(c.ref.select(col(c.refColumn).as(c.column)).distinct(),
@@ -389,19 +352,19 @@ object Expectations {
       .orderBy("check")
   }
 
-  /** The `(check, violations)` rows of one aggregation: `aggregate` runs
-    * every `scalar` violation count plus each drift's today-side
-    * aggregates (and a [[Slice]] baseline's); each materialized baseline
-    * joins in as a one-row aggregate; one `stack` unpivots the verdicts. */
-  private def report(aggregate: Seq[Column] => DataFrame,
+  /** The `(check, violations)` rows of one aggregation over `df`: every
+    * `scalar` violation count plus each drift's today-side aggregates
+    * (and a [[Slice]] baseline's); each materialized baseline joins in as
+    * a one-row aggregate; one `stack` unpivots the verdicts. */
+  private def report(df: DataFrame,
                      scalar: Seq[(String, Column)],
                      drifts: Seq[DriftCheck]): DataFrame = {
     val prefixed = drifts.zipWithIndex.map { case (c, i) => (c, s"_d$i") }
-    val row = aggregate(
-      scalar.zipWithIndex.map { case ((_, a), i) => a.as(s"c$i") } ++
+    val aggs = scalar.zipWithIndex.map { case ((_, a), i) => a.as(s"c$i") } ++
       prefixed.flatMap { case (c, p) =>
         c.todayAggs(p) ++ (if (c.baselineRelation.isEmpty) c.baselineAggs(p) else Nil)
-      })
+      }
+    val row = df.agg(aggs.head, aggs.tail: _*)
     val joined = prefixed.foldLeft(row) { case (acc, (c, p)) =>
       c.baselineRelation.fold(acc) { b =>
         val bAggs = c.baselineAggs(p)

@@ -968,7 +968,7 @@ object ExtraQueries {
   private val versionedFixtureCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (String, String)]
 
-  private[graft] def versionedFixture(s: SparkSession, dir: String): (String, String) =
+  private def versionedFixture(s: SparkSession, dir: String): (String, String) =
     versionedFixtureCache.getOrElseUpdate((s, dir), {
       val root = java.nio.file.Files.createTempDirectory("graft-vtt").toString
       val (path, idx) = (s"$root/t", s"$root/t/_stats_v")

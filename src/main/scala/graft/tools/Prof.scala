@@ -1,35 +1,50 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import graft.{Graft, SparkEntry}
+import graft.obs.{Obs, Work}
+import graft.queries.Fixtures
 
-import graft.operators.Dedup
-import graft.functions.TextFunctions._
-
-/** Dev profiling: time each dedup pipeline stage in isolation. */
+/** Per-job profile of gate queries, read from [[graft.obs.Obs]].
+  *
+  * Usage: runMain graft.tools.Prof <sfDir> <query1> [query2 ...]
+  *
+  * Each query is built and counted once to warm it, then built and
+  * counted again under [[Obs.measure]]. The build (driver-side
+  * construction, including the eager jobs an operator runs while
+  * building) and the execution (`count()`, the action [[graft.Bench]]
+  * times) each print their wall time, their job count and one line per
+  * job: stages, tasks, wall time and call site. The session is shaped like
+  * the bench's: local[$SPARK_GRAFT_CPUS], as many shuffle partitions, the
+  * Graft extensions.
+  */
 object Prof {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    require(args.length >= 2, "usage: Prof <sfDir> <query...>")
+    val (sfDir, names) = (args(0), args.drop(1).toSeq)
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Graft.session(master = s"local[$cpus]", shufflePartitions = cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-
-    def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = f
-      println(f"${(System.nanoTime() - t0) / 1e9}%7.2fs  $name ($n rows)")
+    def show(phase: String, w: Work): Unit = {
+      println(f"  $phase%-5s ${w.wallMs / 1e3}%8.3f s ${w.jobs.size}%4d jobs")
+      w.jobs.foreach { j =>
+        println(f"    job ${j.id}%-5d ${j.stages}%3d stages ${j.tasks}%5d tasks " +
+          f"${j.wallMs / 1e3}%8.3f s  ${j.callSite}")
+      }
     }
-
-    time("docs count")(docs.count())
-    time("normWords")(docs.select(normWords(col("text")).as("w")).selectExpr("sum(size(w))").head().getLong(0))
-    time("shingles")(docs.select(shingles(normWords(col("text")), 3).as("s")).selectExpr("sum(size(s))").head().getLong(0))
-    time("sigs (fused)")(Dedup.minhashSignatures(docs, "doc_id", "text").count())
-    time("sigs again")(Dedup.minhashSignatures(docs, "doc_id", "text").count())
-    time("bands")(Dedup.lshBands(Dedup.minhashSignatures(docs, "doc_id", "text"), "doc_id").count())
-    time("candidates")(Dedup.minhashCandidates(docs, "doc_id", "text").count())
-    time("ngram")(Dedup.ngramJaccard(docs, "doc_id", "text", 0.5).count())
+    names.foreach { name =>
+      val query = SparkEntry.queries(name)
+      query(spark, sfDir).count()
+      Fixtures.reapTransients(spark)
+      val (df, build) = Obs.measure(spark)(query(spark, sfDir))
+      val (rows, exec) = Obs.measure(spark)(df.count())
+      println(s"$name: $rows rows")
+      show("build", build)
+      show("exec", exec)
+      Fixtures.reapTransients(spark)
+    }
+    Fixtures.clear()
     spark.stop()
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.obs.Obs
 import graft.sources.StatsIndex
 
 /** Time travel + change data feed over the versioned manifest
@@ -229,41 +230,18 @@ class ChangeFeedSpec extends SparkSpec {
     val g2 = Upsert.mergeIntoVersioned(path,
       Seq((2L, "2024-01-01", 99.0)).toDF("order_id", "day", "amount"),
       Seq("order_id"), "day", idx)
-    // count driver ACTIONS (SQL executions), not scheduler jobs — AQE
-    // legitimately splits one query into several stage-jobs
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(
-          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-            if s.rootExecutionId.forall(_ == s.executionId) =>
-          jobs.incrementAndGet(): Unit
-        case _ => ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val feed = ChangeFeed.between(spark, path, idx, g1, g2,
-        Seq("order_id"), "day")
-      // listener delivery is async: wait until the count is stable
-      var last = -1
-      var stable = 0
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val now = jobs.get()
-        stable = if (now == last) stable + 1 else 0
-        last = now
-      }
-      val constructionJobs = jobs.get()
-      // the fused pass is the ONLY action the hop construction may run —
-      // a regression back to per-step actions (tuple collect, emptiness
-      // probe, per-side index collects) shows up as extra jobs here
-      assert(constructionJobs == 1,
-        s"betweenCols construction ran $constructionJobs SQL executions, expected 1")
-      // and the feed itself still answers (executed lazily by the caller)
-      assert(feed.where(col("op") === "update").count() == 1)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // count driver ACTIONS (root SQL executions), not scheduler jobs —
+    // AQE legitimately splits one query into several stage-jobs
+    val (feed, work) = Obs.measure(spark)(ChangeFeed.between(spark, path, idx,
+      g1, g2, Seq("order_id"), "day"))
+    val constructionJobs = work.executions.size
+    // the fused pass is the ONLY action the hop construction may run —
+    // a regression back to per-step actions (tuple collect, emptiness
+    // probe, per-side index collects) shows up as extra jobs here
+    assert(constructionJobs == 1,
+      s"betweenCols construction ran $constructionJobs SQL executions, expected 1")
+    // and the feed itself still answers (executed lazily by the caller)
+    assert(feed.where(col("op") === "update").count() == 1)
   }
 
   test("wide hop (1000+ touched partitions): restriction is a broadcast tuple join, never an N-term OR; answers unchanged") {

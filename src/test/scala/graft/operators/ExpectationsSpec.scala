@@ -287,11 +287,11 @@ class ExpectationsSpec extends SparkSpec {
     }
   }
 
-  // ── two-level UniqueKey path (no-Expand twin) ───────────────────────
+  // ── UniqueKey counts next to other checks in the one aggregation ────
 
   test("two-level unique path == hand counts with mixed checks, incl. empty table") {
-    // eligible shape (one UniqueKey + row checks + freshness + ref):
-    // duplicates, null keys, and violations all counted as before
+    // one UniqueKey + row checks + ref: duplicates, null keys, and
+    // violations all counted
     val rows = Expectations.run(df, Seq(
         UniqueKey(Seq("k", "line")),
         NotNull("k"),
@@ -309,7 +309,7 @@ class ExpectationsSpec extends SparkSpec {
         Seq(UniqueKey(Seq("k")), NotNull("k")))
       .as[(String, Long, Boolean)].collect().toList
     assert(er == List(("not_null(k)", 0L, true), ("unique(k)", 0L, true)))
-    // two UniqueKeys stay on the single-aggregation path — same counts.
+    // two UniqueKeys in one aggregation — same counts.
     // k = {1, 1, 2, NULL, 9}: 5 rows − 4 distinct struct(k) = 1 (a NULL
     // key is one distinct key, as in unique(k,line) above)
     val two = Expectations.run(df,

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.obs.Obs
 import graft.sources.{IndexedScan, StatsIndex}
 
 /** Compaction as a generation commit ([[Compaction.compactVersioned]]):
@@ -103,8 +104,9 @@ class VersionedCompactionSpec extends SparkSpec {
       .as[(Long, String, Double)].collect().toSet
     assert(read() == rows.toSet)
 
-    val (g2, plans) = sqlPlansOf(Compaction.compactVersioned(spark, path,
-      idx, "day", targetBytes = 1L << 30, minFiles = 2))
+    val (g2, work) = Obs.measure(spark)(Compaction.compactVersioned(spark,
+      path, idx, "day", targetBytes = 1L << 30, minFiles = 2))
+    val plans = work.executions.map(_.plan)
     assert(g2.contains(g1 + 1))
     assert(plans.exists(_.contains("LeftAnti")),
       s"no anti-join survivor plan among:\n${plans.mkString("\n")}")

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions.{col, to_date}
 
 import graft.SparkSpec
+import graft.obs.Obs
 
 class PipelineSpec extends SparkSpec {
 
@@ -517,43 +518,6 @@ class PipelineSpec extends SparkSpec {
       == wantCA)
   }
 
-  /** Spark jobs submitted from this thread while `f` runs. Delivery is
-    * asynchronous, so a marker job submitted afterwards is waited for:
-    * the listener bus delivers in order, so once the marker's end
-    * arrives every earlier job start has been counted. */
-  private def jobsOf[T](f: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-      SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val scopeProp = "graft.spec.jobScope"
-    val counted = new java.util.concurrent.atomic.AtomicInteger(0)
-    val markerId = new java.util.concurrent.atomic.AtomicInteger(-1)
-    val markerDone = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(scopeProp)) match {
-          case Some("measured") => counted.incrementAndGet(): Unit
-          case Some("marker") => markerId.set(e.jobId)
-          case _ => ()
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == markerId.get()) markerDone.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(scopeProp, "measured")
-      val out = f
-      sc.setLocalProperty(scopeProp, "marker")
-      spark.range(1).collect()
-      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus never delivered the marker job")
-      (out, counted.get())
-    } finally {
-      sc.setLocalProperty(scopeProp, null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("StarPipeline.runDay stays within its Spark-jobs ceiling") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft-wh-jobs").toString
@@ -563,7 +527,9 @@ class PipelineSpec extends SparkSpec {
     // day 1 builds the dimensions and the first generations; day 2 is
     // the steady-state day: every versioned write has a base generation
     assert(StarPipeline.runDay(spark, sf001, wh, days.head).succeeded)
-    val (report, jobs) = jobsOf(StarPipeline.runDay(spark, sf001, wh, days(1)))
+    val (report, work) =
+      Obs.measure(spark)(StarPipeline.runDay(spark, sf001, wh, days(1)))
+    val jobs = work.jobs.size
     assert(report.succeeded, s"${report.statuses}")
     // each versioned partition replace (fact, sales_summary) evaluates its
     // frame once, by the staged write; a second pass over the frame (an

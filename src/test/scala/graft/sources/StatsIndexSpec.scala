@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
+import graft.obs.Obs
 import graft.operators.ZOrder
 
 /** [[StatsIndex]]: footer-derived per-file stats must prune files a
@@ -637,8 +638,9 @@ class StatsIndexSpec extends SparkSpec {
       .repartition(1).write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("p").parquet(path)
-    val (_, plans) = sqlPlansOf(StatsIndex.replacePartitions(spark, idx,
-      (0 until wide).map(i => f"$path/p=p$i%03d")))
+    val (_, work) = Obs.measure(spark)(StatsIndex.replacePartitions(spark,
+      idx, (0 until wide).map(i => f"$path/p=p$i%03d")))
+    val plans = work.executions.map(_.plan)
     assert(plans.exists(_.contains("LeftAnti")),
       s"no anti-join survivor plan among:\n${plans.mkString("\n")}")
     assert(!plans.exists(_.contains("StartsWith")))
