@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   *    a group's value is a function of exactly one date's fact rows.
   *    [[salesSummaryRefresh]] keeps that contract (recompute ONLY the
   *    touched dates from the date-pruned fact, splice over the previous
-  *    summary) and [[writeSalesSummaryRefresh]] lands it as a dynamic
-  *    partition overwrite — untouched date partitions are never rewritten,
-  *    or even read.
+  *    summary) and [[refreshSalesSummaryVersioned]] lands it as a
+  *    partition-grain generation commit — untouched date partitions are
+  *    never rewritten, or even read.
   *
   *  - `sql/datamart/sales/customer_analytics.sql:5-7` deletes the WHOLE
   *    table and rescans all of history every day ("since this is a full
@@ -30,10 +30,13 @@ import org.apache.spark.sql.functions._
   *    ([[orderState]]/[[mergeState]]): every output column of
   *    `customer_analytics` is derivable from (customer, order) →
   *    (order_date, order_net) — min/max dates, count of orders, sum of
-  *    net — so a persisted state of one row per order absorbs a delta
-  *    with one delta-sized aggregation plus a merge keyed like the state,
-  *    and [[customerAnalyticsFromState]] derives the exact full output
-  *    without ever rescanning the fact.
+  *    net — so a state of one row per order absorbs a delta with one
+  *    delta-sized aggregation plus a merge keyed like the state, and
+  *    [[customerAnalyticsFromState]] derives the exact full output
+  *    without ever rescanning the fact. The persisted, replay-safe form
+  *    is a log of per-batch states under `_batch_id`
+  *    ([[graft.streaming.DatamartStream]]) or `_run_date`
+  *    ([[graft.pipeline.StarPipeline.incrementalTasks]]).
   *
   * Why ORDER grain and not per-customer running totals: `total_orders` is
   * `count(DISTINCT order_id)`, which per-customer running sums get wrong
@@ -56,7 +59,10 @@ object DatamartIncr {
     * (customer_sk, order_id) with the order's date and its net-amount
     * partial sum over the delta's rows. One delta-sized keyed
     * aggregation — map-side combine does most of the work since an
-    * order's lines co-arrive in practice. */
+    * order's lines co-arrive in practice. The same aggregation folds
+    * order-grain states (min/sum recombine), so it is also the merge:
+    * [[mergeState]], the landed-log readers and the log compaction all
+    * call it. */
   def orderState(factDelta: DataFrame): DataFrame =
     factDelta.groupBy(col("customer_sk"), col("order_id"))
       .agg(min(col("order_date")).as("order_date"),
@@ -68,10 +74,7 @@ object DatamartIncr {
     * constant per order (an order has one date), min just makes the
     * merge total. */
   def mergeState(prev: DataFrame, deltaState: DataFrame): DataFrame =
-    prev.unionByName(deltaState)
-      .groupBy(col("customer_sk"), col("order_id"))
-      .agg(min(col("order_date")).as("order_date"),
-           sum(col("net_amount")).as("net_amount"))
+    orderState(prev.unionByName(deltaState))
 
   /** The full `customer_analytics` output derived from merged state —
     * identical contract to [[Datamart.customerAnalytics]] (it ends in the
@@ -122,43 +125,14 @@ object DatamartIncr {
     factDelta.select(col("order_date").cast("string"))
       .distinct().collect().map(_.getString(0)).toSeq
 
-  // ---------------------------------------------------------------------
-  // Persisted maintenance (the ETL loop's disk form)
-  // ---------------------------------------------------------------------
-
-  /** Land a summary partitioned by `date` (first build, or a full
-    * rebuild). */
-  def writeSalesSummary(summary: DataFrame, path: String): Unit =
-    summary.write.mode("overwrite").partitionBy("date").parquet(path)
-
   /** Refresh the persisted summary for `touched` dates only: recompute
-    * those dates from the date-pruned fact and dynamic-overwrite exactly
-    * their partitions. Untouched partitions are not read, not rewritten —
-    * their files stay byte-identical (spec-pinned). */
-  def refreshSalesSummaryAt(summaryPath: String, fullFact: DataFrame,
-                            dimPart: DataFrame, dimDates: DataFrame,
-                            touched: Seq[String]): Unit = {
-    require(touched.nonEmpty, "refreshSalesSummaryAt: no touched dates")
-    val lits = touched.map(d => lit(d).cast("date"))
-    Datamart.salesSummary(
-        fullFact.where(col("order_date").isin(lits: _*)), dimPart, dimDates)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("date")
-      .parquet(summaryPath)
-  }
-
-  /** Read the persisted summary back with `date` restored to a DATE
-    * column (partition values read back from paths are strings). */
-  def readSalesSummary(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).withColumn("date", col("date").cast("date"))
-
-  /** [[refreshSalesSummaryAt]] committed as a GENERATION
-    * ([[Upsert.replacePartitionsVersioned]]) instead of an in-place
-    * dynamic overwrite — a concurrent reader pinned to the previous
-    * generation reads a consistent snapshot THROUGH the refresh, the
-    * publish-window race the in-place flow leaves open. Returns the
-    * committed generation. */
+    * those dates from the date-pruned fact and commit exactly their
+    * `date=` partitions as a GENERATION
+    * ([[Upsert.replacePartitionsVersioned]]). Untouched partitions are
+    * not read or rewritten — the new generation names their files
+    * unchanged (spec-pinned) — and a concurrent reader pinned to the
+    * previous generation reads a consistent snapshot THROUGH the
+    * refresh. Returns the committed generation. */
   def refreshSalesSummaryVersioned(summaryPath: String, indexRoot: String,
                                    fullFact: DataFrame, dimPart: DataFrame,
                                    dimDates: DataFrame,
@@ -178,55 +152,4 @@ object DatamartIncr {
                                 indexRoot: String): DataFrame =
     graft.sources.IndexedScan.readIndexedVersioned(spark, path, indexRoot)
       .withColumn("date", col("date").cast("date"))
-
-  /** Key-hash bucket for persisted state layout — same discipline as
-    * [[graft.streaming.Scd2Stream.bucketOf]]. */
-  private def bucketOf(nBuckets: Int) =
-    pmod(xxhash64(col("customer_sk")), lit(nBuckets.toLong))
-
-  /** Land initial order-grain state bucketed by customer-key hash. */
-  def writeState(state: DataFrame, path: String, nBuckets: Int = 64): Unit = {
-    require(nBuckets >= 1, s"writeState: nBuckets=$nBuckets")
-    state.withColumn("_kb", bucketOf(nBuckets))
-      .write.mode("overwrite").partitionBy("_kb").parquet(path)
-  }
-
-  /** Apply one fact delta to the persisted state: aggregate the delta to
-    * order grain, merge with the existing rows of ONLY the touched
-    * buckets (partition-pruned read, pinned via localCheckpoint before
-    * the overwrite — the [[graft.sources.StatsIndex.replacePartitions]]
-    * read-then-replace discipline), and dynamic-overwrite those buckets.
-    * Cost per delta: one delta-sized aggregation + a merge over the
-    * touched buckets' state rows; buckets a delta never touches are not
-    * read or rewritten.
-    *
-    * NOT idempotent per delta — applying the same delta twice
-    * double-counts its net amounts (sums merge). The caller owns
-    * exactly-once delta delivery; under a replaying stream, land deltas
-    * under `_batch_id` ([[graft.streaming.DatamartStream]]) instead. */
-  def applyDelta(spark: SparkSession, statePath: String,
-                 factDelta: DataFrame, nBuckets: Int = 64): Seq[Long] = {
-    require(nBuckets >= 1, s"applyDelta: nBuckets=$nBuckets")
-    val delta = orderState(factDelta).withColumn("_kb", bucketOf(nBuckets))
-      .localCheckpoint() // pin: read before any overwrite below
-    val touched = delta.select(col("_kb")).distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
-    if (touched.isEmpty) return Nil
-    // _kb read back from partition paths is an INT — cast before use
-    val existing = spark.read.parquet(statePath)
-      .withColumn("_kb", col("_kb").cast("long"))
-      .where(col("_kb").isin(touched: _*))
-      .localCheckpoint()
-    mergeState(existing.drop("_kb"), delta.drop("_kb"))
-      .withColumn("_kb", bucketOf(nBuckets))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_kb")
-      .parquet(statePath)
-    touched
-  }
-
-  /** Read persisted state back, bucket column dropped. */
-  def readState(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop("_kb")
 }

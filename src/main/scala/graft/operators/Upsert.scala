@@ -403,7 +403,7 @@ object Upsert {
   }
 
   /** Dynamic partition overwrite as a GENERATION COMMIT — the versioned
-    * twin of `df.write.option("partitionOverwriteMode", "dynamic")`: the
+    * twin of [[graft.sources.RawLayer.appendPartitioned]]: the
     * frame's partitions replace their manifest slices WHOLESALE,
     * untouched partitions survive verbatim, nothing on disk is deleted,
     * and a reader pinned to the previous generation keeps a consistent

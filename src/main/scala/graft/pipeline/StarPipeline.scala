@@ -95,9 +95,9 @@ object StarPipeline {
     *    reference's delete-one-date-and-reinsert (`sales_summary
     *    .sql:5-10`) at partition grain, committed as a generation.
     *  - `datamart.customer_analytics`: the day's order-grain state lands
-    *    under its `_run_date=executionDate` partition (dynamic overwrite
-    *    ⇒ a retried date REPLACES its own landing — the idempotency
-    *    [[DatamartIncr.applyDelta]] explicitly does not give); the full
+    *    under its `_run_date=executionDate` partition
+    *    ([[RawLayer.appendPartitioned]] ⇒ a retried date REPLACES its own
+    *    landing instead of double-counting its sums); the full
     *    output then derives from the merged state log with the EXECUTION
     *    DATE as the analysis anchor — the reference's own convention
     *    ("using the execution date", `customer_analytics.sql:9`) — and
@@ -151,21 +151,16 @@ object StarPipeline {
 
     val custState = Dag.Task("datamart.customer_analytics_state",
         deps = Seq("core.fact_orders"))(() =>
-      DatamartIncr.orderState(
-          factRead().where(col("order_date") === day))
-        .withColumn("_run_date", day)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_run_date")
-        .parquet(s"$warehouse/datamart/customer_state"))
+      RawLayer.appendPartitioned(
+        DatamartIncr.orderState(factRead().where(col("order_date") === day))
+          .withColumn("_run_date", day),
+        s"$warehouse/datamart/customer_state", Seq("_run_date")))
 
     val custDay = Dag.Task("datamart.customer_analytics",
         deps = Seq("datamart.customer_analytics_state"))(() => {
-      val log = spark.read.parquet(s"$warehouse/datamart/customer_state")
-        .drop("_run_date")
-      val state = log.groupBy(col("customer_sk"), col("order_id"))
-        .agg(min(col("order_date")).as("order_date"),
-             sum(col("net_amount")).as("net_amount"))
+      val state = DatamartIncr.orderState(
+        spark.read.parquet(s"$warehouse/datamart/customer_state")
+          .drop("_run_date"))
       val anchor = spark.range(1).select(day.as("anchor_date"))
       RawLayer.truncateWrite(
         DatamartIncr.customerAnalyticsFromState(

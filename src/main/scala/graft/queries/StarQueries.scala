@@ -221,15 +221,6 @@ object StarQueries {
       .orderBy("customer_id")
   }
 
-  /** The maintained star read through its OWN index-aware scan: one
-    * month of the fact lands through [[graft.streaming.StarStream
-    * .applyFactBatch]] in two batches (the streaming star's
-    * `(order_date, _batch_id)` log layout, stats index maintained per
-    * landing), then the gate reads [[graft.streaming.StarStream
-    * .factOrders]] — a [[graft.sources.GraftFileIndex]]-served
-    * relation, date filter pruned at planning time — and aggregates.
-    * Oracled by the fact SQL verbatim over the same window: the
-    * landing + indexed-read machinery must be semantically invisible. */
   /** The versioned star warehouse the gate reads — one month of the
     * fact landed through [[graft.streaming.StarStream.applyFactBatch]]
     * in two batches (generation-committed `(order_date, _batch_id)`
@@ -260,6 +251,12 @@ object StarQueries {
       layout
     })
 
+  /** The maintained star read back through its newest generation:
+    * [[graft.streaming.StarStream.factOrders]] over [[starFixture]]'s
+    * warehouse — a [[graft.sources.GraftFileIndex]]-served relation, date
+    * filter pruned at planning time — aggregated per date. Oracled by the
+    * fact SQL verbatim over the same window: the landing + indexed-read
+    * machinery must be semantically invisible. */
   def starIndexedSales(s: SparkSession, dir: String): DataFrame = {
     val layout = starFixture(s, dir)
     // collect the bounded aggregate (≤ one row per date in the window)

@@ -11,16 +11,19 @@ object RawLayer {
     * replaces exactly the partitions present in this batch — re-running a
     * day never duplicates it (reference gets this from MERGE; we get it
     * from partition-grain overwrite, which at 100 TB is also the only
-    * affordable variant).
+    * affordable variant). The engine's one in-place partition-grain
+    * overwrite: the `_batch_id` logs of
+    * [[graft.streaming.StreamSink.writeBatch]] and the bucket, state and
+    * change-feed landings all write through here.
     */
   def appendPartitioned(df: DataFrame, outPath: String,
-                        partitionCol: String = "ingestion_date"): Unit = {
+                        partitionCols: Seq[String] = Seq("ingestion_date")): Unit = {
     // per-WRITE option, never a session conf: a session-level set would
     // silently turn every co-resident job's plain overwrite into
     // partition-grain overwrite for the rest of the application
     df.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol).parquet(outPath)
+      .partitionBy(partitionCols: _*).parquet(outPath)
   }
 
   /** WRITE_TRUNCATE: full refresh (datamart layer). */

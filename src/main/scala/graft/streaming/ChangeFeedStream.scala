@@ -140,10 +140,7 @@ object ChangeFeedStream {
     drain(spark, tablePath, indexRoot, keys, partitionCol, cursorPath,
         startAt) { (from, _, changes) =>
       import org.apache.spark.sql.functions.lit
-      changes.withColumn("_from_gen", lit(from))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_from_gen")
-        .parquet(outPath)
+      graft.sources.RawLayer.appendPartitioned(
+        changes.withColumn("_from_gen", lit(from)), outPath, Seq("_from_gen"))
     }
 }

@@ -1,20 +1,19 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.DatamartIncr
 
 /** Streaming customer-analytics maintenance — the replay-safe face of
-  * [[DatamartIncr]] (whose [[DatamartIncr.applyDelta]] is explicitly NOT
-  * idempotent: a replayed delta would double-count sums).
+  * [[DatamartIncr]]'s order-grain state (merging a replayed delta into
+  * one state in place would double-count its sums).
   *
   * Each micro-batch lands its OWN order-grain partial-aggregate state
-  * ([[DatamartIncr.orderState]]) under its `_batch_id` partition with
-  * dynamic overwrite — the [[SketchStream]] replay discipline: an
-  * at-least-once re-execution of a batch id REPLACES exactly its own
-  * partition, so the landed log is exactly-once. Order-grain states are
+  * ([[DatamartIncr.orderState]]) under its `_batch_id` partition
+  * ([[StreamSink.writeBatch]]): an at-least-once re-execution of a batch
+  * id REPLACES exactly its own partition, so the landed log is
+  * exactly-once. Order-grain states are
   * MERGEABLE (min/sum recombine per (customer, order)), so "current
   * analytics" is one keyed aggregation over the landed log + the shared
   * [[graft.operators.Datamart.finishAnalytics]] derivation — the fact
@@ -24,21 +23,16 @@ import graft.operators.DatamartIncr
   *
   * Log growth: one row per (order × batch that touched it) — in the
   * common case where an order's lines co-arrive, exactly one row per
-  * order, the same footprint as [[DatamartIncr]]'s merged state. */
+  * order, the same footprint as a merged state. */
 object DatamartStream {
 
   /** One micro-batch landing — exposed for direct replay testing.
-    * Empty batches short-circuit (the [[SalesSummaryStream.applyBatch]]
-    * guard): an empty FIRST batch must not create the landing path as a
-    * bare directory [[mergedState]]'s schema inference then chokes on. */
+    * Empty batches short-circuit: an empty FIRST batch must not create
+    * the landing path as a bare directory [[mergedState]]'s schema
+    * inference then chokes on. */
   def writeBatch(factBatch: DataFrame, batchId: Long, path: String): Unit = {
     if (factBatch.isEmpty) return
-    DatamartIncr.orderState(factBatch)
-      .withColumn("_batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id")
-      .parquet(path)
+    StreamSink.writeBatch(DatamartIncr.orderState(factBatch), batchId, path)
   }
 
   /** Start the maintenance stream over arriving fact rows. */
@@ -54,12 +48,8 @@ object DatamartStream {
 
   /** The whole-stream merged order-grain state from the landed log —
     * one keyed aggregation over ~|orders| rows. */
-  def mergedState(spark: SparkSession, path: String): DataFrame = {
-    val landed = spark.read.parquet(path).drop("_batch_id")
-    landed.groupBy(col("customer_sk"), col("order_id"))
-      .agg(min(col("order_date")).as("order_date"),
-           sum(col("net_amount")).as("net_amount"))
-  }
+  def mergedState(spark: SparkSession, path: String): DataFrame =
+    DatamartIncr.orderState(spark.read.parquet(path).drop("_batch_id"))
 
   /** Fold old `_batch_id` partitions into one merged-state snapshot,
     * keeping the `keepRecent` newest ids raw and replayable — bounds the
@@ -71,10 +61,7 @@ object DatamartStream {
     * crash-safety contract. Returns the folded batch ids. */
   def compact(spark: SparkSession, path: String,
               keepRecent: Int = 8): Seq[Long] =
-    BatchLog.compact(spark, path, keepRecent, folded =>
-      folded.groupBy(col("customer_sk"), col("order_id"))
-        .agg(min(col("order_date")).as("order_date"),
-             sum(col("net_amount")).as("net_amount")))
+    BatchLog.compact(spark, path, keepRecent, DatamartIncr.orderState)
 
   /** Current exact `customer_analytics` from the landed log — equals the
     * batch [[graft.operators.Datamart.customerAnalytics]] over everything

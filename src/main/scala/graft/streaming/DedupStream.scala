@@ -19,8 +19,8 @@ import graft.operators.{Dedup, DedupStore}
   * stays canonical.
   *
   * Replay (at-least-once `foreachBatch`) converges:
-  *  - verdicts land under a `_batch_id` partition with dynamic overwrite
-  *    (the [[StreamSink]] discipline) — a replay rewrites its own rows;
+  *  - verdicts land under a `_batch_id` partition
+  *    ([[StreamSink.writeBatch]]) — a replay rewrites its own rows;
   *  - the store append is [[StreamSink.writeBatch]] under
   *    `(band, _batch_id)` — same property;
   *  - a replayed batch that already half-landed sees its own ids in the
@@ -60,11 +60,7 @@ object DedupStream {
     val verdicts = DedupStore
       .incrementalVerdicts(batch, idCol, textCol, store, threshold)
       .localCheckpoint(false)
-    verdicts.withColumn("_batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id")
-      .parquet(verdictsPath)
+    StreamSink.writeBatch(verdicts, batchId, verdictsPath)
     val survivors = batch.join(
       verdicts.where(!col("is_dup")).select(col(idCol)), Seq(idCol))
     StreamSink.writeBatch(

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Expectations
@@ -31,11 +30,7 @@ object ExpectationsStream {
                  gate: Boolean): Unit = {
     // one evaluation feeds both the sink and the gate
     val report = Expectations.run(batch, checks).localCheckpoint(false)
-    report.withColumn("_batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id")
-      .parquet(reportPath)
+    StreamSink.writeBatch(report, batchId, reportPath)
     if (gate) Expectations.requirePass(report)
   }
 

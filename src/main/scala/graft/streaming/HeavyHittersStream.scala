@@ -37,10 +37,7 @@ object HeavyHittersStream {
     * ≤ cap-row summary, and lands it under `_batch_id`. */
   def writeBatch(batch: DataFrame, batchId: Long, path: String,
                  keyCol: String, support: Double): Unit = {
-    require(keyCol != "_batch_id",
-      "heavyHittersStream: '_batch_id' is the reserved replay-idempotency " +
-        "partition column and cannot be the key")
-    // empty-batch guard (the SalesSummaryStream.applyBatch discipline): an
+    // empty-batch guard (the DatamartStream.writeBatch discipline): an
     // empty first batch must not create the path as a bare directory that
     // mergedCandidates' schema inference then chokes on
     if (batch.isEmpty) return
@@ -48,11 +45,7 @@ object HeavyHittersStream {
     val keys = batch.select(col(keyCol))
     val summary = HeavyHitters.mergeToCap(
       HeavyHitters.mgSummaries(keys, keyCol, cap), keyCol, cap)
-    summary.withColumn("_batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id")
-      .parquet(path)
+    StreamSink.writeBatch(summary, batchId, path)
   }
 
   /** Start the maintenance stream. */

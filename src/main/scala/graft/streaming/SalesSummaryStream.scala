@@ -7,16 +7,27 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.DatamartIncr
 
 /** Continuous `sales_summary` maintenance — the streaming face of
-  * [[DatamartIncr.refreshSalesSummaryAt]], completing the reference's
-  * daily chain (`ingest → core → datamart`) as one always-on pipeline:
-  * fact rows arrive, and only their dates' summary partitions refresh.
+  * [[DatamartIncr.refreshSalesSummaryVersioned]], completing the
+  * reference's daily chain (`ingest → core → datamart`) as one always-on
+  * pipeline: fact rows arrive, and only their dates' summary partitions
+  * refresh.
+  *
+  * Both tables are VERSIONED: each landing and each summary refresh
+  * commits as an index generation
+  * ([[graft.operators.Upsert.replacePartitionsVersioned]]), so a reader
+  * that pinned the previous generation keeps reading its snapshot
+  * consistently THROUGH a concurrent day-republish (spec-pinned in
+  * StarStreamSpec), and a reader arriving after the commit sees exactly
+  * the new state. Both must be read through their manifests
+  * ([[readFactLog]], [[readSummary]]): replaced files stay on disk until
+  * [[graft.sources.StatsIndex.retire]], on the caller's schedule.
   *
   * Exactness under replay comes from TWO layered idempotencies, the
   * [[Scd2Stream]] argument:
   *
   *  1. the raw fact log is partitioned by `(order_date, _batch_id)` and
-  *     landed with dynamic overwrite — an at-least-once re-execution of
-  *     a batch id REPLACES exactly its own slice of each date it
+  *     each landing replaces exactly its own slices — an at-least-once
+  *     re-execution of a batch id REPLACES its own slice of each date it
   *     touched, so the log is exactly-once;
   *  2. the summary refresh is a DETERMINISTIC function of the log (a
   *     touched date recomputes wholesale from the date-pruned log — the
@@ -26,142 +37,62 @@ import graft.operators.DatamartIncr
   * Late data needs no watermark bargain here: a late row lands in its
   * own (old) date partition and that date simply recomputes — the
   * summary's groups are date-functional, so the recompute is exact at
-  * any lateness. Per batch the cost is one landing write plus a
+  * any lateness. Per batch the cost is one landing commit plus a
   * recompute of the touched dates' slices; dates the batch never names
-  * are not read or rewritten. */
+  * are not read or rewritten, and the date-pruned log read opens only
+  * the touched dates' files (the manifest IS the listing). */
 object SalesSummaryStream {
 
   /** One micro-batch apply — exposed for direct replay testing. Returns
     * the touched dates (empty batch → no-op). `dimPart`/`dimDates` are
-    * the broadcast-sized static dimensions the summary joins.
-    *
-    * With `factStatsPath`/`summaryStatsPath` set, the pipeline EATS ITS
-    * OWN INDEX DOG FOOD: each landing maintains a [[graft.sources
-    * .StatsIndex]] over exactly the partition directories it touched
-    * (one footer read per new file — the publish-delta discipline;
-    * first call over an unindexed log bootstraps with one full build),
-    * and the refresh's date-pruned read goes through
-    * [[graft.sources.IndexedScan]] — so listing the log is pure driver
-    * work and only the touched dates' files are ever opened. A replayed
-    * batch REPLACES its slice's files; `replacePartitions` drops the
-    * replaced rows with them. */
+    * the broadcast-sized static dimensions the summary joins;
+    * `factGens`/`summaryGens` are the two tables' manifest roots. */
   def applyBatch(factBatch: DataFrame, batchId: Long,
                  factLogPath: String, summaryPath: String,
                  dimPart: DataFrame, dimDates: DataFrame,
-                 factStatsPath: Option[String] = None,
-                 summaryStatsPath: Option[String] = None): Seq[String] = {
-    val spark = factBatch.sparkSession
-    val touched = DatamartIncr.touchedDates(factBatch)
-    if (touched.isEmpty) return Nil
-    factBatch.withColumn("_batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("order_date", "_batch_id")
-      .parquet(factLogPath)
-    factStatsPath.foreach { sp =>
-      maintainIndex(spark, factLogPath, sp,
-        touched.map(d => s"$factLogPath/order_date=$d/_batch_id=$batchId"))
-    }
-    // the refresh reads the LOG, not the batch: a replayed/late batch's
-    // date recomputes from everything ever landed for it — through the
-    // index-aware scan when the index is maintained (the date filter
-    // inside refreshSalesSummaryAt prunes files at planning time)
-    val fullFact = readFactLog(spark, factLogPath, factStatsPath)
-    DatamartIncr.refreshSalesSummaryAt(summaryPath, fullFact,
-      dimPart, dimDates, touched)
-    summaryStatsPath.foreach { sp =>
-      maintainIndex(spark, summaryPath, sp,
-        touched.map(d => s"$summaryPath/date=$d"))
-    }
-    touched
-  }
-
-  /** [[applyBatch]] on the VERSIONED manifest — each landing and each
-    * summary refresh commits as an index GENERATION
-    * ([[graft.operators.Upsert.replacePartitionsVersioned]]) instead of
-    * an in-place dynamic overwrite, closing the publish-window race the
-    * in-place flow leaves open: a reader that pinned the previous
-    * generation keeps reading its snapshot consistently THROUGH a
-    * concurrent day-republish (spec-pinned in StarStreamSpec), and a
-    * reader arriving after the commit sees exactly the new state. The
-    * same two layered idempotencies hold — the log is exactly-once per
-    * `(order_date, _batch_id)` slice (a replay re-replaces exactly
-    * itself), and the refresh is a deterministic function of the log.
-    * Retention is [[graft.sources.StatsIndex.retire]] on both tables,
-    * on the caller's schedule. */
-  def applyBatchVersioned(factBatch: DataFrame, batchId: Long,
-                          factLogPath: String, summaryPath: String,
-                          dimPart: DataFrame, dimDates: DataFrame,
-                          factGens: String, summaryGens: String): Seq[String] = {
+                 factGens: String, summaryGens: String): Seq[String] = {
     val spark = factBatch.sparkSession
     val touched = DatamartIncr.touchedDates(factBatch)
     if (touched.isEmpty) return Nil
     graft.operators.Upsert.replacePartitionsVersioned(factLogPath,
       factBatch.withColumn("_batch_id", lit(batchId)),
       Seq("order_date", "_batch_id"), factGens): Unit
+    // the refresh reads the LOG, not the batch: a replayed/late batch's
+    // date recomputes from everything ever landed for it
     DatamartIncr.refreshSalesSummaryVersioned(summaryPath, summaryGens,
-      readFactLogVersioned(spark, factLogPath, factGens),
+      readFactLog(spark, factLogPath, factGens),
       dimPart, dimDates, touched): Unit
     touched
   }
 
   /** The versioned fact log as a fact relation: the newest generation's
     * manifest IS the file listing (snapshot-isolated; replaced files on
-    * disk are invisible), date filters prune at planning time. */
-  def readFactLogVersioned(spark: SparkSession, factLogPath: String,
-                           factGens: String): DataFrame =
+    * disk are invisible), date filters prune at planning time.
+    * (`order_date` comes back from partition paths as a string; the
+    * cast restores it.) */
+  def readFactLog(spark: SparkSession, factLogPath: String,
+                  factGens: String): DataFrame =
     graft.sources.IndexedScan.readIndexedVersioned(spark, factLogPath, factGens)
       .drop("_batch_id")
       .withColumn("order_date", col("order_date").cast("date"))
-
-  /** The landed fact log as a fact relation — via [[graft.sources
-    * .IndexedScan]] when a maintained stats index exists at
-    * `statsPath`, the plain reader otherwise. (`order_date` comes back
-    * from partition paths as a string either way; cast restores it.) */
-  def readFactLog(spark: SparkSession, factLogPath: String,
-                  statsPath: Option[String] = None): DataFrame = {
-    val base = statsPath.filter(indexExists(spark, _)) match {
-      case Some(sp) => graft.sources.IndexedScan.readIndexed(spark, factLogPath, sp)
-      case None => spark.read.parquet(factLogPath)
-    }
-    base.drop("_batch_id")
-      .withColumn("order_date", col("order_date").cast("date"))
-  }
-
-  private def indexExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
-  /** Index maintenance for one landing: replace exactly the touched
-    * partition directories' rows (metadata-scale), bootstrapping with a
-    * full build the first time (an index covering only the latest
-    * touched dirs would make the REST of the table invisible to the
-    * index-aware scan — the manifest IS the table). */
-  private def maintainIndex(spark: SparkSession, tablePath: String,
-                            statsPath: String, touchedDirs: Seq[String]): Unit =
-    if (indexExists(spark, statsPath))
-      graft.sources.StatsIndex.replacePartitions(spark, statsPath, touchedDirs)
-    else
-      graft.sources.StatsIndex.save(
-        graft.sources.StatsIndex.build(spark, tablePath), statsPath)
 
   /** Start the maintenance stream over arriving fact rows. */
   def run(factStream: DataFrame, factLogPath: String, summaryPath: String,
           dimPart: DataFrame, dimDates: DataFrame,
           checkpointDir: String,
-          factStatsPath: Option[String] = None,
-          summaryStatsPath: Option[String] = None): StreamingQuery =
+          factGens: String, summaryGens: String): StreamingQuery =
     factStream.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         applyBatch(batch, batchId, factLogPath, summaryPath,
-          dimPart, dimDates, factStatsPath, summaryStatsPath): Unit
+          dimPart, dimDates, factGens, summaryGens): Unit
       }
       .start()
 
-  /** The maintained summary, partition values restored to typed form. */
-  def readSummary(spark: SparkSession, summaryPath: String): DataFrame =
-    DatamartIncr.readSalesSummary(spark, summaryPath)
+  /** The maintained summary, read through its newest generation,
+    * `date` restored to typed form. */
+  def readSummary(spark: SparkSession, summaryPath: String,
+                  summaryGens: String): DataFrame =
+    DatamartIncr.readSalesSummaryVersioned(spark, summaryPath, summaryGens)
 }

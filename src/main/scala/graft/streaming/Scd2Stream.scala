@@ -110,11 +110,7 @@ object Scd2Stream {
         .where(col("_kb").isin(touched.toSeq: _*))
         .drop("_batch_id")
       val rebuilt = Scd2.fromHistory(history, key, ts, tracked, tieBreak)
-      // per-write option, not a session conf (the StreamSink rationale)
-      rebuilt.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_kb")
-        .parquet(dimPath)
+      graft.sources.RawLayer.appendPartitioned(rebuilt, dimPath, Seq("_kb"))
       compaction.foreach { pol =>
         maybeCompact(spark, rawPath, dimPath, touched.toSeq,
           key, ts, tracked, tieBreak, pol)

@@ -1,15 +1,14 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.SketchStats
 
 /** Continuous sketch maintenance — the streaming face of
   * [[SketchStats]]: every micro-batch lands its per-group sketch rows
-  * (KB-scale) under its own `_batch_id` partition with dynamic
-  * partition overwrite, so an at-least-once replay rewrites EXACTLY its
+  * (KB-scale) under its own `_batch_id` partition
+  * ([[StreamSink.writeBatch]]), so an at-least-once replay rewrites EXACTLY its
   * own rows — the additive stats (`n_rows`, `sum_*`) stay exactly-once,
   * not just the union-idempotent HLL estimates. Monitoring questions
   * ("distinct urls so far", "did the p99 doc length move?") then read
@@ -30,12 +29,9 @@ object SketchStream {
     require(!keys.contains("_batch_id"),
       "sketchStream: '_batch_id' is the reserved replay-idempotency " +
         "partition column and cannot be a group key")
-    SketchStats.sketchBatch(batch, keys, distinctCols, sumCols, quantileCols)
-      .withColumn("_batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id")
-      .parquet(path)
+    StreamSink.writeBatch(
+      SketchStats.sketchBatch(batch, keys, distinctCols, sumCols, quantileCols),
+      batchId, path)
   }
 
   /** Start the maintenance stream. */

@@ -18,12 +18,13 @@ import graft.operators.DatamartIncr
   *    rebuild, optional ratio-triggered log compaction;
   *  - a **fact feed** (fact-grain rows, the [[graft.operators.FactBuild]]
   *    contract) maintaining `fact_orders` + both datamarts via
-  *    [[SalesSummaryStream]] (date-pruned summary refresh over the
-  *    landed fact log) and [[DatamartStream]] (order-grain mergeable
-  *    state landings, periodically folded by [[BatchLog.compact]]).
+  *    [[SalesSummaryStream]] (fact log and date-pruned summary refresh,
+  *    both committed as manifest generations) and [[DatamartStream]]
+  *    (order-grain mergeable state landings, periodically folded by
+  *    [[BatchLog.compact]]).
   *
-  * Every landing is replay-idempotent per batch id (dynamic partition
-  * overwrite of exactly that batch's slice), and every maintained table
+  * Every landing is replay-idempotent per batch id (it replaces exactly
+  * that batch's slice), and every maintained table
   * is a deterministic function of its landed log — so restart replay
   * CONVERGES instead of compounding, table for table (spec-pinned
   * against the batch [[graft.pipeline.StarPipeline]]).
@@ -59,9 +60,6 @@ object StarStream {
     /** Fact landing log, partitioned `(order_date, _batch_id)` — the log
       * IS the fact table: drop `_batch_id` and you have `fact_orders`. */
     val factOrders: String = s"$warehouse/core/fact_orders"
-    /** Legacy in-place stats index over the fact log ([[SalesSummaryStream
-      * .applyBatch]]); the versioned flow uses [[factGens]] instead. */
-    val factStats: String = s"$warehouse/core/fact_orders/_stats_index"
     /** VERSIONED manifest root over the fact log: every landing commits
       * an index generation ([[graft.operators.Upsert
       * .replacePartitionsVersioned]]), readers pin snapshots —
@@ -70,9 +68,6 @@ object StarStream {
       * files stay on disk until [[StarStream.retire]]). */
     val factGens: String = s"$warehouse/core/fact_orders/_stats_gens"
     val salesSummary: String = s"$warehouse/datamart/sales_summary"
-    /** Legacy in-place stats index over the summary; versioned flow
-      * uses [[summaryGens]]. */
-    val summaryStats: String = s"$warehouse/datamart/sales_summary/_stats_index"
     /** Versioned manifest root over the maintained summary. */
     val summaryGens: String = s"$warehouse/datamart/sales_summary/_stats_gens"
     /** Order-grain mergeable analytics state ([[DatamartStream]]). */
@@ -123,14 +118,14 @@ object StarStream {
 
   /** One fact micro-batch: fact-log landing + touched-date summary
     * refresh as VERSIONED generation commits ([[SalesSummaryStream
-    * .applyBatchVersioned]] — snapshot-isolated readers, no publish
-    * window), order-grain state landing ([[DatamartStream.writeBatch]]),
+    * .applyBatch]] — snapshot-isolated readers, no publish window),
+    * order-grain state landing ([[DatamartStream.writeBatch]]),
     * periodic state-log fold. Returns the touched dates. Exposed for
     * direct replay testing. */
   def applyFactBatch(batch: DataFrame, batchId: Long, layout: Layout,
                      dimPart: DataFrame, dimDates: DataFrame,
                      cfg: Config = Config()): Seq[String] = {
-    val touched = SalesSummaryStream.applyBatchVersioned(batch, batchId,
+    val touched = SalesSummaryStream.applyBatch(batch, batchId,
       layout.factOrders, layout.salesSummary, dimPart, dimDates,
       layout.factGens, layout.summaryGens)
     DatamartStream.writeBatch(batch, batchId, layout.customerState)
@@ -212,32 +207,15 @@ object StarStream {
     * read THROUGH the newest committed generation's manifest
     * (snapshot-isolated — a concurrent landing never disturbs a
     * constructed reader; date/measure filters prune files at planning
-    * time with no call-site plumbing). Falls back to the legacy
-    * in-place index, then the plain reader, for logs landed by the
-    * pre-versioned flow. */
+    * time with no call-site plumbing). */
   def factOrders(spark: SparkSession, layout: Layout): DataFrame =
-    if (graft.sources.StatsIndex.generations(spark, layout.factGens).nonEmpty)
-      SalesSummaryStream.readFactLogVersioned(spark, layout.factOrders,
-        layout.factGens)
-    else SalesSummaryStream.readFactLog(spark, layout.factOrders,
-      Some(layout.factStats))
+    SalesSummaryStream.readFactLog(spark, layout.factOrders, layout.factGens)
 
-  /** The maintained `sales_summary`, typed — same versioned-first read
-    * discipline as [[factOrders()]]. */
-  def salesSummary(spark: SparkSession, layout: Layout): DataFrame = {
-    if (graft.sources.StatsIndex.generations(spark, layout.summaryGens).nonEmpty)
-      graft.operators.DatamartIncr.readSalesSummaryVersioned(spark,
-        layout.salesSummary, layout.summaryGens)
-    else {
-      val p = new org.apache.hadoop.fs.Path(layout.summaryStats)
-      val hasIdx = p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-      if (hasIdx)
-        graft.sources.IndexedScan
-          .readIndexed(spark, layout.salesSummary, layout.summaryStats)
-          .withColumn("date", col("date").cast("date"))
-      else SalesSummaryStream.readSummary(spark, layout.salesSummary)
-    }
-  }
+  /** The maintained `sales_summary`, typed — read through its newest
+    * generation, like [[factOrders()]]. */
+  def salesSummary(spark: SparkSession, layout: Layout): DataFrame =
+    SalesSummaryStream.readSummary(spark, layout.salesSummary,
+      layout.summaryGens)
 
   /** Current `customer_analytics` — merged order-grain state joined to
     * the CURRENT streamed dim at read time (the sensor chain as

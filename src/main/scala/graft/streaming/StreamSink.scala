@@ -11,31 +11,27 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Spark's `foreachBatch` gives at-least-once batch delivery: after a
   * crash between "batch written" and "offsets committed", the SAME batch
   * id is re-executed on restart. Appending would duplicate it. Writing
-  * each micro-batch under `(partitionCol, _batch_id)` with dynamic
+  * each micro-batch under `(partitionCols..., _batch_id)` with dynamic
   * partition overwrite makes the replay rewrite exactly its own
   * partitions — exactly-once OUTPUT from at-least-once execution, with no
   * global commit log to coordinate at 100 TB/day (object-store rename per
-  * batch partition is the only metadata op). Readers prune on
-  * `partitionCol`; `_batch_id` subdirectories are transparent to them.
+  * batch partition is the only metadata op). Readers prune on the
+  * partition columns; `_batch_id` subdirectories are transparent to them.
+  * Every unversioned `_batch_id` log in the engine lands through
+  * [[writeBatch]].
   */
 object StreamSink {
 
-  /** One micro-batch landing — exposed for direct replay testing.
-    *
-    * `partitionOverwriteMode` is a per-WRITE option, not a session conf:
-    * setting it on the session would silently turn every co-resident batch
-    * job's plain `overwrite` into partition-grain overwrite for the rest
-    * of the application. */
+  /** One micro-batch landing under zero or more partition columns plus
+    * `_batch_id` — exposed for direct replay testing. */
   def writeBatch(batch: DataFrame, batchId: Long, outPath: String,
-                 partitionCol: String): Unit = {
+                 partitionCols: String*): Unit = {
     require(!batch.columns.contains("_batch_id"),
       "sink: batch already has a column named '_batch_id' — rename it; " +
         "'_batch_id' is the reserved replay-idempotency partition column")
-    batch.withColumn("_batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol, "_batch_id")
-      .parquet(outPath)
+    graft.sources.RawLayer.appendPartitioned(
+      batch.withColumn("_batch_id", lit(batchId)), outPath,
+      partitionCols :+ "_batch_id")
   }
 
   /** Start the stream: each micro-batch lands atomically-per-partition via

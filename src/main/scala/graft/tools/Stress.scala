@@ -445,35 +445,38 @@ object Stress {
         .fromTableSpan(fact, "order_date").localCheckpoint()
       val day = "1995-02-03"
 
-      // sales_summary: full rebuild vs one touched-date refresh
+      // sales_summary: full rebuild vs one touched-date refresh, both
+      // committed as manifest generations
+      val (sum, sumGens) = (s"$root/sum", s"$root/sum/_stats_gens")
+      val allDates = graft.operators.DatamartIncr.touchedDates(fact)
       var t0 = System.nanoTime()
-      graft.operators.DatamartIncr.writeSalesSummary(
-        graft.operators.Datamart.salesSummary(fact, dimP, dates), s"$root/sum")
+      graft.operators.DatamartIncr.refreshSalesSummaryVersioned(
+        sum, sumGens, fact, dimP, dates, allDates)
       val tFull = (System.nanoTime() - t0) / 1e9
       t0 = System.nanoTime()
-      graft.operators.DatamartIncr.refreshSalesSummaryAt(
-        s"$root/sum", fact, dimP, dates, Seq(day))
+      graft.operators.DatamartIncr.refreshSalesSummaryVersioned(
+        sum, sumGens, fact, dimP, dates, Seq(day))
       val tDay = (System.nanoTime() - t0) / 1e9
 
-      // customer_analytics state: full state build vs one-day applyDelta
+      // customer_analytics state: full-fact landing vs one-day landing in
+      // the `_batch_id` state log
+      val state = s"$root/state"
       t0 = System.nanoTime()
-      graft.operators.DatamartIncr.orderState(fact)
-        .withColumn("_kb", pmod(xxhash64(col("customer_sk")), lit(64L)))
-        .write.mode("overwrite").partitionBy("_kb").parquet(s"$root/state")
+      graft.streaming.DatamartStream.writeBatch(fact, 0L, state)
       val tState = (System.nanoTime() - t0) / 1e9
       val dayRows = fact.where(col("order_date") === lit(day).cast("date"))
       t0 = System.nanoTime()
-      val touched = graft.operators.DatamartIncr.applyDelta(
-        spark, s"$root/state", dayRows)
+      graft.streaming.DatamartStream.writeBatch(dayRows, 1L, state)
       val tDelta = (System.nanoTime() - t0) / 1e9
-      // idempotent convergence check rides along: re-applying the same
-      // day leaves the derived analytics unchanged at order grain
-      val n1 = graft.operators.DatamartIncr.readState(spark, s"$root/state").count()
-      graft.operators.DatamartIncr.applyDelta(spark, s"$root/state", dayRows)
+      // replay convergence rides along: re-landing the same batch id
+      // replaces its slice, so the merged state is unchanged
+      val n1 = graft.streaming.DatamartStream.mergedState(spark, state).count()
+      graft.streaming.DatamartStream.writeBatch(dayRows, 1L, state)
+      val n2 = graft.streaming.DatamartStream.mergedState(spark, state).count()
+      assert(n1 == n2, s"replayed state landing changed the state: $n1 -> $n2")
       println(f"   sales_summary: full $tFull%.1fs vs one-day refresh $tDay%.1fs " +
-        f"(${tFull / tDay}%.1fx); analytics state: full $tState%.1fs vs " +
-        f"one-day applyDelta $tDelta%.1fs, ${touched.size} buckets touched, " +
-        f"$n1 state rows")
+        f"(${tFull / tDay}%.1fx); analytics state: full landing $tState%.1fs vs " +
+        f"one-day landing $tDelta%.1fs, $n1 merged state rows")
     }
     time("bloom-fed mergeInto: 2M-row table, 6-key point-update batch") {
       // the point-update MERGE regime: min/max can prune nothing (keys

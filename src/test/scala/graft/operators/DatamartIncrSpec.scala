@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -9,8 +9,8 @@ import graft.SparkSpec
 
 /** [[DatamartIncr]]: incremental maintenance must equal the batch rebuild
   * EXACTLY — under adversarial delta splits (an order's lines split across
-  * deltas), on real sf0.001 fact data, and through the persisted bucketed
-  * state / partitioned summary paths where untouched partitions must stay
+  * deltas), on real sf0.001 fact data, and through the versioned
+  * summary refresh where untouched partitions' files must stay
   * byte-identical. */
 class DatamartIncrSpec extends SparkSpec {
   import spark.implicits._
@@ -125,6 +125,7 @@ class DatamartIncrSpec extends SparkSpec {
 
   test("persisted summary refresh: only touched date partitions rewritten, byte-identical rest") {
     val path = Files.createTempDirectory("graft-dmincr-sum").toString + "/sum"
+    val gens = s"$path/_stats_gens"
     val fact = factOf(factRows)
     val dimP = Seq((0, "CAT")).toDF("part_sk", "category")
       .withColumn("is_current", lit(true))
@@ -132,15 +133,16 @@ class DatamartIncrSpec extends SparkSpec {
       .withColumn("quantity", lit(1.0))
     val dates = DateDim.fromTableSpan(
       factP.select(col("order_date").as("d")), "d")
-    DatamartIncr.writeSalesSummary(
-      Datamart.salesSummary(factP, dimP, dates), path)
-    def partFiles(date: String) = {
-      val dir = Paths.get(path, s"date=$date")
-      if (!java.nio.file.Files.exists(dir)) Map.empty[String, Long]
-      else java.nio.file.Files.list(dir).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet"))
-        .map(f => f -> java.nio.file.Files.getLastModifiedTime(
-          Paths.get(f)).toMillis).toMap
+    DatamartIncr.refreshSalesSummaryVersioned(path, gens, factP, dimP, dates,
+      DatamartIncr.touchedDates(factP))
+    // the newest generation's files for one date, with their mtimes
+    def partFiles(date: String): Map[String, Long] = {
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      graft.sources.StatsIndex.loadLatest(spark, gens).select("file")
+        .as[String].collect().filter(_.contains(s"/date=$date/"))
+        .map(f => f -> fs.getFileStatus(new org.apache.hadoop.fs.Path(f))
+          .getModificationTime).toMap
     }
     val before = partFiles("2023-06-01")
     assert(before.nonEmpty)
@@ -148,7 +150,7 @@ class DatamartIncrSpec extends SparkSpec {
     val late = factOf(Seq((1, "2024-06-20", 105L, 111.0)))
     val newFull = factP.unionByName(
       late.withColumn("part_sk", lit(0)).withColumn("quantity", lit(1.0)))
-    DatamartIncr.refreshSalesSummaryAt(path, newFull, dimP, dates,
+    DatamartIncr.refreshSalesSummaryVersioned(path, gens, newFull, dimP, dates,
       DatamartIncr.touchedDates(late))
     assert(partFiles("2023-06-01") == before,
       "untouched date partition was rewritten")
@@ -156,39 +158,8 @@ class DatamartIncrSpec extends SparkSpec {
       .select(col("date").cast("string"), col("product_category"),
         col("total_sales"), col("total_orders"))
       .as[(String, String, Double, Long)].collect().toSet
-    assert(rows(DatamartIncr.readSalesSummary(spark, path)) ==
+    assert(rows(DatamartIncr.readSalesSummaryVersioned(spark, path, gens)) ==
       rows(Datamart.salesSummary(newFull, dimP, dates)))
-  }
-
-  test("applyDelta: bucketed persisted state, untouched buckets not rewritten") {
-    val path = Files.createTempDirectory("graft-dmincr-state").toString + "/st"
-    val nB = 8
-    val d1 = factOf(factRows.take(3))
-    DatamartIncr.writeState(DatamartIncr.orderState(d1), path, nB)
-    def bucketFiles(): Map[String, Long] = {
-      val stream = java.nio.file.Files.walk(Paths.get(path))
-      try stream.toArray.map(_.toString).filter(_.endsWith(".parquet"))
-        .map(f => f -> java.nio.file.Files.getLastModifiedTime(
-          Paths.get(f)).toMillis).toMap
-      finally stream.close()
-    }
-    val before = bucketFiles()
-    // delta touching ONLY customer 3 → exactly one bucket rewritten
-    val touched = DatamartIncr.applyDelta(spark,
-      path, factOf(factRows.drop(4)), nB)
-    assert(touched.length == 1)
-    val after = bucketFiles()
-    val keptBefore = before.filterNot(_._1.contains(s"_kb=${touched.head}"))
-    assert(keptBefore.forall { case (f, t) => after.get(f).contains(t) },
-      "untouched bucket files changed")
-    // second delta (bob) then derive == batch over everything
-    DatamartIncr.applyDelta(spark, path, factOf(factRows.slice(3, 4)), nB)
-    val anchor = spark.range(1)
-      .select(lit("2024-07-01").cast("date").as("anchor_date"))
-    val got = analyticsRows(DatamartIncr.customerAnalyticsFromState(
-      DatamartIncr.readState(spark, path), dim, anchor))
-    assert(got == analyticsRows(
-      Datamart.customerAnalytics(factOf(factRows), dim, "2024-07-01")))
   }
 
   test("refresh guards: empty touched dates refused") {

@@ -498,7 +498,7 @@ class PipelineSpec extends SparkSpec {
 
     // Airflow-retry the MIDDLE day: every output identical afterwards —
     // the state landing replaced its own _run_date partition instead of
-    // double-counting (the idempotency applyDelta alone does not give)
+    // double-counting
     val stateN = spark.read.parquet(s"$wh/datamart/customer_state").count()
     // pin a reader across the retry: the republish must not disturb it
     val pinned = DatamartIncr.readSalesSummaryVersioned(spark,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -8,11 +8,12 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.operators.{Datamart, DateDim}
+import graft.sources.{IndexedScan, StatsIndex}
 
 /** [[SalesSummaryStream]]: the continuously maintained summary must equal
   * the batch [[Datamart.salesSummary]] over everything streamed — under
   * late arrivals for old dates, batch-id replay, and with untouched date
-  * partitions left byte-identical. */
+  * partitions' files carried into each new generation unrewritten. */
 class SalesSummaryStreamSpec extends SparkSpec {
   import spark.implicits._
 
@@ -42,36 +43,42 @@ class SalesSummaryStreamSpec extends SparkSpec {
   test("streamed refresh == batch summary; late date recomputes; replay exact; untouched partitions stable") {
     val root = Files.createTempDirectory("graft-ssstream").toString
     val (log, sum) = (s"$root/log", s"$root/sum")
+    val (logGens, sumGens) = (s"$log/_stats_gens", s"$sum/_stats_gens")
+    def apply(b: DataFrame, id: Long): Seq[String] =
+      SalesSummaryStream.applyBatch(b, id, log, sum, dimP, dates,
+        logGens, sumGens)
     batches.zipWithIndex.foreach { case (b, id) =>
-      val touched = SalesSummaryStream.applyBatch(df(b), id.toLong,
-        log, sum, dimP, dates)
+      val touched = apply(df(b), id.toLong)
       assert(touched.toSet ==
         b.map(_._2).toSet, s"batch $id touched $touched")
     }
     val want = rows(Datamart.salesSummary(df(batches.flatten), dimP, dates))
-    assert(rows(SalesSummaryStream.readSummary(spark, sum)) == want)
+    assert(rows(SalesSummaryStream.readSummary(spark, sum, sumGens)) == want)
 
-    // untouched date partition survives a foreign batch byte-identically
+    // an untouched date keeps its files through a foreign batch: the
+    // newest generation names the same files, none of them rewritten
     def files(date: String): Map[String, Long] = {
-      val dir = Paths.get(sum, s"date=$date")
-      java.nio.file.Files.list(dir).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet"))
-        .map(f => f -> java.nio.file.Files.getLastModifiedTime(
-          Paths.get(f)).toMillis).toMap
+      val fs = new org.apache.hadoop.fs.Path(sum)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      StatsIndex.loadLatest(spark, sumGens).select("file").as[String]
+        .collect().filter(_.contains(s"/date=$date/"))
+        .map(f => f -> fs.getFileStatus(new org.apache.hadoop.fs.Path(f))
+          .getModificationTime).toMap
     }
     val d2Before = files("2024-06-02")
-    SalesSummaryStream.applyBatch( // batch touching only 06-01
-      df(Seq((1, "2024-06-01", 14L, 1, 9.0, 1.0))), 3L, log, sum, dimP, dates)
+    assert(d2Before.nonEmpty)
+    apply( // batch touching only 06-01
+      df(Seq((1, "2024-06-01", 14L, 1, 9.0, 1.0))), 3L)
     assert(files("2024-06-02") == d2Before,
       "an untouched date partition was rewritten")
 
     // crash-replay of batch 2: its (date, batch) log slices REPLACE, the
     // touched date recomputes from the log — summary unchanged
-    val afterBatch3 = rows(SalesSummaryStream.readSummary(spark, sum))
-    SalesSummaryStream.applyBatch(df(batches(2)), 2L, log, sum, dimP, dates)
-    assert(rows(SalesSummaryStream.readSummary(spark, sum)) == afterBatch3,
+    val afterBatch3 = rows(SalesSummaryStream.readSummary(spark, sum, sumGens))
+    apply(df(batches(2)), 2L)
+    assert(rows(SalesSummaryStream.readSummary(spark, sum, sumGens)) == afterBatch3,
       "replayed batch id changed the summary")
-    val logN = spark.read.parquet(log)
+    val logN = IndexedScan.readIndexedVersioned(spark, log, logGens)
       .where(col("_batch_id").cast("long") === 2L).count()
     assert(logN == batches(2).size, "replay appended instead of replacing")
   }
@@ -85,11 +92,13 @@ class SalesSummaryStreamSpec extends SparkSpec {
       mem.toDF().toDF("customer_sk", "od", "order_id", "part_sk",
           "net_amount", "quantity")
         .withColumn("order_date", col("od").cast("date")).drop("od"),
-      s"$root/log", s"$root/sum", dimP, dates, ckpt)
+      s"$root/log", s"$root/sum", dimP, dates, ckpt,
+      s"$root/log/_stats_gens", s"$root/sum/_stats_gens")
     try {
       batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
     } finally q.stop()
-    assert(rows(SalesSummaryStream.readSummary(spark, s"$root/sum")) ==
+    assert(rows(SalesSummaryStream.readSummary(spark, s"$root/sum",
+        s"$root/sum/_stats_gens")) ==
       rows(Datamart.salesSummary(df(batches.flatten), dimP, dates)))
   }
 }
