@@ -95,7 +95,7 @@ object Bench {
     // table's footer and run one tiny end-to-end query.
     Option(new java.io.File(sfDir).listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".parquet")).foreach { f =>
-        try spark.read.parquet(f.toString).limit(1).count()
+        try Tables.read(spark, f.toString).limit(1).count()
         catch { case _: Throwable => () } // e.g. ns-timestamp tables need their loader
       }
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }

@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetBridge, ParquetFileFormat, ParquetOptions}
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,6 +20,9 @@ import org.apache.spark.sql.types._
   * rounds: INT64 TIMESTAMP(NANOS) and timestamp[us]) therefore fails as ONE
   * named `testdata schema drift` error at load, instead of N scattered
   * analysis errors deep inside queries.
+  *
+  * [[read]] underneath `load` is the engine's one schema-inferring parquet
+  * read: every layer, index and model read in `src/main` goes through it.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -83,9 +91,70 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val raw = read(spark, s"$dir/$name.parquet")
     validate(name, raw)
     coerce(name, raw)
+  }
+
+  /** The one schema-inferring parquet read: `spark.read.parquet(paths: _*)`
+    * with the data schema resolved on the driver instead of in a Spark
+    * job. Spark's non-merging inference reads ONE footer, but through
+    * `mergeSchemasInParallel`, which submits a one-task job for it; here
+    * that footer is read in-process:
+    *  - the same file: a summary file first, else the first data file in
+    *    path order, from the same listing (Spark's hidden-file rule, so
+    *    `_x=v` directories are kept and `_stats_gens` is not);
+    *  - the same conversion (Spark's own `readSchema`, through
+    *    [[ParquetBridge.footerSchema]]);
+    *  - the same relation: the index the schema came from is the one the
+    *    scan lists, built as `DataSource.resolveRelation` builds it, so
+    *    a directory past the parallel-listing threshold pays its listing
+    *    job once. Partition columns are inferred from the paths as
+    *    before.
+    * Anything this path does not resolve — a missing path, a directory
+    * with no data file, a streaming sink's `_spark_metadata` log, a
+    * `mergeSchema` session — goes to `spark.read.parquet`, so the result
+    * or the error is Spark's own. Not a cache: each call reads the footer
+    * of what is on disk now. */
+  def read(spark: SparkSession, paths: String*): DataFrame =
+    readWith(spark, Map.empty, paths)
+
+  /** [[read]] of some files under `basePath`, with the partition columns
+    * parsed relative to it (the `basePath` read option). */
+  def readUnder(spark: SparkSession, basePath: String, files: Seq[String]): DataFrame =
+    readWith(spark, Map("basePath" -> basePath), files)
+
+  /** `spark.read.parquet(file).schema` for one data file, from its footer. */
+  def schemaOf(spark: SparkSession, file: String): StructType =
+    read(spark, file).schema
+
+  private def readWith(spark: SparkSession, options: Map[String, String],
+                       paths: Seq[String]): DataFrame = {
+    // DataFrameReader passes a single path as the `path` option
+    val opts = if (paths.size == 1) options + ("path" -> paths.head) else options
+    val conf = spark.sessionState.newHadoopConfWithOptions(opts)
+    val sqlConf = spark.sessionState.conf
+    val resolved = for {
+      roots <- ParquetBridge.roots(paths, conf)
+      if !new ParquetOptions(opts, sqlConf).mergeSchema
+      if !(paths.size == 1 && FileStreamSink.hasMetadata(paths, conf, sqlConf))
+      index = new InMemoryFileIndex(spark, roots, opts, None,
+        FileStatusCache.getOrCreate(spark))
+      file <- firstFooter(index.allFiles())
+      dataSchema <- ParquetBridge.footerSchema(spark, file, opts)
+    } yield HadoopFsRelation(index, index.partitionSchema, dataSchema,
+      None, new ParquetFileFormat(), CaseInsensitiveMap(opts))(spark)
+    resolved.fold(spark.read.options(options).parquet(paths: _*))(
+      spark.baseRelationToDataFrame)
+  }
+
+  /** The file Spark's non-merging inference opens: `_common_metadata`,
+    * else `_metadata`, else the first data file in path order. */
+  private def firstFooter(files: Seq[FileStatus]): Option[FileStatus] = {
+    val summaries = Seq("_common_metadata", "_metadata")
+    val sorted = files.sortBy(_.getPath.toString)
+    summaries.flatMap(n => sorted.find(_.getPath.getName == n)).headOption
+      .orElse(sorted.find(f => !summaries.contains(f.getPath.getName)))
   }
 
   /** Throw one clearly-named error on testdata schema drift. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
+import graft.Tables
 import graft.sources.{IndexedScan, StatsIndex}
 
 /** Change data feed + time travel over a VERSIONED table
@@ -107,7 +108,7 @@ object ChangeFeed {
         // loudly above instead.)
         def fileSchema(stats: DataFrame): Option[StructType] =
           stats.select(col("file")).limit(1).collect().headOption
-            .map(r => spark.read.parquet(r.getString(0)).schema)
+            .map(r => Tables.schemaOf(spark, r.getString(0)))
         val ds = StatsIndex.generationSchema(spark, indexRoot, toGen)
           .orElse(StatsIndex.generationSchema(spark, indexRoot, fromGen))
           .orElse(fileSchema(toStats)).orElse(fileSchema(fromStats))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
+import graft.Tables
+
 /** Small-file compaction for partitioned parquet tables.
   *
   * At 100 TB the silent killer is not data volume but FILE COUNT: a
@@ -87,7 +89,7 @@ object Compaction {
       s"_staging_${java.util.UUID.randomUUID().toString.take(8)}")
     try {
       todo.foreach { p =>
-        val df = spark.read.parquet(s"$path/${p.partition}")
+        val df = Tables.read(spark, s"$path/${p.partition}")
         val out =
           if (zorderBy.isEmpty) df.coalesce(p.targetFiles)
           else ZOrder.clustered(df, zorderBy, p.targetFiles)
@@ -175,8 +177,8 @@ object Compaction {
       s"_staging_${java.util.UUID.randomUUID().toString.take(8)}")
     try {
       todo.foreach { case (dir, files, target) =>
-        val reader = schema.fold(spark.read)(spark.read.schema(_))
-        val df = reader.parquet(files: _*)
+        val df = schema.fold(Tables.read(spark, files: _*))(
+          spark.read.schema(_).parquet(files: _*))
         val out =
           if (zorderBy.isEmpty) df.coalesce(target)
           else ZOrder.clustered(df, zorderBy, target)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Incremental near-dup detection against a PERSISTED fingerprint store —
   * the production shape for a growing corpus: each new shard dedups
   * against every prior snapshot without re-fingerprinting (or even
@@ -41,7 +43,7 @@ object DedupStore {
     save(docs, idCol, textCol, path, mode = "append")
 
   def load(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.read(spark, path)
 
   /** Candidate near-dup pairs (i < j, est_sim) involving at least one
     * document of `newDocs`: new×history through one band equi-join

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
+import graft.Tables
 import graft.functions.DotProduct
 
 /** IVF (inverted-file) ANN — the second scale-path index family next to
@@ -203,8 +204,8 @@ object Ivf {
     * collected. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String,
            idCol: String): Index = {
-    val assigned = spark.read.parquet(s"$path/assigned")
-    val centers = spark.read.parquet(s"$path/centers")
+    val assigned = Tables.read(spark, s"$path/assigned")
+    val centers = Tables.read(spark, s"$path/centers")
       .orderBy("cell").collect()
       .map(r => r.getSeq[Double](r.fieldIndex("ctr")).toArray)
     require(centers.nonEmpty, s"ivf load: no centroids at $path/centers")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** IVF-PQ — the published billion-scale ANN recipe (Jégou et al. 2011 §V:
   * coarse quantizer + product-quantized RESIDUALS), composing this repo's
   * two index families: [[Ivf]] bounds WHICH candidates are scored (nProbe
@@ -255,8 +257,8 @@ object IvfPq {
     * probe's cell join prunes partitions; centroids/codebooks are tiny and
     * collected. */
   def load(spark: SparkSession, path: String, idCol: String): Index = {
-    val assigned = spark.read.parquet(s"$path/assigned")
-    val centers = spark.read.parquet(s"$path/centers")
+    val assigned = Tables.read(spark, s"$path/assigned")
+    val centers = Tables.read(spark, s"$path/centers")
       .orderBy("cell").collect()
       .map(r => r.getSeq[Double](r.fieldIndex("ctr")).toArray)
     require(centers.nonEmpty, s"ivfpq load: no centroids at $path/centers")
@@ -279,7 +281,7 @@ object IvfPq {
 
   /** The [[saveVectors]] relation. */
   def loadVectors(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/vectors")
+    Tables.read(spark, s"$path/vectors")
 
   /** Bounded point-fetch for the exact re-rank: the shortlist ids
     * (≤ queries × k × shortlistFactor — driver-bounded BY DESIGN, the
@@ -372,7 +374,7 @@ object IvfPq {
   def loadFitMse(spark: SparkSession, path: String): Option[Double] = {
     val p = new org.apache.hadoop.fs.Path(s"$path/fit_stats")
     if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) None
-    else spark.read.parquet(s"$path/fit_stats").collect()
+    else Tables.read(spark, s"$path/fit_stats").collect()
       .headOption.map(_.getDouble(0))
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 
+import graft.Tables
 import graft.functions.{PqKernels, RotateVector}
 
 /** Optimized Product Quantization (Ge, He, Ke, Sun, CVPR 2013): learn an
@@ -158,12 +159,12 @@ object Opq {
 
   /** Load a [[save]]d model + code relation (codes stay disk-resident). */
   def load(spark: SparkSession, path: String): (Model, DataFrame) = {
-    val row = spark.read.parquet(s"$path/rotation").head()
+    val row = Tables.read(spark, s"$path/rotation").head()
     val model = Model(
       row.getSeq[Float](row.fieldIndex("flat")).toArray,
       row.getInt(row.fieldIndex("dim")),
       Pq.loadCodebooks(spark, s"$path/codebooks"))
-    (model, spark.read.parquet(s"$path/codes"))
+    (model, Tables.read(spark, s"$path/codes"))
   }
 
   /** OPQ + IVF-PQ — the complete published billion-scale recipe (the

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.functions.VectorOps.{dotCol, unitNorm}
 
 /** PCA-reduced IVF ANN — the reduce-then-index deployment the [[Pca]]
@@ -89,7 +90,7 @@ object PcaAnn {
     * PCA model is tiny and collected. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String,
            idCol: String): Index = {
-    val r = spark.read.parquet(s"$path/pca").head()
+    val r = Tables.read(spark, s"$path/pca").head()
     val model = Pca.Model(
       r.getSeq[Double](r.fieldIndex("mean")).toArray,
       r.getSeq[scala.collection.Seq[Double]](r.fieldIndex("components"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
+import graft.Tables
 import graft.functions.{PqAdc, PqEncode}
 
 /** Product quantization (Jégou et al. 2011) — the third ANN scale path next
@@ -428,7 +429,7 @@ object Pq {
 
   private[operators] def loadCodebooks(spark: org.apache.spark.sql.SparkSession,
                                        path: String): Codebooks = {
-    val centers = spark.read.parquet(path)
+    val centers = Tables.read(spark, path)
       .orderBy("sub", "idx").collect()
       .map(r => (r.getInt(0), r.getSeq[Float](r.fieldIndex("ctr")).toArray))
       .groupBy(_._1).toSeq.sortBy(_._1)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Mergeable-sketch corpus monitoring — distinct counts and overlap
   * estimates that NEVER rescan history, built on Spark's native
   * DataSketches aggregates (`hll_sketch_agg`/`hll_union_agg`,
@@ -177,7 +179,7 @@ object SketchStats {
 
   def mergedFrom(spark: SparkSession, path: String, keys: Seq[String],
                  quantiles: Seq[Double] = DefaultQuantiles): DataFrame =
-    merged(spark.read.parquet(path), keys, quantiles)
+    merged(Tables.read(spark, path), keys, quantiles)
 
   /** Sketch-estimated set overlap between two keyed columns: one row —
     * `est_a`, `est_b`, `est_overlap` (theta intersection), `est_union`,

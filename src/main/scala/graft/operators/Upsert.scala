@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** MERGE/upsert semantics on immutable storage.
   *
   * The reference leans on BigQuery `MERGE` (fact_orders.sql:59-77,
@@ -167,7 +169,7 @@ object Upsert {
     val merged =
       if (!exists) applyDeletes(updates)
       else {
-        def emptySlice = spark.read.parquet(path).where(lit(false))
+        def emptySlice = Tables.read(spark, path).where(lit(false))
         val (mergeSlice, passThrough): (DataFrame, Option[DataFrame]) =
           statsIndexPath match {
             case Some(idx) =>
@@ -194,13 +196,12 @@ object Upsert {
               else {
                 val (mergeFiles, passFiles) = splitByBlooms(spark, files,
                   probeKeys, bloomsPath, bloomColumns, maxBloomProbeKeys)
-                def rd(fl: Seq[String]) =
-                  spark.read.option("basePath", path).parquet(fl: _*)
+                def rd(fl: Seq[String]) = Tables.readUnder(spark, path, fl)
                 (if (mergeFiles.isEmpty) emptySlice else rd(mergeFiles),
                   if (passFiles.isEmpty) None else Some(rd(passFiles)))
               }
             case None =>
-              (spark.read.parquet(path)
+              (Tables.read(spark, path)
                 .where(col(partitionCol).isin(touched: _*)), None)
           }
         // pass-through files are bloom-PROVEN to hold none of the updates'
@@ -279,7 +280,7 @@ object Upsert {
     * files while their manifests still promise them — time travel
     * would break before its generation was reaped). The trade: the TABLE
     * DIRECTORY now holds multiple generations of files, so plain
-    * `spark.read.parquet(path)` sees duplicates — a versioned table must
+    * `Tables.read(spark, path)` sees duplicates — a versioned table must
     * be read through [[graft.sources.IndexedScan.readIndexedVersioned]]
     * (exactly Delta's contract for its own directories). Writers stay
     * SINGLE (generation numbering is not fenced); readers are free.
@@ -482,7 +483,7 @@ object Upsert {
         graft.sources.StatsIndex.generationSchema(spark, indexRoot, gens.last)
           .map(_.fields.toSeq)
           .orElse(c.select(col("file")).limit(1).collect().headOption
-            .map(r => spark.read.parquet(r.getString(0)).schema.fields.toSeq))
+            .map(r => Tables.schemaOf(spark, r.getString(0)).fields.toSeq))
       }.getOrElse(Nil)
     oldDataFields.foreach { f =>
       newDataFields.find(_.name == f.name).foreach(u =>

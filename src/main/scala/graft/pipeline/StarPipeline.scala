@@ -22,7 +22,7 @@ object StarPipeline {
 
   def tasks(spark: SparkSession, srcDir: String, warehouse: String): Seq[Dag.Task] = {
     def t(name: String) = Tables.load(spark, srcDir, name)
-    def read(layer: String) = spark.read.parquet(s"$warehouse/$layer")
+    def read(layer: String) = Tables.read(spark, s"$warehouse/$layer")
     def write(df: DataFrame, layer: String): Unit =
       RawLayer.truncateWrite(df, s"$warehouse/$layer")
 
@@ -111,7 +111,7 @@ object StarPipeline {
                        warehouse: String,
                        executionDate: String): Seq[Dag.Task] = {
     def t(name: String) = Tables.load(spark, srcDir, name)
-    def read(layer: String) = spark.read.parquet(s"$warehouse/$layer")
+    def read(layer: String) = Tables.read(spark, s"$warehouse/$layer")
     val day = lit(executionDate).cast("date")
 
     val base = tasks(spark, srcDir, warehouse)
@@ -159,7 +159,7 @@ object StarPipeline {
     val custDay = Dag.Task("datamart.customer_analytics",
         deps = Seq("datamart.customer_analytics_state"))(() => {
       val state = DatamartIncr.orderState(
-        spark.read.parquet(s"$warehouse/datamart/customer_state")
+        Tables.read(spark, s"$warehouse/datamart/customer_state")
           .drop("_run_date"))
       val anchor = spark.range(1).select(day.as("anchor_date"))
       RawLayer.truncateWrite(
@@ -192,8 +192,8 @@ object StarPipeline {
       broadcast(dayOrders.select(col("o_orderkey").as("_day_ok"))),
       col("l_orderkey") === col("_day_ok"), "left_semi")
     FactBuild.factOrders(dayOrders, dayLines,
-      spark.read.parquet(s"$warehouse/core/dim_customers"),
-      spark.read.parquet(s"$warehouse/core/dim_parts"))
+      Tables.read(spark, s"$warehouse/core/dim_customers"),
+      Tables.read(spark, s"$warehouse/core/dim_parts"))
   }
 
   /** Run one execution date end to end (the Airflow daily trigger);

@@ -9,12 +9,9 @@ import graft.operators._
 /** Analytics operator queries + DuckDB oracles (SURVEY.md §2 #12-18). */
 object AnalyticsQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   private def brandRevenue(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "part").select(col("p_partkey"), col("p_brand"))),
+    Tables.load(s, dir, "lineitem")
+      .join(broadcast(Tables.load(s, dir, "part").select(col("p_partkey"), col("p_brand"))),
             col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand").as("brand"), col("l_partkey").as("part_id"))
       .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 6).as("revenue"))
@@ -48,8 +45,8 @@ object AnalyticsQueries {
       // parquet-sourced l_partkey is nullable by schema — coalesce makes
       // the tie-break attribute non-nullable without changing any value
       // (the inner join guarantees no nulls reach it)
-      val rev = t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "part").select(col("p_partkey"), col("p_brand"))),
+      val rev = Tables.load(s, dir, "lineitem")
+        .join(broadcast(Tables.load(s, dir, "part").select(col("p_partkey"), col("p_brand"))),
               col("l_partkey") === col("p_partkey"))
         .groupBy(col("p_brand").as("brand"),
           coalesce(col("l_partkey"), lit(-1L)).as("part_id"))
@@ -67,24 +64,24 @@ object AnalyticsQueries {
   }
 
   def windowRunning(s: SparkSession, dir: String): DataFrame =
-    Analytics.runningOrderStats(t(s, dir, "orders"))
+    Analytics.runningOrderStats(Tables.load(s, dir, "orders"))
       .orderBy("o_custkey", "order_date", "o_orderkey")
 
   def rollup(s: SparkSession, dir: String): DataFrame =
-    Analytics.salesRollup(t(s, dir, "lineitem"), t(s, dir, "orders"), t(s, dir, "part"))
+    Analytics.salesRollup(Tables.load(s, dir, "lineitem"), Tables.load(s, dir, "orders"), Tables.load(s, dir, "part"))
       .orderBy(asc_nulls_first("year"), asc_nulls_first("category"))
 
   def pivot(s: SparkSession, dir: String): DataFrame =
-    Analytics.statusPivot(t(s, dir, "orders"), Seq("F", "O", "P"))
+    Analytics.statusPivot(Tables.load(s, dir, "orders"), Seq("F", "O", "P"))
       .orderBy("o_orderpriority")
 
   def percentiles(s: SparkSession, dir: String): DataFrame =
-    Analytics.percentiles(t(s, dir, "lineitem"), "l_returnflag", "l_extendedprice",
+    Analytics.percentiles(Tables.load(s, dir, "lineitem"), "l_returnflag", "l_extendedprice",
         Seq(0.25, 0.5, 0.75, 0.95))
       .orderBy("l_returnflag")
 
   def semiAnti(s: SparkSession, dir: String): DataFrame =
-    Analytics.semiAntiCounts(t(s, dir, "customer"), t(s, dir, "orders"))
+    Analytics.semiAntiCounts(Tables.load(s, dir, "customer"), Tables.load(s, dir, "orders"))
       .orderBy("mkt_segment")
 
   def sessionize(s: SparkSession, dir: String): DataFrame =
@@ -93,19 +90,19 @@ object AnalyticsQueries {
       .orderBy("user_id", "session_seq")
 
   def cube(s: SparkSession, dir: String): DataFrame =
-    Analytics.ordersCube(t(s, dir, "orders"))
+    Analytics.ordersCube(Tables.load(s, dir, "orders"))
       .orderBy(asc_nulls_first("year"), asc_nulls_first("priority"))
 
   def groupingSets(s: SparkSession, dir: String): DataFrame =
-    Analytics.ordersGroupingSets(t(s, dir, "orders"))
+    Analytics.ordersGroupingSets(Tables.load(s, dir, "orders"))
       .orderBy(col("gid"), asc_nulls_first("year"), asc_nulls_first("priority"))
 
   def monthlyDelta(s: SparkSession, dir: String): DataFrame =
-    Analytics.monthlyDelta(t(s, dir, "orders"))
+    Analytics.monthlyDelta(Tables.load(s, dir, "orders"))
       .orderBy("month")
 
   def spendQuartiles(s: SparkSession, dir: String): DataFrame =
-    Analytics.spendQuartiles(t(s, dir, "orders"))
+    Analytics.spendQuartiles(Tables.load(s, dir, "orders"))
       .orderBy("quartile")
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -14,16 +14,13 @@ import graft.operators._
   */
 object ExtraQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   /** Brand revenue via salted two-phase aggregation — value-identical to a
     * plain GROUP BY (the oracle IS the plain GROUP BY). round(_,4): these
     * are whole-table-scale sums, so leave a wider boundary margin than the
     * per-day aggregates (SURVEY §4). */
   def saltedAgg(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "part").select(col("p_partkey"), col("p_brand"))),
+    val li = Tables.load(s, dir, "lineitem")
+      .join(broadcast(Tables.load(s, dir, "part").select(col("p_partkey"), col("p_brand"))),
             col("l_partkey") === col("p_partkey"))
       .withColumn("net", col("l_extendedprice") * (lit(1.0) - col("l_discount")))
     Salting.saltedSum(li, Seq("p_brand"), "net", saltFrom = "l_orderkey")
@@ -65,7 +62,7 @@ object ExtraQueries {
     * The merge-path surrogate key is gated too — `mergeSnapshot` emits
     * `md5(key:effective_date)`, which DuckDB reproduces verbatim. */
   def scd2Merge(s: SparkSession, dir: String): DataFrame = {
-    val customer = t(s, dir, "customer").select(
+    val customer = Tables.load(s, dir, "customer").select(
       col("c_custkey").as("customer_id"), col("c_name").as("name"),
       col("c_nationkey").as("nation_key"), col("c_acctbal").as("acct_bal"),
       col("c_mktsegment").as("mkt_segment"))
@@ -88,7 +85,7 @@ object ExtraQueries {
     * p49–p51 band (accuracy 1000 → rank error ≤ 0.1%, so the ±1%-rank
     * band strictly contains the returned data value). */
   def approxSketches(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
+    val li = Tables.load(s, dir, "lineitem")
     // PASS 1, one job with two independent branches (their stages run
     // concurrently): (a) the order-grain rollup — exact distinct count,
     // row count AND the HLL estimate in one two-phase aggregation (HLL
@@ -163,7 +160,7 @@ object ExtraQueries {
   /** One-pass numeric profile of lineitem — the data-quality census as a
     * gate query, fully oracled (counts/min/max exact, sum round(4)). */
   def profileLineitem(s: SparkSession, dir: String): DataFrame =
-    Profile.numeric(t(s, dir, "lineitem"),
+    Profile.numeric(Tables.load(s, dir, "lineitem"),
       Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
 
   /** Declarative data-quality report over lineitem — every check type
@@ -172,14 +169,14 @@ object ExtraQueries {
     * violation count), not just an all-green report. */
   def dqCheck(s: SparkSession, dir: String): DataFrame = {
     import Expectations._
-    run(t(s, dir, "lineitem"), Seq(
+    run(Tables.load(s, dir, "lineitem"), Seq(
       NotNull("l_orderkey"),
       InRange("l_quantity", 1.0, 50.0),
       InRange("l_tax", 0.0, 0.05),
       InSet("l_returnflag", Seq("A", "N", "R")),
       UniqueKey(Seq("l_orderkey", "l_linenumber")),
       Freshness("l_shipdate", "2001-12-01 00:00:00", maxLagDays = 60),
-      RefIntegrity("l_orderkey", t(s, dir, "orders"), "o_orderkey")))
+      RefIntegrity("l_orderkey", Tables.load(s, dir, "orders"), "o_orderkey")))
   }
 
   private val dqOracle: String =
@@ -227,7 +224,7 @@ object ExtraQueries {
     * arithmetic end to end. */
   def dqDrift(s: SparkSession, dir: String): DataFrame = {
     import Expectations._
-    val orders = t(s, dir, "orders")
+    val orders = Tables.load(s, dir, "orders")
     // the baseline is a SLICE OF THE SAME TABLE (the pre-1997 stand-in
     // for yesterday's profile), so its aggregates fold into the report's
     // single aggregation — one orders scan total, where a Materialized
@@ -291,7 +288,7 @@ object ExtraQueries {
     * ε-smoothing included. */
   def dqDriftPsi(s: SparkSession, dir: String): DataFrame = {
     import Expectations._
-    val orders = t(s, dir, "orders")
+    val orders = Tables.load(s, dir, "orders")
     // both checks' baseline is the pre-1997 slice of the same table and
     // the shifted twin is an expression over the same scan, so ONE run
     // computes all three histograms in one orders pass — a Materialized
@@ -367,7 +364,7 @@ object ExtraQueries {
     * band while the unshifted corpus stays inside it. */
   def dqDriftKll(s: SparkSession, dir: String): DataFrame = {
     import Expectations._
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val baseSketch = SketchStats.sketchBatch(docs, Seq("lang"), Nil, Nil,
       quantileCols = Seq("n_chars"))
     run(docs, Seq(QuantileBandDrift("n_chars", 0.9, 100.0, baseSketch)))
@@ -384,7 +381,7 @@ object ExtraQueries {
     * arithmetic re-derives in SQL window functions + generate_series. */
   def packSeqs(s: SparkSession, dir: String): DataFrame =
     SequencePack.packSequences(
-        t(s, dir, "documents").select("lang", "doc_id", "n_chars"),
+        Tables.load(s, dir, "documents").select("lang", "doc_id", "n_chars"),
         "doc_id", "n_chars", ctxLen = 4096, strataCols = Seq("lang"))
       .orderBy("lang", "seq_id", "seq_from")
 
@@ -454,7 +451,7 @@ object ExtraQueries {
     * rank recovery, the variance/reconstruction identity, and geometry
     * preservation are spec-pinned in PcaSpec. */
   def embPca(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
+    val emb = Tables.load(s, dir, "embeddings")
     val m = Pca.fit(emb, "embedding", k = 16)
     val mse = Pca.reconstructionMse(emb, "embedding", m)
     // exact total variance (population, the fit's own convention):
@@ -506,7 +503,7 @@ object ExtraQueries {
     * additionally spec-pinned in SequencePackSpec. */
   def packGreedyQ(s: SparkSession, dir: String): DataFrame =
     SequencePack.packGreedy(
-        t(s, dir, "documents").select("lang", "doc_id", "n_chars"),
+        Tables.load(s, dir, "documents").select("lang", "doc_id", "n_chars"),
         "doc_id", "n_chars", ctxLen = 4096, strataCols = Seq("lang"))
       .orderBy("lang", "seq_id", "seq_from")
 
@@ -518,7 +515,7 @@ object ExtraQueries {
     * rest ≪ threshold ≈ 136 at sf0.01). */
   def heavyTokens(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions.normWords
-    val toks = t(s, dir, "documents")
+    val toks = Tables.load(s, dir, "documents")
       .select(explode(normWords(col("text"))).as("token"))
       .where(col("token") =!= "")
     HeavyHitters.frequent(toks, "token", support = 0.005)
@@ -540,7 +537,7 @@ object ExtraQueries {
     * and length bounds per text column, oracled (Spark's `length` and
     * DuckDB's both count codepoints). */
   def profileDocs(s: SparkSession, dir: String): DataFrame =
-    Profile.strings(t(s, dir, "documents"), Seq("lang", "source", "text"))
+    Profile.strings(Tables.load(s, dir, "documents"), Seq("lang", "source", "text"))
 
   private val profileDocsOracle: String =
     Seq("lang", "source", "text").map { c =>
@@ -557,7 +554,7 @@ object ExtraQueries {
     * profiler's distribution view, oracled exactly (the bin expression is
     * mirrored operation-for-operation so IEEE arithmetic agrees). */
   def histLineitem(s: SparkSession, dir: String): DataFrame =
-    Profile.histogram(t(s, dir, "lineitem"), "l_extendedprice",
+    Profile.histogram(Tables.load(s, dir, "lineitem"), "l_extendedprice",
       lo = 900.0, hi = 105000.0, bins = 20)
 
   private val histOracle: String =
@@ -659,7 +656,7 @@ object ExtraQueries {
     * epoch arithmetic and the repair math one fixed IEEE expression
     * tree, so DuckDB reproduces every value bit-for-bit. */
   def resampleQ(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events").select(col("user_id"), col("ts"), col("value"))
+    val ev = Tables.load(s, dir, "events").select(col("user_id"), col("ts"), col("value"))
     graft.operators.Resample.resample(ev, "user_id", "ts", "value", 86400L)
       .orderBy("user_id", "bucket")
   }
@@ -704,7 +701,7 @@ object ExtraQueries {
     * ≥5 rows). Moments come from exact integer cent sums (Σc, Σc²), so
     * mean/sd/flag re-derive bit-for-bit in DuckDB. */
   def anomalyQ(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events").select(col("user_id"), col("event_id"),
+    val ev = Tables.load(s, dir, "events").select(col("user_id"), col("event_id"),
       col("ts"), col("value"))
     graft.operators.RollingFeatures.anomalies(ev, "user_id", "ts", "value",
         graft.operators.RollingFeatures.Week, z = 3.0, minN = 5L)
@@ -745,7 +742,7 @@ object ExtraQueries {
     * the identical generations as CTEs and re-derives the delta with a
     * FULL OUTER JOIN. */
   def tableDiffQ(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select(
+    val o = Tables.load(s, dir, "orders").select(
       col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
     // exact IEEE +1.0 (no rounding ties): both engines mutate identically
     val after = o.where(pmod(col("o_orderkey"), lit(97)) =!= 0)
@@ -792,7 +789,7 @@ object ExtraQueries {
     * incremental buffers); integer sums are exact, and the decimal
     * value + rate re-derive through one fixed division tree. */
   def rollingQ(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events").select(col("user_id"), col("event_id"),
+    val ev = Tables.load(s, dir, "events").select(col("user_id"), col("event_id"),
       col("ts"), col("value"))
     graft.operators.RollingFeatures.trailing(ev, "user_id", "ts", "value",
         Seq(graft.operators.RollingFeatures.Day,
@@ -833,7 +830,7 @@ object ExtraQueries {
     * IS the gate contract; candidate-count scale asserts live in
     * FuzzyJoinSpec. */
   def fuzzyJoinQ(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer").select(col("c_custkey"), col("c_name"))
+    val c = Tables.load(s, dir, "customer").select(col("c_custkey"), col("c_name"))
     graft.operators.FuzzyJoin.selfJoin(c, "c_custkey", "c_name", maxDist = 1)
       .select(col("a_id").as("a_key"), col("b_id").as("b_key"),
         col("dist").cast("long").as("dist")) // DuckDB levenshtein is BIGINT
@@ -864,7 +861,7 @@ object ExtraQueries {
       Seq("user_id"), expectedItemsPerFile = 1L << 16, fpp = 0.01)
     val fact = graft.sources.IndexedScan.readIndexedFrom(s, table, stats, Some(blooms))
       .select("event_id", "user_id", "event_type", "value")
-    val dim = t(s, dir, "customer").where(col("c_acctbal") > 9000)
+    val dim = Tables.load(s, dir, "customer").where(col("c_acctbal") > 9000)
       .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
     graft.sources.IndexedScan.dfpJoin(fact, "user_id", dim, "user_id")
       .groupBy("c_mktsegment")
@@ -894,7 +891,7 @@ object ExtraQueries {
         Seq("user_id"), expectedItemsPerFile = 1L << 16, fpp = 0.01)
       val fact = graft.sources.IndexedScan.readIndexedFrom(s, table, stats, Some(blooms))
         .select("event_id", "user_id", "event_type", "value")
-      val dim = t(s, dir, "customer").where(col("c_acctbal") > 9000)
+      val dim = Tables.load(s, dir, "customer").where(col("c_acctbal") > 9000)
         .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
       val df = fact.join(dim, Seq("user_id"))
         .groupBy("c_mktsegment")
@@ -919,7 +916,7 @@ object ExtraQueries {
     * md5 arithmetic verbatim. */
   def sampleStratifiedQ(s: SparkSession, dir: String): DataFrame =
     Sampling.stratified(
-        t(s, dir, "documents").select(col("doc_id"), col("lang")),
+        Tables.load(s, dir, "documents").select(col("doc_id"), col("lang")),
         "doc_id", "lang", Map("en" -> 0.1), defaultRate = 0.5)
       .orderBy("lang", "doc_id")
 
@@ -939,7 +936,7 @@ object ExtraQueries {
     * exact size — the fixed-budget eval-set carve. */
   def sampleTakeQ(s: SparkSession, dir: String): DataFrame =
     Sampling.takePerStratum(
-        t(s, dir, "documents").select(col("doc_id"), col("lang")),
+        Tables.load(s, dir, "documents").select(col("doc_id"), col("lang")),
         "doc_id", "lang", n = 25)
       .orderBy("lang", "doc_id")
 
@@ -972,7 +969,7 @@ object ExtraQueries {
     versionedFixtureCache.getOrElseUpdate((s, dir), {
       val root = java.nio.file.Files.createTempDirectory("graft-vtt").toString
       val (path, idx) = (s"$root/t", s"$root/t/_stats_v")
-      val orders = t(s, dir, "orders").select(
+      val orders = Tables.load(s, dir, "orders").select(
         col("o_orderkey").cast("long").as("order_id"),
         col("o_orderpriority").as("priority"),
         col("o_totalprice").cast("double").as("price"))
@@ -1011,7 +1008,7 @@ object ExtraQueries {
     // transitively — a degenerate entity); sparse keys give a realistic
     // mix of small clusters and singletons, and keep the oracle's
     // recursive closure component-sized
-    val c = t(s, dir, "customer").where(col("c_custkey") % 7 === 0)
+    val c = Tables.load(s, dir, "customer").where(col("c_custkey") % 7 === 0)
       .select(col("c_custkey"), col("c_name"),
         col("c_acctbal"), col("c_mktsegment"))
     val edges = graft.operators.FuzzyJoin
@@ -1083,7 +1080,7 @@ object ExtraQueries {
       graft.streaming.ChangeFeedStream.replicateTo(s, path, idx,
         Seq("order_id"), "priority", s"$root/cursor", downstream,
         startAt = Some(1L))
-      val out = s.read.parquet(downstream)
+      val out = Tables.read(s, downstream)
         .groupBy(col("priority"))
         .agg(count(lit(1)).as("n"),
           sum(round(col("price") * 100).cast("long")).as("cents"))
@@ -1177,7 +1174,7 @@ object ExtraQueries {
     val (path, idx) = evolveFixtureCache.getOrElseUpdate((s, dir), {
       val root = java.nio.file.Files.createTempDirectory("graft-evo").toString
       val (p, i) = (s"$root/t", s"$root/t/_stats_v")
-      val orders = t(s, dir, "orders").select(
+      val orders = Tables.load(s, dir, "orders").select(
         col("o_orderkey").cast("long").as("order_id"),
         col("o_orderpriority").as("priority"),
         col("o_totalprice").cast("double").as("price"))
@@ -1392,7 +1389,7 @@ object ExtraQueries {
     // and sketch updates on 8-byte longs beat re-hashing ~30-char
     // strings — same estimate, a fraction of the explode volume and
     // per-row cost
-    val sh = t(s, dir, "documents")
+    val sh = Tables.load(s, dir, "documents")
       .select(col("lang"), col("source"),
         explode(Bridge.column(graft.functions.ShingleSet(
           Bridge.expression(normWords(col("text"))), 3))).as("_s"))
@@ -1466,7 +1463,7 @@ object ExtraQueries {
     * history rescan. Contract-verdict gate; rank-error bounds checked per run
     * (two-sided tie-aware rank test) and spec-pinned. */
   def corpusKll(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val batches = SketchStats.sketchBatch(docs,
       Seq("lang", "source"), Nil, Nil, quantileCols = Seq("n_chars"))
     val m = SketchStats.merged(batches, Seq("lang"))
@@ -1532,7 +1529,7 @@ object ExtraQueries {
   def deconOverlapEst(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions.normWords
     import org.apache.spark.sql.graft.Bridge
-    val d = t(s, dir, "documents")
+    val d = Tables.load(s, dir, "documents")
     // hashed per-doc-deduped 8-shingles (see [[corpusSketch]]) — set
     // overlap is hash-invariant up to 2^-64 collisions
     def sh(df: DataFrame) = df

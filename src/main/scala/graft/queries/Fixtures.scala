@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Tables
+
 /** Session-shared gate fixtures, DISK-BACKED and centrally clearable.
   *
   * Several gates share expensive build-once artifacts across calls (the
@@ -78,7 +80,7 @@ object Fixtures {
       if (sortCols.isEmpty) df
       else df.sort(sortCols.map(org.apache.spark.sql.functions.col): _*)
     clustered.write.option("compression", "zstd").parquet(path)
-    df.sparkSession.read.parquet(path)
+    Tables.read(df.sparkSession, path)
   }
 
   /** Empty every registered fixture cache and delete the temp dirs this

@@ -361,7 +361,7 @@ object SimilarityQueries {
       // training AND never depend on executor-block residency
       val codesPath = Fixtures.tempDir("pq") + "/codes"
       Pq.encode(e, "vec_id", "embedding", cb).write.parquet(codesPath)
-      (cb, s.read.parquet(codesPath))
+      (cb, Tables.read(s, codesPath))
     })
 
   /** IVF-PQ (contract-verdict gate like its two parents): coarse cells bound the

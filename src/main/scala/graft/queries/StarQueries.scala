@@ -17,23 +17,20 @@ import graft.operators._
   */
 object StarQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   /** events with `ts` normalized to µs TimestampType whatever the on-disk
     * encoding (INT64 ns, TIMESTAMP_NTZ, or TIMESTAMP) — the schema-adaptive
     * coercion lives centrally in [[graft.Tables.load]]; the DuckDB oracle
     * side does `CAST(ts AS TIMESTAMP)` and agrees under the UTC session. */
   def events(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
 
   def dimDates(s: SparkSession, dir: String): DataFrame =
-    DateDim.fromTableSpan(t(s, dir, "orders"), "o_orderdate")
+    DateDim.fromTableSpan(Tables.load(s, dir, "orders"), "o_orderdate")
       .orderBy("full_date")
 
   def dimCustomers(s: SparkSession, dir: String): DataFrame =
     Scd2.snapshotDim(
-        t(s, dir, "customer").select(
+        Tables.load(s, dir, "customer").select(
           col("c_custkey").as("customer_id"),
           col("c_name").as("name"),
           col("c_nationkey").as("nation_key"),
@@ -46,7 +43,7 @@ object StarQueries {
 
   def dimParts(s: SparkSession, dir: String): DataFrame =
     Scd2.snapshotDim(
-        t(s, dir, "part").select(
+        Tables.load(s, dir, "part").select(
           col("p_partkey").as("part_id"),
           col("p_name").as("name"),
           col("p_brand").as("brand"),
@@ -98,13 +95,13 @@ object StarQueries {
 
   def factOrders(s: SparkSession, dir: String): DataFrame =
     FactBuild.factOrders(
-        t(s, dir, "orders"), t(s, dir, "lineitem"),
+        Tables.load(s, dir, "orders"), Tables.load(s, dir, "lineitem"),
         dimCustomersUnordered(s, dir), dimPartsUnordered(s, dir))
       .orderBy("order_id", "line_number")
 
   private def dimCustomersUnordered(s: SparkSession, dir: String): DataFrame =
     Scd2.snapshotDim(
-      t(s, dir, "customer").select(
+      Tables.load(s, dir, "customer").select(
         col("c_custkey").as("customer_id"), col("c_name").as("name"),
         col("c_nationkey").as("nation_key"), col("c_acctbal").as("acct_bal"),
         col("c_mktsegment").as("mkt_segment")),
@@ -112,7 +109,7 @@ object StarQueries {
 
   private def dimPartsUnordered(s: SparkSession, dir: String): DataFrame =
     Scd2.snapshotDim(
-      t(s, dir, "part").select(
+      Tables.load(s, dir, "part").select(
         col("p_partkey").as("part_id"), col("p_name").as("name"),
         col("p_brand").as("brand"), col("p_type").as("category"),
         col("p_size").as("size"), col("p_retailprice").as("retail_price")),
@@ -120,17 +117,17 @@ object StarQueries {
 
   def salesSummary(s: SparkSession, dir: String): DataFrame = {
     val fact = FactBuild.factOrders(
-      t(s, dir, "orders"), t(s, dir, "lineitem"),
+      Tables.load(s, dir, "orders"), Tables.load(s, dir, "lineitem"),
       dimCustomersUnordered(s, dir), dimPartsUnordered(s, dir))
     Datamart.salesSummary(fact, dimPartsUnordered(s, dir),
-        DateDim.fromTableSpan(t(s, dir, "orders"), "o_orderdate"))
+        DateDim.fromTableSpan(Tables.load(s, dir, "orders"), "o_orderdate"))
       .orderBy("date", "product_category")
   }
 
   def customerAnalytics(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
+    val orders = Tables.load(s, dir, "orders")
     val fact = FactBuild.factOrders(
-      orders, t(s, dir, "lineitem"),
+      orders, Tables.load(s, dir, "lineitem"),
       dimCustomersUnordered(s, dir), dimPartsUnordered(s, dir))
     // Anchor derived in-plan (1-row aggregate, broadcast) — no driver-side
     // .head() job scanning orders before the query proper runs.
@@ -160,7 +157,7 @@ object StarQueries {
     factLatticeCache.getOrElseUpdate((s, dir),
       Fixtures.disk(
         FactBuild.factOrders(
-            t(s, dir, "orders"), t(s, dir, "lineitem"),
+            Tables.load(s, dir, "orders"), Tables.load(s, dir, "lineitem"),
             dimCustomersUnordered(s, dir), dimPartsUnordered(s, dir))
           // ONLY the columns the two incr gates read (salesSummaryIncr:
           // part_sk/order_date/order_id/quantity/net_amount;
@@ -186,7 +183,7 @@ object StarQueries {
   def salesSummaryIncr(s: SparkSession, dir: String): DataFrame = {
     val fact = materializedFact(s, dir)
     val dimP = dimPartsUnordered(s, dir)
-    val dates = DateDim.fromTableSpan(t(s, dir, "orders"), "o_orderdate")
+    val dates = DateDim.fromTableSpan(Tables.load(s, dir, "orders"), "o_orderdate")
     val split = lit("1999-01-01").cast("date")
     val prev = Datamart.salesSummary(
       fact.where(col("order_date") < split), dimP, dates)
@@ -204,7 +201,7 @@ object StarQueries {
     * VERBATIM `customer_analytics` SQL: state-derived must equal the
     * full-scan rebuild bit-for-hash. */
   def customerAnalyticsIncr(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
+    val orders = Tables.load(s, dir, "orders")
     // one session-cached materialization, three delta filters over it
     // (the deployment shape: deltas arrive materialized)
     val fact = materializedFact(s, dir)
@@ -237,13 +234,13 @@ object StarQueries {
       val root = Fixtures.tempDir("star-idx")
       val layout = graft.streaming.StarStream.Layout(root)
       val fact = FactBuild.factOrders(
-          t(s, dir, "orders"), t(s, dir, "lineitem"),
+          Tables.load(s, dir, "orders"), Tables.load(s, dir, "lineitem"),
           dimCustomersUnordered(s, dir), dimPartsUnordered(s, dir))
         .where(col("order_date").between(
           lit("1998-01-01").cast("date"), lit("1998-01-31").cast("date")))
         .localCheckpoint() // two batch filters over one materialization
       val dimP = dimPartsUnordered(s, dir)
-      val dates = DateDim.fromTableSpan(t(s, dir, "orders"), "o_orderdate")
+      val dates = DateDim.fromTableSpan(Tables.load(s, dir, "orders"), "o_orderdate")
       graft.streaming.StarStream.applyFactBatch(
         fact.where(pmod(col("order_id"), lit(2)) === 0), 0L, layout, dimP, dates)
       graft.streaming.StarStream.applyFactBatch(
@@ -280,7 +277,7 @@ object StarQueries {
   }
 
   def mergeUpsert(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
+    val orders = Tables.load(s, dir, "orders")
     // Deterministic synthetic update batch: bump totalprice on every 3rd key.
     val updates = orders.where(col("o_orderkey") % 3 === 0)
       .withColumn("o_totalprice", col("o_totalprice") * 1.1)

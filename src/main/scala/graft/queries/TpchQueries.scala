@@ -15,12 +15,9 @@ import graft.Tables
   */
 object TpchQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   /** Q1: pricing summary report. */
   def q1(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .where(to_date(col("l_shipdate")) <= lit("2000-09-02"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -39,10 +36,10 @@ object TpchQueries {
   /** Q3: shipping-priority candidates (top 10 by revenue). */
   def q3(s: SparkSession, dir: String): DataFrame = {
     val cutoff = "1998-03-15"
-    t(s, dir, "customer").where(col("c_mktsegment") === "BUILDING")
-      .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
+    Tables.load(s, dir, "customer").where(col("c_mktsegment") === "BUILDING")
+      .join(Tables.load(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
       .where(to_date(col("o_orderdate")) < lit(cutoff))
-      .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
+      .join(Tables.load(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
       .where(to_date(col("l_shipdate")) > lit(cutoff))
       .groupBy(col("l_orderkey"),
         to_date(col("o_orderdate")).as("order_date"), col("o_orderpriority"))
@@ -54,14 +51,14 @@ object TpchQueries {
 
   /** Q5: local-supplier volume by nation within a region-year. */
   def q5(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "region").where(col("r_name") === "ASIA")
-      .join(t(s, dir, "nation"), col("r_regionkey") === col("n_regionkey"))
-      .join(t(s, dir, "customer"), col("n_nationkey") === col("c_nationkey"))
-      .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
+    Tables.load(s, dir, "region").where(col("r_name") === "ASIA")
+      .join(Tables.load(s, dir, "nation"), col("r_regionkey") === col("n_regionkey"))
+      .join(Tables.load(s, dir, "customer"), col("n_nationkey") === col("c_nationkey"))
+      .join(Tables.load(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
       .where(to_date(col("o_orderdate")) >= lit("1996-01-01") &&
              to_date(col("o_orderdate")) < lit("1997-01-01"))
-      .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-      .join(t(s, dir, "supplier"),
+      .join(Tables.load(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
+      .join(Tables.load(s, dir, "supplier"),
         col("l_suppkey") === col("s_suppkey") &&
         col("s_nationkey") === col("c_nationkey"))
       .groupBy(col("n_name"))
@@ -71,13 +68,13 @@ object TpchQueries {
 
   /** Q10: returned-item reporting — top 20 customers by lost revenue. */
   def q10(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
-      .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
+    Tables.load(s, dir, "customer")
+      .join(Tables.load(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
       .where(to_date(col("o_orderdate")) >= lit("1996-01-01") &&
              to_date(col("o_orderdate")) < lit("1996-04-01"))
-      .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
+      .join(Tables.load(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
       .where(col("l_returnflag") === "R")
-      .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
+      .join(broadcast(Tables.load(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
       .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 4)
         .as("revenue"))
@@ -88,10 +85,10 @@ object TpchQueries {
     * lineitem (EXISTS → left-semi join; adapted: the testdata has no
     * l_commitdate, so "late" becomes "returned"). */
   def q4(s: SparkSession, dir: String): DataFrame = {
-    val late = t(s, dir, "lineitem")
+    val late = Tables.load(s, dir, "lineitem")
       .where(col("l_returnflag") === "R")
       .select(col("l_orderkey"))
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .where(to_date(col("o_orderdate")) >= lit("1996-01-01") &&
              to_date(col("o_orderdate")) < lit("1996-04-01"))
       .join(late, col("o_orderkey") === col("l_orderkey"), "left_semi")
@@ -103,7 +100,7 @@ object TpchQueries {
   /** Q6: revenue-change forecast — one selective scan, no join. The filter
     * must reach the parquet scan (PushedFilters), which is the point. */
   def q6(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .where(to_date(col("l_shipdate")) >= lit("1996-01-01") &&
              to_date(col("l_shipdate")) < lit("1997-01-01") &&
              col("l_discount").between(0.05, 0.07) &&
@@ -112,10 +109,10 @@ object TpchQueries {
 
   /** Q14: promotion effect — conditional aggregation over a join. */
   def q14(s: SparkSession, dir: String): DataFrame = {
-    val joined = t(s, dir, "lineitem")
+    val joined = Tables.load(s, dir, "lineitem")
       .where(to_date(col("l_shipdate")) >= lit("1996-03-01") &&
              to_date(col("l_shipdate")) < lit("1996-04-01"))
-      .join(broadcast(t(s, dir, "part")), col("l_partkey") === col("p_partkey"))
+      .join(broadcast(Tables.load(s, dir, "part")), col("l_partkey") === col("p_partkey"))
     val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
     joined.agg(
       (lit(100.0) *
@@ -131,15 +128,15 @@ object TpchQueries {
     // pre-filter BOTH nation dims to the pair before the big joins — the
     // direction OR below can't push through a 5-way join, and without this
     // every nation's suppliers/customers would flow through the chain
-    val custNation = t(s, dir, "nation").where(col("n_name").isin(n1, n2))
+    val custNation = Tables.load(s, dir, "nation").where(col("n_name").isin(n1, n2))
       .select(col("n_nationkey").as("c_nk"), col("n_name").as("cust_nation"))
-    val suppNation = t(s, dir, "nation").where(col("n_name").isin(n1, n2))
+    val suppNation = Tables.load(s, dir, "nation").where(col("n_name").isin(n1, n2))
       .select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation"))
-    t(s, dir, "supplier")
+    Tables.load(s, dir, "supplier")
       .join(broadcast(suppNation), col("s_nationkey") === col("s_nk"))
-      .join(t(s, dir, "lineitem"), col("s_suppkey") === col("l_suppkey"))
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      .join(Tables.load(s, dir, "lineitem"), col("s_suppkey") === col("l_suppkey"))
+      .join(Tables.load(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(Tables.load(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
       .join(broadcast(custNation), col("c_nationkey") === col("c_nk"))
       .where((col("supp_nation") === n1 && col("cust_nation") === n2) ||
              (col("supp_nation") === n2 && col("cust_nation") === n1))
@@ -154,20 +151,20 @@ object TpchQueries {
     * region-restricted part market, per order year. Ratio of two rounded
     * sums (SURVEY §4: round the sums, emit the raw quotient). */
   def q8(s: SparkSession, dir: String): DataFrame = {
-    val asiaCustomers = t(s, dir, "customer")
-      .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(s, dir, "region").where(col("r_name") === "ASIA")),
+    val asiaCustomers = Tables.load(s, dir, "customer")
+      .join(broadcast(Tables.load(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
+      .join(broadcast(Tables.load(s, dir, "region").where(col("r_name") === "ASIA")),
         col("n_regionkey") === col("r_regionkey"))
       .select(col("c_custkey"))
-    val suppNation = t(s, dir, "nation")
+    val suppNation = Tables.load(s, dir, "nation")
       .select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation"))
     val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-    t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "part").where(col("p_type").startsWith("ECONOMY"))),
+    Tables.load(s, dir, "lineitem")
+      .join(broadcast(Tables.load(s, dir, "part").where(col("p_type").startsWith("ECONOMY"))),
         col("l_partkey") === col("p_partkey"))
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(Tables.load(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
       .join(asiaCustomers, col("o_custkey") === col("c_custkey"), "left_semi")
-      .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
+      .join(Tables.load(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(suppNation), col("s_nationkey") === col("s_nk"))
       .groupBy(year(col("o_orderdate")).as("o_year"))
       .agg((round(sum(when(col("supp_nation") === "NATION_9", rev).otherwise(lit(0.0))), 4) /
@@ -178,8 +175,8 @@ object TpchQueries {
   /** Q12: shipmode-ish priority classes per month (adapted: no shipmode
     * column — classifies by order priority urgency instead). */
   def q12(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
+    Tables.load(s, dir, "orders")
+      .join(Tables.load(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
       .where(to_date(col("l_shipdate")) >= lit("1997-01-01") &&
              to_date(col("l_shipdate")) < lit("1998-01-01"))
       .groupBy(month(col("l_shipdate")).as("ship_month"))
@@ -194,8 +191,8 @@ object TpchQueries {
     * zero-order customers, then a histogram of counts. Two shuffles
     * (custkey, then count) — both on shrinking data. */
   def q13(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
-      .join(t(s, dir, "orders").where(col("o_orderpriority") =!= "4-NOT SPECIFIED"),
+    Tables.load(s, dir, "customer")
+      .join(Tables.load(s, dir, "orders").where(col("o_orderpriority") =!= "4-NOT SPECIFIED"),
         col("c_custkey") === col("o_custkey"), "left")
       .groupBy(col("c_custkey"))
       .agg(count(col("o_orderkey")).as("c_count"))
@@ -209,7 +206,7 @@ object TpchQueries {
     * ONE scan of lineitem feeds both, instead of Catalyst planning the
     * whole scan+aggregate twice. */
   def q15(s: SparkSession, dir: String): DataFrame = {
-    val rev = t(s, dir, "lineitem")
+    val rev = Tables.load(s, dir, "lineitem")
       .where(to_date(col("l_shipdate")) >= lit("1996-01-01") &&
              to_date(col("l_shipdate")) < lit("1996-04-01"))
       .groupBy(col("l_suppkey"))
@@ -219,7 +216,7 @@ object TpchQueries {
     rev.join(broadcast(rev.agg(max(col("total_revenue")).as("m"))),
         col("total_revenue") === col("m"))
       .drop("m")
-      .join(broadcast(t(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
+      .join(broadcast(Tables.load(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
       .orderBy("s_suppkey")
   }
@@ -232,11 +229,11 @@ object TpchQueries {
     * filter (no p_container column). */
   def q17(s: SparkSession, dir: String): DataFrame = {
     val parts = broadcast(
-      t(s, dir, "part").where(col("p_brand") === "Brand#3" && col("p_size") <= 5)
+      Tables.load(s, dir, "part").where(col("p_brand") === "Brand#3" && col("p_size") <= 5)
         .select(col("p_partkey")))
     // referenced twice (threshold aggregate + final filter) — one scan,
     // and the checkpointed relation is already brand-pruned tiny
-    val li = t(s, dir, "lineitem")
+    val li = Tables.load(s, dir, "lineitem")
       .join(parts, col("l_partkey") === col("p_partkey"))
       .select(col("p_partkey"), col("l_quantity"), col("l_extendedprice"))
       .localCheckpoint(false)
@@ -251,13 +248,13 @@ object TpchQueries {
     * enrich with customer/order detail. The rollup shrinks lineitem to
     * qualifying orderkeys BEFORE the joins. */
   def q18(s: SparkSession, dir: String): DataFrame = {
-    val big = t(s, dir, "lineitem")
+    val big = Tables.load(s, dir, "lineitem")
       .groupBy(col("l_orderkey"))
       .agg(sum(col("l_quantity")).as("total_qty"))
       .where(col("total_qty") > 150)
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .join(big, col("o_orderkey") === col("l_orderkey"))
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      .join(Tables.load(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
       .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
         to_date(col("o_orderdate")).as("order_date"), col("o_totalprice"),
         col("total_qty"))
@@ -270,8 +267,8 @@ object TpchQueries {
     * shared l_quantity bounds push to the parquet scan. Adapted: p_size
     * ranges stand in for the container lists. */
   def q19(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "part")), col("l_partkey") === col("p_partkey"))
+    Tables.load(s, dir, "lineitem")
+      .join(broadcast(Tables.load(s, dir, "part")), col("l_partkey") === col("p_partkey"))
       .where(
         (col("p_brand") === "Brand#12" && col("p_size").between(1, 5) &&
           col("l_quantity").between(1, 11)) ||
@@ -288,20 +285,20 @@ object TpchQueries {
     * left-semi) but NO OTHER supplier returned (NOT EXISTS → left-anti).
     * Both probes are equi-joins on orderkey, candidate-only. */
   def q21(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"),
+    val li = Tables.load(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"),
       col("l_returnflag"))
     val failed = li.where(col("l_returnflag") === "R")
     val others = li.select(col("l_orderkey").as("o2_ok"), col("l_suppkey").as("o2_sk"))
     val othersReturned = failed.select(col("l_orderkey").as("o3_ok"),
       col("l_suppkey").as("o3_sk"))
     failed
-      .join(t(s, dir, "orders").where(col("o_orderstatus") === "F")
+      .join(Tables.load(s, dir, "orders").where(col("o_orderstatus") === "F")
         .select(col("o_orderkey")), col("l_orderkey") === col("o_orderkey"), "left_semi")
       .join(others, col("l_orderkey") === col("o2_ok") &&
         col("l_suppkey") =!= col("o2_sk"), "left_semi")
       .join(othersReturned, col("l_orderkey") === col("o3_ok") &&
         col("l_suppkey") =!= col("o3_sk"), "left_anti")
-      .join(broadcast(t(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
+      .join(broadcast(Tables.load(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("s_name"))
       .agg(count(lit(1)).as("numwait"))
       .orderBy(col("numwait").desc, col("s_name"))
@@ -318,14 +315,14 @@ object TpchQueries {
     * no-orders-ever predicate selects nothing). */
   def q22(s: SparkSession, dir: String): DataFrame = {
     val keys = Seq(1, 3, 5, 7, 9, 11, 13)
-    val cust = t(s, dir, "customer").where(col("c_nationkey").isin(keys: _*))
+    val cust = Tables.load(s, dir, "customer").where(col("c_nationkey").isin(keys: _*))
     val avgCents = cust.where(col("c_acctbal") > 0.0)
       .agg((sum(round(col("c_acctbal") * 100, 0).cast("long")) /
             count(lit(1))).as("avg_cents"))
     cust
       .join(broadcast(avgCents),
         round(col("c_acctbal") * 100, 0).cast("long") > col("avg_cents"))
-      .join(t(s, dir, "orders")
+      .join(Tables.load(s, dir, "orders")
           .where(to_date(col("o_orderdate")) >= lit("2000-01-01"))
           .select(col("o_custkey")),
         col("c_custkey") === col("o_custkey"), "left_anti")
@@ -365,17 +362,17 @@ object TpchQueries {
     * plan guard can audit the shape that the localCheckpoint hides from
     * the final frame (post-checkpoint it reads as a Scan ExistingRDD). */
   private[graft] def q2PrunedSupply(s: SparkSession, dir: String): DataFrame = {
-    val supply = t(s, dir, "lineitem")
+    val supply = Tables.load(s, dir, "lineitem")
       .groupBy(col("l_partkey").as("ps_partkey"), col("l_suppkey").as("ps_suppkey"))
       .agg(round(min(col("l_extendedprice") / col("l_quantity")), 4)
         .as("ps_supplycost"))
-    val euroSupp = t(s, dir, "supplier")
-      .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(s, dir, "region").where(col("r_name") === "EUROPE")),
+    val euroSupp = Tables.load(s, dir, "supplier")
+      .join(broadcast(Tables.load(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
+      .join(broadcast(Tables.load(s, dir, "region").where(col("r_name") === "EUROPE")),
         col("n_regionkey") === col("r_regionkey"))
       .select(col("s_suppkey"), col("s_name"), col("s_acctbal"), col("n_name"))
     broadcast(
-        t(s, dir, "part").where(col("p_size") <= 10 && col("p_type") === "ECONOMY")
+        Tables.load(s, dir, "part").where(col("p_size") <= 10 && col("p_type") === "ECONOMY")
           .select(col("p_partkey")))
       .join(supply, col("p_partkey") === col("ps_partkey"))
       .join(broadcast(euroSupp), col("ps_suppkey") === col("s_suppkey"))
@@ -388,12 +385,12 @@ object TpchQueries {
     * the shape (5-way join, per-row profit expression, nation-year rollup)
     * is the point. */
   def q9(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "part").where(col("p_name").contains("gear"))),
+    Tables.load(s, dir, "lineitem")
+      .join(broadcast(Tables.load(s, dir, "part").where(col("p_name").contains("gear"))),
         col("l_partkey") === col("p_partkey"))
-      .join(broadcast(t(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
+      .join(broadcast(Tables.load(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
+      .join(Tables.load(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(broadcast(Tables.load(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name").as("nation"), year(col("o_orderdate")).as("o_year"))
       .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
         - lit(0.5) * col("p_retailprice") * col("l_quantity")), 4).as("sum_profit"))
@@ -405,13 +402,13 @@ object TpchQueries {
     * sums and the global threshold integer-deterministic; the threshold
     * rides a broadcast one-row join. */
   def q11(s: SparkSession, dir: String): DataFrame = {
-    val natSupp = t(s, dir, "supplier")
-      .join(broadcast(t(s, dir, "nation").where(col("n_name") === "NATION_7")),
+    val natSupp = Tables.load(s, dir, "supplier")
+      .join(broadcast(Tables.load(s, dir, "nation").where(col("n_name") === "NATION_7")),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"))
     // referenced twice (threshold total + final filter) — one scan, and the
     // checkpointed relation is per-part tiny (same treatment as q15/q17)
-    val perPart = t(s, dir, "lineitem")
+    val perPart = Tables.load(s, dir, "lineitem")
       .join(broadcast(natSupp), col("l_suppkey") === col("s_suppkey"), "left_semi")
       .groupBy(col("l_partkey").as("p_partkey"))
       .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long")).as("value_cents"))
@@ -429,11 +426,11 @@ object TpchQueries {
     * scan). Distinct pairs shrink lineitem before any join; the exclusion
     * is a broadcast anti-join. */
   def q16(s: SparkSession, dir: String): DataFrame = {
-    val pairs = t(s, dir, "lineitem")
+    val pairs = Tables.load(s, dir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey")).distinct()
-    val complained = t(s, dir, "supplier").where(col("s_acctbal") < 0)
+    val complained = Tables.load(s, dir, "supplier").where(col("s_acctbal") < 0)
       .select(col("s_suppkey"))
-    broadcast(t(s, dir, "part")
+    broadcast(Tables.load(s, dir, "part")
         .where(col("p_brand") =!= "Brand#5" && col("p_type") =!= "PROMO" &&
           col("p_size").isin(1, 4, 9, 16, 25, 36, 49)))
       .join(pairs, col("p_partkey") === col("l_partkey"))
@@ -452,8 +449,8 @@ object TpchQueries {
   def q20(s: SparkSession, dir: String): DataFrame = {
     val in96 = to_date(col("l_shipdate")) >= lit("1996-01-01") &&
       to_date(col("l_shipdate")) < lit("1997-01-01")
-    val excess = t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "part").where(col("p_name").startsWith("small"))
+    val excess = Tables.load(s, dir, "lineitem")
+      .join(broadcast(Tables.load(s, dir, "part").where(col("p_name").startsWith("small"))
           .select(col("p_partkey"))),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("l_suppkey"), col("l_partkey"))
@@ -462,9 +459,9 @@ object TpchQueries {
         sum(when(!in96, col("l_quantity")).otherwise(lit(0.0))).as("qty_other"))
       .where(col("qty_96") > 0 && col("qty_other") > lit(0.5) * col("qty_96"))
       .select(col("l_suppkey")).distinct()
-    t(s, dir, "supplier")
-      .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(s, dir, "region").where(col("r_name") === "ASIA")),
+    Tables.load(s, dir, "supplier")
+      .join(broadcast(Tables.load(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
+      .join(broadcast(Tables.load(s, dir, "region").where(col("r_name") === "ASIA")),
         col("n_regionkey") === col("r_regionkey"))
       .join(broadcast(excess), col("s_suppkey") === col("l_suppkey"), "left_semi")
       .select(col("s_name"), col("s_acctbal"))

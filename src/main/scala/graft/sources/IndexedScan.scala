@@ -12,6 +12,8 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.Tables
+
 /** The [[StatsIndex]] min/max + Bloom file-skipping wired into the scan
   * itself: a [[FileIndex]] implementation whose `listFiles` consults the
   * persisted index against the query's OWN pushed predicates — so ANY
@@ -132,9 +134,14 @@ object IndexedScan extends Logging {
   def readIndexedGeneration(spark: SparkSession, tablePath: String,
                             indexRoot: String, gen: Long,
                             blooms: Option[DataFrame] = None): DataFrame = {
-    val stats = StatsIndex.load(spark, s"$indexRoot/_v=$gen")
+    import spark.implicits._
+    // one collect of the manifest: it both decides emptiness and becomes
+    // the index's snapshot (a generation is immutable, so the rows never
+    // need re-collecting)
+    val rows = StatsIndex.load(spark, s"$indexRoot/_v=$gen")
+      .as[StatsIndex.FileColStats].collect()
     val schema = StatsIndex.generationSchema(spark, indexRoot, gen)
-    if (stats.select("file").limit(1).isEmpty)
+    if (rows.isEmpty)
       // a merge that deletes every remaining row legally commits a
       // FILE-EMPTY manifest — the table at that generation is the empty
       // relation under its recorded schema, not an error (partition
@@ -146,7 +153,7 @@ object IndexedScan extends Logging {
       // prune files with zero call-site plumbing
       val gblooms = blooms.orElse(
         StatsIndex.generationBlooms(spark, indexRoot, gen))
-      readIndexedFrom(spark, tablePath, stats, gblooms, schema)
+      readIndexedRows(spark, tablePath, rows, gblooms, schema)
     }
   }
 
@@ -183,14 +190,15 @@ object IndexedScan extends Logging {
 
   /** [[readIndexedFrom]] fed ALREADY-COLLECTED stats rows — for callers
     * that obtained the slice's rows as part of their own driver work
-    * (e.g. [[graft.operators.ChangeFeed.betweenCols]]'s fused
-    * manifest-diff job) and must not pay a second per-slice collect
-    * job at index construction. */
+    * ([[readIndexedGeneration]]'s manifest collect,
+    * [[graft.operators.ChangeFeed.betweenCols]]'s fused manifest-diff
+    * job) and must not pay a second collect job at index construction. */
   private[graft] def readIndexedRows(spark: SparkSession, tablePath: String,
                                      rows: Array[StatsIndex.FileColStats],
+                                     blooms: Option[DataFrame] = None,
                                      dataSchema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
     relationFor(spark,
-      new GraftFileIndex(spark, tablePath, null, None, dataSchema, Some(rows)))
+      new GraftFileIndex(spark, tablePath, null, blooms, dataSchema, Some(rows)))
 
   private def relationFor(spark: SparkSession, idx: GraftFileIndex): DataFrame = {
     val format =
@@ -280,12 +288,11 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
 
   /** Data schema: the caller's override when given (schema evolution —
     * old files lack later columns physically and must be read under the
-    * EVOLVED schema so the scan fills nulls), else inferred from one
-    * surviving footer. */
+    * EVOLVED schema so the scan fills nulls), else read from one
+    * surviving file's footer on the driver ([[graft.Tables.schemaOf]]). */
   val dataSchema: StructType = schemaOverride.getOrElse {
     val one = byFile.keysIterator.min
-    val df = if (isOrc) spark.read.orc(one) else spark.read.parquet(one)
-    df.schema
+    if (isOrc) spark.read.orc(one).schema else Tables.schemaOf(spark, one)
   }
 
   override val rootPaths: Seq[Path] = Seq(new Path(tablePath))

@@ -14,6 +14,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
+import graft.Tables
+
 /** File-level min/max statistics index over a parquet table — the
   * metadata layer that makes [[graft.operators.ZOrder]]'s clustering
   * pay off at catalog scale, the same role Delta's add-file stats /
@@ -358,7 +360,7 @@ object StatsIndex extends org.apache.spark.internal.Logging {
     stats.write.mode("overwrite").parquet(indexPath)
 
   def load(spark: SparkSession, indexPath: String): DataFrame =
-    spark.read.parquet(indexPath)
+    Tables.read(spark, indexPath)
 
   // -------------------------------------------------------------------
   // Versioned generations — the concurrent-reader manifest
@@ -1124,7 +1126,7 @@ object StatsIndex extends org.apache.spark.internal.Logging {
     require(orc.isEmpty || parquet.isEmpty,
       s"$caller: index mixes parquet and ORC files — one table, one format")
     if (orc.nonEmpty) spark.read.orc(orc: _*)
-    else spark.read.parquet(parquet: _*)
+    else Tables.read(spark, parquet: _*)
   }
 
   // -------------------------------------------------------------------
@@ -1255,7 +1257,7 @@ object StatsIndex extends org.apache.spark.internal.Logging {
     blooms.write.mode("overwrite").parquet(path)
 
   def loadBlooms(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.read(spark, path)
 
   /** Files that MAY contain rows matching every equality predicate —
     * conjunctive, conservative: a file is dropped only when some

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Partition-count compaction for `_batch_id`-partitioned landed logs
   * ([[DatamartStream]], [[HeavyHittersStream]], [[SketchStream]]).
   *
@@ -82,7 +84,7 @@ object BatchLog {
     val foldSet = foldReal ++ ids.filter(_ == CompactedBatchId)
     // partition values read back from paths are INTs — cast before isin
     val merged = fold(
-        spark.read.parquet(path)
+        Tables.read(spark, path)
           .where(col("_batch_id").cast("long").isin(foldSet: _*))
           .drop("_batch_id"))
       .withColumn("_batch_id", lit(CompactedBatchId))

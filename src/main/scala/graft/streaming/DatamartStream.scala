@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Tables
 import graft.operators.DatamartIncr
 
 /** Streaming customer-analytics maintenance — the replay-safe face of
@@ -49,7 +50,7 @@ object DatamartStream {
   /** The whole-stream merged order-grain state from the landed log —
     * one keyed aggregation over ~|orders| rows. */
   def mergedState(spark: SparkSession, path: String): DataFrame =
-    DatamartIncr.orderState(spark.read.parquet(path).drop("_batch_id"))
+    DatamartIncr.orderState(Tables.read(spark, path).drop("_batch_id"))
 
   /** Fold old `_batch_id` partitions into one merged-state snapshot,
     * keeping the `keepRecent` newest ids raw and replayable — bounds the

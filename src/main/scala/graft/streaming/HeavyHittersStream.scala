@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Tables
 import graft.operators.HeavyHitters
 
 /** Continuous heavy-hitter monitoring — the streaming face of
@@ -66,7 +67,7 @@ object HeavyHittersStream {
   def mergedCandidates(spark: SparkSession, path: String, keyCol: String,
                        support: Double): DataFrame =
     HeavyHitters.mergeToCap(
-        spark.read.parquet(path).drop("_batch_id"),
+        Tables.read(spark, path).drop("_batch_id"),
         keyCol, HeavyHitters.capFor(support))
       .select(col(keyCol))
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Tables
 import graft.operators.Scd2
 
 /** Incremental SCD2 dimension maintenance from a CDC stream — the
@@ -106,7 +107,7 @@ object Scd2Stream {
     // collect is driver-bounded regardless of batch size
     val touched = kb.select(col("_kb")).distinct().collect().map(_.getLong(0))
     if (touched.nonEmpty) {
-      val history = spark.read.parquet(rawPath)
+      val history = Tables.read(spark, rawPath)
         .where(col("_kb").isin(touched.toSeq: _*))
         .drop("_batch_id")
       val rebuilt = Scd2.fromHistory(history, key, ts, tracked, tieBreak)
@@ -131,11 +132,11 @@ object Scd2Stream {
                    pol: CompactionPolicy): Seq[Long] = {
     if (buckets.isEmpty) return Nil
     // ≤ nBuckets rows each, by construction
-    val rawStats = spark.read.parquet(rawPath)
+    val rawStats = Tables.read(spark, rawPath)
       .where(col("_kb").isin(buckets: _*))
       .groupBy(col("_kb"))
       .agg(count(lit(1)).as("_raw"), max(col(ts)).as("_maxTs"))
-    val verStats = spark.read.parquet(dimPath)
+    val verStats = Tables.read(spark, dimPath)
       .where(col("_kb").isin(buckets: _*))
       .groupBy(col("_kb")).agg(count(lit(1)).as("_ver"))
     val stats = rawStats.join(verStats, Seq("_kb"))
@@ -176,7 +177,7 @@ object Scd2Stream {
   /** The maintained dimension, bucket column dropped — column contract
     * identical to [[Scd2.fromHistory]] so consumers can swap freely. */
   def readDim(spark: SparkSession, dimPath: String): DataFrame =
-    spark.read.parquet(dimPath).drop("_kb")
+    Tables.read(spark, dimPath).drop("_kb")
 
   /** `_batch_id` partition value compacted observations land under. Real
     * batch ids are ≥ 0, so the sentinel never collides with a replay. */
@@ -223,7 +224,7 @@ object Scd2Stream {
                      watermark: Option[Column] = None): Unit = {
     if (buckets.isEmpty) return
     import org.apache.spark.sql.expressions.Window
-    val raw = spark.read.parquet(rawPath)
+    val raw = Tables.read(spark, rawPath)
       .where(col("_kb").isin(buckets: _*))
     val orderCols: Seq[Column] = col(ts) +: tieBreak.map(col)
     val w = Window.partitionBy(col(key)).orderBy(orderCols: _*)

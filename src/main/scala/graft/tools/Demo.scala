@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Tables
 import graft.pipeline.StarPipeline
 
 /** End-to-end surface drive: extensions via config string, SQL-level
@@ -19,7 +20,7 @@ object Demo {
     spark.sparkContext.setLogLevel("ERROR")
 
     // 1. SQL surface of the native expression (registered via config string)
-    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    Tables.read(spark, "/root/testdata/sf0.001/embeddings.parquet")
       .createOrReplaceTempView("emb")
     val sims = spark.sql(
       """SELECT a.vec_id i, b.vec_id j,
@@ -48,7 +49,7 @@ object Demo {
       StarPipeline.tasks(spark, "/root/testdata/sf0.001", wh), cb)
     println(s"pipeline order: ${report.order.mkString(" -> ")}")
     println(s"pipeline succeeded: ${report.succeeded}")
-    val ss = spark.read.parquet(s"$wh/datamart/sales_summary")
+    val ss = Tables.read(spark, s"$wh/datamart/sales_summary")
     println(s"sales_summary rows: ${ss.count()}")
     ss.orderBy("date", "product_category").show(3, false)
 
@@ -59,7 +60,7 @@ object Demo {
     val badDomain = DomainConfig.Domain("ads",
       raw = Seq(DomainConfig.RawTable("clicks", Seq(ColumnSpec("click_id", "STRING")))),
       transforms = Seq(DomainConfig.Transform("core.counts", Nil)(s =>
-        s.read.parquet("/nonexistent"))))
+        Tables.read(s, "/nonexistent"))))
     val badReport = Dag.run(
       PipelineBuilder.tasks(spark, badDomain, emptyInbox, s"$wh/ads", "2024-03-01"), cb)
     println(s"failure-path statuses: ${badReport.statuses.toSeq.sortBy(_._1)}")

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.operators.{Dedup, Pq, Scd2, Sessionize, Similarity}
 
 /** Scale-shape stress: replicate the test corpus 20-50× and run the
@@ -29,7 +30,7 @@ object Stress {
     // 100k docs: 20 replicas of the 5k corpus; replica 0 keeps the original
     // text, others get a per-replica token appended (near-dups of the
     // original, exact dups of nothing) → realistic cluster structure.
-    val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+    val docs = Tables.read(spark, "/root/testdata/sf0.1/documents.parquet")
     val big = docs.crossJoin(spark.range(20).select(col("id").as("rep")))
       .select(
         (col("doc_id") * 20 + col("rep")).as("doc_id"),
@@ -355,7 +356,7 @@ object Stress {
       val qs = data.selectExpr("CAST(user_id AS DOUBLE) AS u", "value")
         .stat.approxQuantile(Array("u", "value"), Array(0.2, 0.35, 0.1, 0.3), 0.001)
       def scanRows(p: String): Long = {
-        val q = spark.read.parquet(p).where(
+        val q = Tables.read(spark, p).where(
           col("user_id").between(qs(0)(0).toLong, qs(0)(1).toLong) &&
           col("value").between(qs(1)(2), qs(1)(3)))
         q.collect()
@@ -398,13 +399,13 @@ object Stress {
       assert(nd == nw, s"incremental dim $nd != full rebuild $nw")
       // raw-log compaction: one observation per (key, change) — the
       // re-read every future rebuild pays shrinks to the version count
-      val rawRowsBefore = spark.read.parquet(s"$root/raw").count()
+      val rawRowsBefore = Tables.read(spark, s"$root/raw").count()
       val tc0 = System.nanoTime()
       graft.streaming.Scd2Stream.compactBuckets(spark, s"$root/raw",
         0L until 64L, "user_id", "ts", "event_type",
         tieBreak = Seq("event_type"))
       val tCompact = (System.nanoTime() - tc0) / 1e9
-      val rawRowsAfter = spark.read.parquet(s"$root/raw").count()
+      val rawRowsAfter = Tables.read(spark, s"$root/raw").count()
       assert(rawRowsAfter < rawRowsBefore,
         s"compaction did not shrink the log: $rawRowsAfter vs $rawRowsBefore")
       // a post-compaction point update must still match the full rebuild
@@ -518,8 +519,8 @@ object Stress {
         bloomColumns = Seq("order_id"))
       val tBloom = (System.nanoTime() - t0) / 1e9
       val rowsPerFile = 2000000.0 / 4 / files.size
-      assert(spark.read.parquet(tNo).count() ==
-        spark.read.parquet(tBl).count())
+      assert(Tables.read(spark, tNo).count() ==
+        Tables.read(spark, tBl).count())
       println(f"   split: ${mrg.size} merge / ${pass.size} pass-through of " +
         f"${files.size} files (~${(rowsPerFile * mrg.size).toLong} vs " +
         f"${(rowsPerFile * files.size).toLong} rows into the key shuffle); " +
@@ -704,7 +705,7 @@ object Stress {
         s"index pruned too little: ${surviving.size} of 32")
       val pred = col("user_id").between(qs(0)(0), qs(0)(1)) &&
         col("value").between(qs(1)(2), qs(1)(3))
-      val full = spark.read.parquet(s"$root/z").where(pred).count()
+      val full = Tables.read(spark, s"$root/z").where(pred).count()
       val pruned = graft.sources.StatsIndex.prunedRead(spark, stats, ranges)
         .where(pred).count()
       assert(pruned == full, s"pruned read lost rows: $pruned vs $full")
@@ -880,7 +881,7 @@ object Stress {
 
     // 40k vectors: 20 replicas of the 2k embeddings (float jitter via
     // deterministic per-replica scale so replicas are near-parallel).
-    val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
+    val emb = Tables.read(spark, "/root/testdata/sf0.1/embeddings.parquet")
     val bigEmb = emb.crossJoin(spark.range(20).select(col("id").as("rep")))
       .select((col("vec_id") * 20 + col("rep")).as("vec_id"),
               col("embedding"))

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.operators.{ChangeFeed, Compaction, SnapshotDiff, Upsert}
 import graft.sources.{IndexedScan, StatsIndex}
 
@@ -184,7 +185,7 @@ object StressVersioned {
         startAt = Some(g2))
     }
     println(s"   hops delivered: $delivered; feed rows: " +
-      spark.read.parquet(s"$root/feed").count())
+      Tables.read(spark, s"$root/feed").count())
 
     // -----------------------------------------------------------------
     // `big`: the 10x datapoint — 20M rows / 400 days, the slope check
@@ -251,7 +252,7 @@ object StressVersioned {
           startAt = Some(bg1))
       }
       time(s"BIG replica verification after $nRep hops") {
-        val rep = spark.read.parquet(s"$root/big-replica")
+        val rep = Tables.read(spark, s"$root/big-replica")
         assert(rep.count() == 20000000L, "replica row count")
         val repSum = rep.agg(sum("amount")).head().getDouble(0)
         val liveSum = ChangeFeed.asOf(spark, bigPath, bigIdx, bg2)

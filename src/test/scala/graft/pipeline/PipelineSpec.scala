@@ -538,5 +538,5 @@ class PipelineSpec extends SparkSpec {
       s"one runDay ran $jobs Spark jobs, ceiling $RunDayJobsCeiling")
   }
 
-  private val RunDayJobsCeiling = 44
+  private val RunDayJobsCeiling = 27
 }
