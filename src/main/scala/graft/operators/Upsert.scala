@@ -1,10 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.Tables
+import graft.sources.StatsIndex
 
 /** MERGE/upsert semantics on immutable storage.
   *
@@ -19,6 +22,14 @@ import graft.Tables
   * exchange.
   */
 object Upsert {
+
+  /** Bloom sizing and the probe cap of the versioned writers: expected
+    * items per (file, column) filter, false-positive rate, and the most
+    * distinct update keys a merge probes before it skips the split (a
+    * bigger batch would touch most files anyway). */
+  private val MaxBloomProbeKeys = 100000
+  private val BloomItemsPerFile = 1L << 20
+  private val BloomFpp = 0.01
 
   /** Latest-wins merge of `updates` into `base` on `keys`: any key present in
     * `updates` takes the update row, others keep the base row. Row count ==
@@ -111,9 +122,9 @@ object Upsert {
                 statsColumns: Seq[String] = Nil,
                 bloomsPath: Option[String] = None,
                 bloomColumns: Seq[String] = Nil,
-                maxBloomProbeKeys: Int = 100000,
-                bloomItemsPerFile: Long = 1L << 20,
-                bloomFpp: Double = 0.01,
+                maxBloomProbeKeys: Int = MaxBloomProbeKeys,
+                bloomItemsPerFile: Long = BloomItemsPerFile,
+                bloomFpp: Double = BloomFpp,
                 deletes: Option[DataFrame] = None): Unit = {
     require(keys.nonEmpty, "mergeInto: empty key list")
     // `deletes`: keys to REMOVE (MERGE's WHEN MATCHED DELETE), carrying
@@ -141,7 +152,7 @@ object Upsert {
       s"mergeInto: bloomColumns must be a non-empty subset of the merge " +
         s"keys; got ${bloomColumns.mkString(", ")}")
     val spark = updates.sparkSession
-    val dest = new org.apache.hadoop.fs.Path(path)
+    val dest = new Path(path)
     val fs = dest.getFileSystem(spark.sessionState.newHadoopConf())
     val exists = fs.exists(dest) &&
       fs.listStatus(dest).exists(st =>
@@ -165,7 +176,7 @@ object Upsert {
     def applyDeletes(df: DataFrame): DataFrame = deletes.fold(df)(d =>
       df.join(d.select(keys.map(col): _*), keys, "left_anti"))
     def partDirName(v: Any): String =
-      graft.sources.StatsIndex.partitionDir(spark, Seq(partitionCol), Seq(v))
+      StatsIndex.partitionDir(spark, Seq(partitionCol), Seq(v))
     val merged =
       if (!exists) applyDeletes(updates)
       else {
@@ -175,8 +186,8 @@ object Upsert {
             case Some(idx) =>
               // file list from the index relation — no table-tree listing;
               // basePath keeps the partition column parsed from the paths
-              val files = graft.sources.StatsIndex.partitionFiles(
-                graft.sources.StatsIndex.load(spark, idx), partitionCol, touched)
+              val files = StatsIndex.partitionFiles(
+                StatsIndex.load(spark, idx), partitionCol, touched)
               // safety invariant: a touched partition that EXISTS on disk
               // must be represented in the index — an unmatched existing
               // partition (stale index, or a partition value Spark
@@ -184,7 +195,7 @@ object Upsert {
               // DROP its rows from the merge and then overwrite the
               // directory. One bounded exists() per touched partition.
               val unmatched = touched.filter { v =>
-                fs.exists(new org.apache.hadoop.fs.Path(dest, partDirName(v))) &&
+                fs.exists(new Path(dest, partDirName(v))) &&
                   !files.exists(_.contains(s"/${partDirName(v)}/"))
               }
               require(unmatched.isEmpty,
@@ -211,7 +222,7 @@ object Upsert {
         val core = applyDeletes(merge(mergeSlice, updates, keys))
         passThrough.fold(core)(p => core.unionByName(p))
       }
-    val staging = new org.apache.hadoop.fs.Path(dest,
+    val staging = new Path(dest,
       s"_staging_${java.util.UUID.randomUUID().toString.take(8)}")
     try {
       merged.write.mode("overwrite").partitionBy(partitionCol)
@@ -225,7 +236,7 @@ object Upsert {
       // match AND the exists() for exactly those values, leaving the
       // old generation (and its deleted rows) to resurrect (ADVICE r17)
       val emptied = touched
-        .map(v => new org.apache.hadoop.fs.Path(dest, partDirName(v)))
+        .map(v => new Path(dest, partDirName(v)))
         .filterNot(p => published.contains(p))
         .filter(fs.exists(_))
       emptied.foreach(p => fs.delete(p, true))
@@ -234,13 +245,13 @@ object Upsert {
         // stays partial (writeRaw's statsColumns discipline); emptied
         // partitions pass too — replacePartitions drops rows for
         // directories that no longer exist
-        graft.sources.StatsIndex.replacePartitions(spark, idx,
+        StatsIndex.replacePartitions(spark, idx,
           (published ++ emptied).map(_.toString), statsColumns)
       }
       bloomsPath.foreach { bp =>
         // reconcile, not append: publish REPLACED the touched partitions'
         // files wholesale, so their old bloom rows must drop with them
-        graft.sources.StatsIndex.reconcileBlooms(spark, path, bp, bloomColumns,
+        StatsIndex.reconcileBlooms(spark, path, bp, bloomColumns,
           bloomItemsPerFile, bloomFpp)
       }
     } catch {
@@ -310,10 +321,7 @@ object Upsert {
                              partitionCols: Seq[String], indexRoot: String,
                              statsColumns: Seq[String] = Nil,
                              deletes: Option[DataFrame] = None,
-                             bloomColumns: Seq[String] = Nil,
-                             maxBloomProbeKeys: Int = 100000,
-                             bloomItemsPerFile: Long = 1L << 20,
-                             bloomFpp: Double = 0.01): Long = {
+                             bloomColumns: Seq[String] = Nil): Long = {
     require(keys.nonEmpty, "mergeIntoVersioned: empty key list")
     require(partitionCols.nonEmpty, "mergeIntoVersioned: no partition columns")
     partitionCols.foreach(pc => require(!keys.contains(pc),
@@ -336,22 +344,13 @@ object Upsert {
         s"mergeIntoVersioned: deletes frame lacks column(s) ${missing.mkString(", ")}")
     }
     val spark = updates.sparkSession
-    val dest = new org.apache.hadoop.fs.Path(path)
-    val fs = dest.getFileSystem(spark.sessionState.newHadoopConf())
-    val gens = graft.sources.StatsIndex.generations(spark, indexRoot)
-    if (gens.isEmpty)
-      require(!fs.exists(dest) ||
-          graft.sources.StatsIndex.listDataFiles(spark, path).isEmpty,
-        s"mergeIntoVersioned: $path holds data but $indexRoot has no " +
-          "generation — adopt it first with saveGeneration(build(...))")
-    val current =
-      if (gens.isEmpty) None
-      else Some(graft.sources.StatsIndex.load(spark, s"$indexRoot/_v=${gens.last}"))
+    val (base, current) = latestSnapshot(spark, path, indexRoot,
+      "mergeIntoVersioned")
 
     // the touched slice is needed BEFORE the write (the snapshot read),
     // and a delete-only partition stages no file — so unlike the replace
     // it is collected up front, rendered as the writer renders it
-    val touched = graft.sources.StatsIndex.partitionTuples(
+    val touched = StatsIndex.partitionTuples(
       deletes.fold(updates.select(partitionCols.map(col): _*))(d =>
         updates.select(partitionCols.map(col): _*)
           .unionByName(d.select(partitionCols.map(col): _*))),
@@ -362,7 +361,7 @@ object Upsert {
     def applyDeletes(df: DataFrame): DataFrame = deletes.fold(df)(d =>
       df.join(d.select(keys.map(col): _*), keys, "left_anti"))
 
-    val (dataSchema, align) = evolveVersioned(spark, indexRoot, gens,
+    val (dataSchema, align) = evolveVersioned(spark, indexRoot, base,
       current, updates, partitionCols)
 
     // 1-2. snapshot read of the touched slice, merge, stage. With a
@@ -375,22 +374,21 @@ object Upsert {
     // |touched partitions| (the regime where every file of a day spans
     // the full key range and min/max pruning is useless).
     val sliceFiles = current.map(c =>
-      graft.sources.StatsIndex.partitionTupleFiles(c, partitionCols, touched))
+      StatsIndex.partitionTupleFiles(c, partitionCols, touched))
       .getOrElse(Nil)
     val probeKeys = deletes.fold(updates.select(keys.map(col): _*))(d =>
       updates.select(keys.map(col): _*)
         .unionByName(d.select(keys.map(col): _*)))
     val (mergeFiles, passFiles) =
-      if (bloomColumns.isEmpty || sliceFiles.isEmpty || gens.isEmpty)
-        (sliceFiles, Nil)
+      if (bloomColumns.isEmpty || sliceFiles.isEmpty) (sliceFiles, Nil)
       else splitByBlooms(spark, sliceFiles, probeKeys,
-        Some(graft.sources.StatsIndex.generationBloomsPath(indexRoot, gens.last)),
-        bloomColumns, maxBloomProbeKeys)
+        base.map(StatsIndex.generationBloomsPath(indexRoot, _)),
+        bloomColumns, MaxBloomProbeKeys)
     // the slice is read under the table's schema, partition columns
     // included: inferring them from the directory names would turn a
     // DECIMAL into a DOUBLE (or `007` into 7) and re-land the slice
     // under a directory name its old files do not share
-    val sliceSchema = org.apache.spark.sql.types.StructType(
+    val sliceSchema = StructType(
       dataSchema.fields ++ partitionCols.map(updates.schema(_)))
     val merged = applyDeletes(
       if (mergeFiles.isEmpty) align(updates)
@@ -398,9 +396,9 @@ object Upsert {
         align(spark.read.schema(sliceSchema).option("basePath", path)
           .parquet(mergeFiles: _*)),
         align(updates), keys))
-    commitVersioned(spark, path, indexRoot, gens, current, merged,
-      partitionCols, touched, passFiles, dataSchema, statsColumns,
-      bloomColumns, bloomItemsPerFile, bloomFpp)
+    commitVersioned(spark, path, indexRoot, base, current,
+      stageBy(merged, partitionCols), partitionCols, touched, passFiles,
+      Some(dataSchema), statsColumns, bloomColumns)
   }
 
   /** Dynamic partition overwrite as a GENERATION COMMIT — the versioned
@@ -435,22 +433,13 @@ object Upsert {
           s"column(s) ${missing.mkString(", ")}")
     }
     val spark = df.sparkSession
-    val dest = new org.apache.hadoop.fs.Path(path)
-    val fs = dest.getFileSystem(spark.sessionState.newHadoopConf())
-    val gens = graft.sources.StatsIndex.generations(spark, indexRoot)
-    if (gens.isEmpty)
-      require(!fs.exists(dest) ||
-          graft.sources.StatsIndex.listDataFiles(spark, path).isEmpty,
-        s"replacePartitionsVersioned: $path holds data but $indexRoot has " +
-          "no generation — adopt it first with saveGeneration(build(...))")
-    val current =
-      if (gens.isEmpty) None
-      else Some(graft.sources.StatsIndex.load(spark, s"$indexRoot/_v=${gens.last}"))
-    val (dataSchema, align) = evolveVersioned(spark, indexRoot, gens,
+    val (base, current) = latestSnapshot(spark, path, indexRoot,
+      "replacePartitionsVersioned")
+    val (dataSchema, align) = evolveVersioned(spark, indexRoot, base,
       current, df, partitionCols)
-    commitVersioned(spark, path, indexRoot, gens, current, align(df),
-      partitionCols, Nil, Nil, dataSchema, statsColumns, Nil,
-      1L << 20, 0.01, checkTouched = { touched =>
+    commitVersioned(spark, path, indexRoot, base, current,
+      stageBy(align(df), partitionCols), partitionCols, Nil, Nil,
+      Some(dataSchema), statsColumns, Nil, checkTouched = { touched =>
         require(touched.nonEmpty,
           "replacePartitionsVersioned: empty frame — nothing to replace " +
             "(an empty landing is the caller's no-op, not a generation)")
@@ -471,16 +460,16 @@ object Upsert {
     * columns with nulls exactly where history had no value. Shared
     * column names must agree on type (loudly). Returns the evolved data
     * schema and the column-alignment projection. */
-  private def evolveVersioned(spark: org.apache.spark.sql.SparkSession,
-                              indexRoot: String, gens: Seq[Long],
+  private def evolveVersioned(spark: SparkSession,
+                              indexRoot: String, base: Option[Long],
                               current: Option[DataFrame], incoming: DataFrame,
                               partitionCols: Seq[String])
-      : (org.apache.spark.sql.types.StructType, DataFrame => DataFrame) = {
+      : (StructType, DataFrame => DataFrame) = {
     val newDataFields = incoming.schema.fields
       .filterNot(f => partitionCols.contains(f.name))
-    val oldDataFields: Seq[org.apache.spark.sql.types.StructField] =
-      current.flatMap { c =>
-        graft.sources.StatsIndex.generationSchema(spark, indexRoot, gens.last)
+    val oldDataFields: Seq[StructField] =
+      base.zip(current).flatMap { case (g, c) =>
+        StatsIndex.generationSchema(spark, indexRoot, g)
           .map(_.fields.toSeq)
           .orElse(c.select(col("file")).limit(1).collect().headOption
             .map(r => Tables.schemaOf(spark, r.getString(0)).fields.toSeq))
@@ -501,52 +490,75 @@ object Upsert {
         if (df.columns.contains(f.name)) col(f.name)
         else lit(null).cast(f.dataType).as(f.name)
       }: _*)
-    (org.apache.spark.sql.types.StructType(dataFields), align)
+    (StructType(dataFields), align)
   }
 
-  /** The shared commit tail of the versioned writers: stage `out`
-    * partitioned, move its files into the live tree under fresh `gen-`
-    * names (pure additions — a crash leaves vacuum-able garbage, never
-    * a corrupt table), and commit generation N+1 = survivors + fresh
-    * stats (+ carried/fresh blooms). `passFiles` are bloom-proven
-    * unchanged files that survive the manifest despite sitting in
-    * touched partitions.
+  /** The latest complete generation under `indexRoot` and its manifest
+    * — the snapshot every versioned write derives from and commits
+    * against. No generation yet is a bootstrap only for an empty (or
+    * missing) table: a non-empty UNINDEXED table is refused, since
+    * committing over it would silently make its files invisible. */
+  private[graft] def latestSnapshot(spark: SparkSession, path: String,
+                                    indexRoot: String, op: String)
+      : (Option[Long], Option[DataFrame]) = {
+    val base = StatsIndex.generations(spark, indexRoot).lastOption
+    if (base.isEmpty) {
+      val dest = new Path(path)
+      require(!dest.getFileSystem(spark.sessionState.newHadoopConf()).exists(dest) ||
+          StatsIndex.listDataFiles(spark, path).isEmpty,
+        s"$op: $path holds data but $indexRoot has no generation — " +
+          "adopt it first with saveGeneration(build(...))")
+    }
+    (base, base.map(g => StatsIndex.load(spark, s"$indexRoot/_v=$g")))
+  }
+
+  /** The writers' staging step: `out` written once, partitioned. */
+  private def stageBy(out: DataFrame, partitionCols: Seq[String]): Path => Unit =
+    staging => out.write.mode("overwrite").partitionBy(partitionCols: _*)
+      .parquet(staging.toString)
+
+  /** The one GENERATION COMMIT of every versioned write: `stage` writes
+    * the new files under the staging root as `c=v` partition directories
+    * (nested for multi-level layouts), they move into the live tree
+    * under fresh `gen-` names (pure additions — a crash leaves
+    * vacuum-able garbage, never a corrupt table), and generation N+1 =
+    * survivors + fresh stats (+ carried/fresh blooms) commits against
+    * `base`. `passFiles` are bloom-proven unchanged files that survive
+    * the manifest despite sitting in touched partitions.
     *
     * The touched partitions are `knownTouched` (tuples the caller had to
     * collect before writing — a merge's delete-only partitions stage no
     * file) plus every `c=v` directory the staged write produced, read
     * back from the directory names by
     * [[graft.sources.StatsIndex.partitionOf]] (the default partition
-    * reads as NULL) — so `out` runs exactly once, as the write.
-    * `checkTouched` sees that set after the staged write and before any
-    * file moves in: a guard that raises publishes nothing, and the
-    * staging directory is deleted either way. */
-  private def commitVersioned(spark: org.apache.spark.sql.SparkSession,
-                              path: String, indexRoot: String,
-                              gens: Seq[Long], current: Option[DataFrame],
-                              out: DataFrame, partitionCols: Seq[String],
-                              knownTouched: Seq[Seq[String]],
-                              passFiles: Seq[String],
-                              dataSchema: org.apache.spark.sql.types.StructType,
-                              statsColumns: Seq[String],
-                              bloomColumns: Seq[String],
-                              bloomItemsPerFile: Long,
-                              bloomFpp: Double,
-                              checkTouched: Seq[Seq[String]] => Unit = _ => ()): Long = {
-    val dest = new org.apache.hadoop.fs.Path(path)
+    * reads as NULL) — so the staged frame runs exactly once, as the
+    * write. `checkTouched` sees that set after the staged write and
+    * before any file moves in: a guard that raises publishes nothing,
+    * and the staging directory is deleted either way. */
+  private[graft] def commitVersioned(spark: SparkSession,
+                                     path: String, indexRoot: String,
+                                     base: Option[Long], current: Option[DataFrame],
+                                     stage: Path => Unit,
+                                     partitionCols: Seq[String],
+                                     knownTouched: Seq[Seq[String]],
+                                     passFiles: Seq[String],
+                                     dataSchema: Option[StructType],
+                                     statsColumns: Seq[String],
+                                     bloomColumns: Seq[String],
+                                     checkTouched: Seq[Seq[String]] => Unit = _ => ()): Long = {
+    val dest = new Path(path)
     val fs = dest.getFileSystem(spark.sessionState.newHadoopConf())
-    val staging = new org.apache.hadoop.fs.Path(dest,
+    val staging = new Path(dest,
       s"_staging_${java.util.UUID.randomUUID().toString.take(8)}")
     try {
-      out.write.mode("overwrite").partitionBy(partitionCols: _*)
-        .parquet(staging.toString)
+      stage(staging)
 
       // move staged files in under fresh names — pure additions.
       // Multi-level layouts nest `c=v` directories; walk them down to
       // the leaf files, preserving each file's relative partition path.
       val runId = java.util.UUID.randomUUID().toString.take(8)
-      def staged(dir: org.apache.hadoop.fs.Path,
-                 rel: Seq[String]): Seq[(org.apache.hadoop.fs.Path, Seq[String])] =
+      def staged(dir: Path,
+                 rel: Seq[String]): Seq[(Path, Seq[String])] =
         fs.listStatus(dir).toSeq.flatMap { st =>
           val n = st.getPath.getName
           if (st.isDirectory && n.contains("="))
@@ -558,12 +570,12 @@ object Upsert {
         }
       val stagedFiles = staged(staging, Nil)
       val touched = (knownTouched ++ stagedFiles.map(_._2).distinct.map(rel =>
-        graft.sources.StatsIndex.partitionOf(rel.mkString("/")).map(_._2))).distinct
+        StatsIndex.partitionOf(rel.mkString("/")).map(_._2))).distinct
       checkTouched(touched)
       val movedIn = stagedFiles.map { case (f, rel) =>
-        val target = new org.apache.hadoop.fs.Path(dest, rel.mkString("/"))
+        val target = new Path(dest, rel.mkString("/"))
         fs.mkdirs(target)
-        val in = new org.apache.hadoop.fs.Path(target,
+        val in = new Path(target,
           s"gen-$runId-${f.getName}")
         // one retry after re-mkdirs: a concurrent vacuum's empty-dir
         // sweep can delete `target` between the mkdirs and the rename
@@ -577,10 +589,10 @@ object Upsert {
       }
 
       // commit: generation N+1 = untouched survivors + the new files
-      val fresh = graft.sources.StatsIndex.statsForFiles(
+      val fresh = StatsIndex.statsForFiles(
         spark, movedIn, statsColumns)
       val nextGen = current.map { c =>
-        val untouchedRows = graft.sources.StatsIndex.restrictToPartitions(
+        val untouchedRows = StatsIndex.restrictToPartitions(
           c, partitionCols, touched, keep = false)
         // bloom pass-through files SURVIVE the manifest despite sitting
         // in touched partitions — their rows are provably unchanged
@@ -592,31 +604,31 @@ object Upsert {
       }.getOrElse(fresh)
       // the generation's bloom relation: the previous generation's rows
       // for files still in the manifest (semi-join — never a rebuild),
-      // plus fresh filters for the files this write landed. Maintained
-      // whenever bloomColumns is set OR a previous relation exists, so
-      // coverage survives a bloom-less call conservatively (new files
-      // simply stay unknown-kept until a covered merge or compaction).
-      val carried = gens.lastOption
-        .flatMap(g => graft.sources.StatsIndex.generationBlooms(spark, indexRoot, g))
-        .map(_.join(nextGen.select(col("file")).distinct(), Seq("file"),
-          "left_semi"))
+      // plus fresh filters for the files this write landed, over
+      // `bloomColumns` and every column the previous relation covers —
+      // so a compaction or a bloom-less merge of a bloom-indexed table
+      // keeps the whole manifest covered
+      val previous = base.flatMap(StatsIndex.generationBlooms(spark, indexRoot, _))
+      val carried = previous.map(_.join(nextGen.select(col("file")).distinct(),
+        Seq("file"), "left_semi"))
+      val freshColumns = (bloomColumns ++ previous.toSeq.flatMap(
+        _.select(col("column")).distinct().collect().map(_.getString(0)))).distinct
       val freshBlooms =
-        if (bloomColumns.isEmpty || movedIn.isEmpty) None
-        else Some(graft.sources.StatsIndex.bloomsForFiles(spark, movedIn,
-          bloomColumns, bloomItemsPerFile, bloomFpp))
+        if (freshColumns.isEmpty || movedIn.isEmpty) None
+        else Some(StatsIndex.bloomsForFiles(spark, movedIn,
+          freshColumns, BloomItemsPerFile, BloomFpp))
       val nextBlooms = (carried, freshBlooms) match {
         case (Some(c), Some(f)) => Some(c.unionByName(f))
         case (c, f) => c.orElse(f)
       }
       // optimistic commit (the Delta slot protocol): this manifest was
-      // derived from `gens.last` — if any other writer committed past it
+      // derived from `base` — if any other writer committed past it
       // meanwhile, publishing would lose their update, so the commit
       // claims its slot exclusively and aborts with
       // ConcurrentWriteException instead (nothing published; retry
       // re-reads the new latest generation)
-      graft.sources.StatsIndex.saveGeneration(nextGen, indexRoot,
-        Some(dataSchema), partitionCols, nextBlooms,
-        expectedBase = Some(gens.lastOption.getOrElse(0L)))
+      StatsIndex.saveGeneration(nextGen, indexRoot, dataSchema,
+        partitionCols, nextBlooms, expectedBase = Some(base.getOrElse(0L)))
     } finally fs.delete(staging, true)
   }
 
@@ -638,7 +650,7 @@ object Upsert {
     while (true) {
       try return body()
       catch {
-        case e: graft.sources.StatsIndex.ConcurrentWriteException =>
+        case e: StatsIndex.ConcurrentWriteException =>
           tries += 1
           if (tries >= attempts) throw e
           if (backoffMs > 0) Thread.sleep(backoffMs * tries)
@@ -656,7 +668,7 @@ object Upsert {
     * soundness: a file holding a full matching key survives EVERY key
     * column's any-value test, so failing one test proves the file
     * key-free. */
-  private[graft] def splitByBlooms(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def splitByBlooms(spark: SparkSession,
                             files: Seq[String], updates: DataFrame,
                             bloomsPath: Option[String],
                             bloomColumns: Seq[String],
@@ -666,10 +678,10 @@ object Upsert {
       case Some(p) => p
       case None => return (files, Nil)
     }
-    val bpPath = new org.apache.hadoop.fs.Path(bp)
+    val bpPath = new Path(bp)
     if (!bpPath.getFileSystem(spark.sessionState.newHadoopConf()).exists(bpPath))
       return (files, Nil) // first merge before any bloom build: no split
-    val blooms = graft.sources.StatsIndex.loadBlooms(spark, bp)
+    val blooms = StatsIndex.loadBlooms(spark, bp)
     import spark.implicits._
     val covered = blooms.select(col("file")).distinct()
       .as[String].collect().toSet
@@ -685,13 +697,13 @@ object Upsert {
           val rows = updates.select(col(c)).distinct().limit(maxProbe + 1)
             .collect()
           if (rows.length > maxProbe || rows.exists(_.isNullAt(0))) None
-          else Some(graft.sources.StatsIndex.pruneFilesBloomAny(
+          else Some(StatsIndex.pruneFilesBloomAny(
             blooms, c, strValues = rows.map(_.getString(0)).toSeq).toSet)
         case LongType | IntegerType =>
           val rows = updates.select(col(c).cast("long")).distinct()
             .limit(maxProbe + 1).collect()
           if (rows.length > maxProbe || rows.exists(_.isNullAt(0))) None
-          else Some(graft.sources.StatsIndex.pruneFilesBloomAny(
+          else Some(StatsIndex.pruneFilesBloomAny(
             blooms, c, longValues = rows.map(_.getLong(0)).toSeq).toSet)
         case other => throw new IllegalArgumentException(
           s"mergeInto: bloom column '$c' is $other — equality membership " +

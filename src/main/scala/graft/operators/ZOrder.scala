@@ -83,7 +83,7 @@ object ZOrder {
     * column name is collision-proofed against `df`'s own columns — a user
     * table with a `_z` column must not get it silently overwritten and
     * dropped. Shared by [[writeClustered]] and compaction's zorder
-    * rewrite ([[Compaction.compact]]). */
+    * rewrite ([[Compaction.compactVersioned]]). */
   private[operators] def clustered(df: DataFrame, cols: Seq[String],
                                    nFiles: Int, bits: Int = DefaultBits): DataFrame = {
     require(nFiles >= 1, s"nFiles=$nFiles")

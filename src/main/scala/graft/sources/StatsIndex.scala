@@ -584,8 +584,23 @@ object StatsIndex extends org.apache.spark.internal.Logging {
     * whichever old file came first. Absent for generations written
     * before schema recording (readers fall back to file inference). */
   def generationSchema(spark: SparkSession, indexRoot: String,
-                       gen: Long): Option[StructType] = {
-    val p = new Path(indexRoot, s"_schema_v=$gen.json")
+                       gen: Long): Option[StructType] =
+    readSidecar(spark, indexRoot, s"_schema_v=$gen.json")
+
+  /** The partition column names recorded when generation `gen` was
+    * committed (ordered, outermost first) — what lets a FILE-EMPTY
+    * manifest still answer with a correctly-schemed empty relation.
+    * Absent for generations written before recording. */
+  def generationPartitionCols(spark: SparkSession, indexRoot: String,
+                              gen: Long): Option[Seq[String]] =
+    readSidecar(spark, indexRoot, s"_partcols_v=$gen.json")
+      .map(_.fieldNames.toSeq)
+
+  /** The reading twin of [[saveGeneration]]'s sidecar writer: the
+    * struct recorded as JSON in `indexRoot/name`, if it exists. */
+  private def readSidecar(spark: SparkSession, indexRoot: String,
+                          name: String): Option[StructType] = {
+    val p = new Path(indexRoot, name)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) None
     else {
@@ -595,25 +610,6 @@ object StatsIndex extends org.apache.spark.internal.Logging {
       Some(org.apache.spark.sql.types.DataType.fromJson(
           new String(buf, java.nio.charset.StandardCharsets.UTF_8))
         .asInstanceOf[StructType])
-    }
-  }
-
-  /** The partition column names recorded when generation `gen` was
-    * committed (ordered, outermost first) — what lets a FILE-EMPTY
-    * manifest still answer with a correctly-schemed empty relation.
-    * Absent for generations written before recording. */
-  def generationPartitionCols(spark: SparkSession, indexRoot: String,
-                              gen: Long): Option[Seq[String]] = {
-    val p = new Path(indexRoot, s"_partcols_v=$gen.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(0, buf) finally in.close()
-      Some(org.apache.spark.sql.types.DataType.fromJson(
-          new String(buf, java.nio.charset.StandardCharsets.UTF_8))
-        .asInstanceOf[StructType].fieldNames.toSeq)
     }
   }
 
@@ -970,9 +966,9 @@ object StatsIndex extends org.apache.spark.internal.Logging {
     * tuple restriction goes through [[restrictToPartitions]], so this
     * one threshold governs [[partitionTupleFiles]]/[[partitionFiles]]
     * (the versioned merge's slice read), [[replacePartitions]], the
-    * versioned commit's survivor filter in
-    * [[graft.operators.Upsert]] and
-    * [[graft.operators.Compaction.compactVersioned]]'s. */
+    * survivor filter of the one versioned commit,
+    * [[graft.operators.Upsert.commitVersioned]] (merges, partition
+    * replaces and compactions alike). */
   private[graft] val wideTupleThreshold: Int = 64
 
   /** The manifest rows under (`keep = true`) or not under (`keep =

@@ -94,7 +94,7 @@ object StressVersioned {
     val before = StatsIndex.loadLatest(spark, fidx)
       .select("file").distinct().count()
     val gc = time(s"compactVersioned: 100k-row partition at $before manifest files") {
-      Compaction.compactVersioned(spark, fpath, fidx, "day",
+      Compaction.compactVersioned(spark, fpath, fidx,
         targetBytes = 1L << 30, minFiles = 2)
     }
     val after = StatsIndex.loadLatest(spark, fidx)
