@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.sources.{IndexedScan, StatsIndex}
 
 /** Change data feed + time travel over a VERSIONED table
@@ -249,8 +249,8 @@ object ChangeFeed {
     // manifest-diff plan — without this checkpoint the two emptiness
     // probes below, the merge's touched-partition collect, and the merge
     // scan each re-ran the whole diff pipeline (4-5 executions per hop,
-    // measured at sf0.1). Blocks release with the plan (transient reap).
-    val ch = changes.localCheckpoint()
+    // measured at sf0.1). The first probe below stores it.
+    val ch = Materialize.pin(changes)
     val upserts = ch.where(col("op").isin("insert", "update"))
       .select(keys.map(col) ++
         afterCols.map(c => col(s"a_$c").as(c)): _*)

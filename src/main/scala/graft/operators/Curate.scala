@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** End-to-end corpus curation — the composition a training-data pipeline
   * actually runs at 100 TB, as ONE operator: quality filter → language
   * filter → exact dedup → near-dup clustering → canonical keep. Each doc
@@ -35,33 +37,31 @@ object Curate {
              jaccardThreshold: Double = 0.5): DataFrame = {
     val base = docs.select(col(idCol), col(textCol))
     // Every stage output feeds BOTH the next stage and the final verdict
-    // join — lazy localCheckpoints make each one compute once (and keep the
-    // clustering loop's own checkpoints from re-deriving the text scoring),
-    // with storage released when the returned plan is dropped.
-    val scored = TextAnalysis.quality(TextAnalysis.langId(base, textCol), textCol)
-      .select(col(idCol), col(textCol),
-        // null score (empty/degenerate text) counts as unusable, not kept
-        (coalesce(col("quality_score"), lit(-1.0)) < minQuality).as("_lowq"),
-        lang.map(l => col("predicted_lang") =!= l).getOrElse(lit(false)).as("_wlang"))
-      .localCheckpoint(false)
+    // join — pins make each one compute once (and keep the clustering
+    // loop's own pins from re-deriving the text scoring).
+    val scored = Materialize.pin(
+      TextAnalysis.quality(TextAnalysis.langId(base, textCol), textCol)
+        .select(col(idCol), col(textCol),
+          // null score (empty/degenerate text) counts as unusable, not kept
+          (coalesce(col("quality_score"), lit(-1.0)) < minQuality).as("_lowq"),
+          lang.map(l => col("predicted_lang") =!= l).getOrElse(lit(false)).as("_wlang")))
 
     val passed = scored.where(!col("_lowq") && !col("_wlang"))
       .select(col(idCol), col(textCol))
     // Dedup.exact's output still carries the text column, so the
-    // survivors are a FILTER over the checkpointed exact relation — the
+    // survivors are a FILTER over the pinned exact relation — the
     // former formulation re-joined `passed` against the survivor ids,
     // one extra doc-grain shuffle join carrying the text payload.
-    val exactFull = Dedup.exact(passed, idCol, textCol)
+    val exactFull = Materialize.pin(Dedup.exact(passed, idCol, textCol)
       .select(col(idCol), col(textCol),
-        col("canonical_id").as("_ex_canon"), col("is_dup").as("_exdup"))
-      .localCheckpoint(false)
+        col("canonical_id").as("_ex_canon"), col("is_dup").as("_exdup")))
     val exact = exactFull.select(col(idCol), col("_ex_canon"), col("_exdup"))
     val exactSurvivors = exactFull.where(!col("_exdup"))
       .select(col(idCol), col(textCol))
-    val clusters = Dedup.clusters(exactSurvivors, idCol, textCol, jaccardThreshold)
-      .select(col(idCol), col("cluster_id").as("_cluster"),
-        (!col("is_canonical")).as("_neardup"))
-      .localCheckpoint(false)
+    val clusters = Materialize.pin(
+      Dedup.clusters(exactSurvivors, idCol, textCol, jaccardThreshold)
+        .select(col(idCol), col("cluster_id").as("_cluster"),
+          (!col("is_canonical")).as("_neardup")))
 
     // An exact duplicate's canonical may ITSELF have been discarded as a
     // near-duplicate; chase one hop through the cluster map so canonical_id

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.graft.Bridge
 
+import graft.Materialize
 import graft.functions.{MinHashSignature, ShingleSet, SimHash64}
 import graft.functions.TextFunctions._
 
@@ -74,19 +75,13 @@ object Dedup {
   /** Candidate pairs (i < j) sharing at least one LSH bucket, with the
     * estimated similarity = fraction of matching signature components.
     *
-    * The band relation is materialized once via a lazy `localCheckpoint`
-    * before the self-join: both branches would otherwise re-derive the
-    * whole shingle→signature pipeline (12 md5 passes over every shingle).
-    * Unlike `persist`, which pins a CacheManager entry until an explicit
-    * unpersist — so a pipeline calling this repeatedly accumulates pinned
-    * band relations across calls — the checkpoint blocks are released by
-    * the ContextCleaner as soon as the returned plan is unreferenced.
-    * Same treatment as [[simhashPairs]] / `Similarity.neardupPairsLsh`.
+    * The band relation is pinned once ([[Materialize.pin]]) before the
+    * self-join: both branches would otherwise re-derive the whole
+    * shingle→signature pipeline (12 md5 passes over every shingle).
     */
   def minhashCandidates(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     candidatesFromBands(
-      lshBands(minhashSignatures(docs, idCol, textCol), idCol)
-        .localCheckpoint(false),
+      Materialize.pin(lshBands(minhashSignatures(docs, idCol, textCol), idCol)),
       idCol)
 
   /** The self-join half of [[minhashCandidates]], over an already
@@ -113,7 +108,7 @@ object Dedup {
     *
     * ONE text pass: the shingle set (verification) and the MinHash
     * signature (candidate generation) are computed in the SAME
-    * projection over one shared checkpoint — the former formulation
+    * projection over one shared pin — the former formulation
     * ran two independent full scans of the corpus text (one per fused
     * kernel), and the text scan is the dominant cost at scale. The
     * ≥3-words eligibility predicate is identical on both paths
@@ -122,42 +117,39 @@ object Dedup {
   def ngramJaccard(docs: DataFrame, idCol: String, textCol: String,
                    threshold: Double): DataFrame = {
     val ws = normWords(col(textCol))
-    // lazy localCheckpoint (not persist): the relation feeds the band
-    // self-join AND both verification joins; checkpoint blocks release
-    // with the plan instead of pinning a CacheManager entry per call
-    val base = docs
+    // pinned: the relation feeds the band self-join AND both
+    // verification joins
+    val base = Materialize.pin(docs
       .where(size(ws) >= 3)
       .select(col(idCol),
         Bridge.column(ShingleSet(Bridge.expression(ws), 3)).as("_sh"),
         Bridge.column(MinHashSignature(Bridge.expression(ws), NumHashes,
-          shingleSize = 3)).as("_sigarr"))
-      .localCheckpoint(false)
+          shingleSize = 3)).as("_sigarr")))
     val sh = base.select(col(idCol), col("_sh"))
     val sigs = (0 until NumHashes).foldLeft(base.drop("_sh")) {
       case (df, k) => df.withColumn(s"sig$k", col("_sigarr").getItem(k))
     }.drop("_sigarr")
-    // narrow band checkpoint (id, band, hash, sig…) so the self-join's
-    // two legs do not each deserialize the wide shingle arrays riding
-    // the base blocks — derived from blocks, not from a text re-scan
+    // narrow band pin (id, band, hash, sig…) so the self-join's two
+    // legs do not each deserialize the wide shingle arrays riding the
+    // base blocks — derived from blocks, not from a text re-scan
     val cand = candidatesFromBands(
-      lshBands(sigs, idCol).localCheckpoint(false), idCol)
+      Materialize.pin(lshBands(sigs, idCol)), idCol)
       .select("i", "j")
-    // intersection size computed ONCE per pair behind a lazy checkpoint
-    // barrier: without it, the thresholding filter pushes through the
+    // intersection size computed ONCE per pair behind a pin barrier:
+    // without it, the thresholding filter pushes through the
     // projection and re-inlines `array_intersect` into both the condition
     // and the output columns — 3-4 hash-set builds per candidate row,
     // measured ~2x the whole rescore at sf0.1. The barrier rows are
     // (i, j, 3 ints): tiny at any scale, because candidates are
     // band-bounded. Division arithmetic is unchanged (oracle parity).
-    val scored = cand
+    val scored = Materialize.pin(cand
       .join(sh.select(col(idCol).as("i"), col("_sh").as("sh_i")), "i")
       .join(sh.select(col(idCol).as("j"), col("_sh").as("sh_j")), "j")
       .select(col("i"), col("j"),
         Bridge.column(graft.functions.IntersectSize(
           Bridge.expression(col("sh_i")), Bridge.expression(col("sh_j"))))
           .cast("double").as("_inter"),
-        size(col("sh_i")).as("_ni"), size(col("sh_j")).as("_nj"))
-      .localCheckpoint(false)
+        size(col("sh_i")).as("_ni"), size(col("sh_j")).as("_nj")))
     scored
       .withColumn("jaccard",
         col("_inter") / (col("_ni") + col("_nj") - col("_inter")))
@@ -189,40 +181,37 @@ object Dedup {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold=$threshold outside (0, 1]")
     require(maxDf >= 2, s"maxDf=$maxDf: need >= 2 for any pair to form")
-    val sh = docs
+    val sh = Materialize.pin(docs
       .withColumn("_sh", Bridge.column(ShingleSet(
         Bridge.expression(normWords(col(textCol))), 3)))
       .where(size(col("_sh")) > 0)
-      .select(col(idCol), col("_sh"))
-      .localCheckpoint(false)
+      .select(col(idCol), col("_sh")))
     val grams = sh.select(col(idCol), explode(col("_sh")).as("gram"))
-    // checkpointed: the self-join below otherwise re-computes the gram
+    // pinned: the self-join below otherwise re-computes the gram
     // explode + df rollup once PER LEG (Catalyst has no common-subplan
     // reuse across join sides) — the executed plan showed two full
     // HashAggregate branches for the same rollup
-    val rare = grams.join(
+    val rare = Materialize.pin(grams.join(
       grams.groupBy(col("gram")).agg(count(lit(1)).as("_df"))
         .where(col("_df") <= maxDf)
         .select(col("gram")),
-      Seq("gram"))
-      .localCheckpoint(false)
+      Seq("gram")))
     val cand = rare.select(col("gram"), col(idCol).as("i"))
       .join(rare.select(col("gram"), col(idCol).as("j")), Seq("gram"))
       .where(col("i") < col("j"))
       .select("i", "j").distinct()
-    // single-evaluation rescore behind a lazy checkpoint barrier — see
+    // single-evaluation rescore behind a pin barrier — see
     // ngramJaccard: the filter would otherwise re-inline array_intersect
     // into condition + both output columns (4 evaluations per candidate).
     // Barrier rows are (i, j, 3 ints); candidate count is maxDf²-bounded.
-    val scored = cand
+    val scored = Materialize.pin(cand
       .join(sh.select(col(idCol).as("i"), col("_sh").as("sh_i")), "i")
       .join(sh.select(col(idCol).as("j"), col("_sh").as("sh_j")), "j")
       .select(col("i"), col("j"),
         Bridge.column(graft.functions.IntersectSize(
           Bridge.expression(col("sh_i")), Bridge.expression(col("sh_j"))))
           .cast("double").as("_inter"),
-        size(col("sh_i")).as("_ni"), size(col("sh_j")).as("_nj"))
-      .localCheckpoint(false)
+        size(col("sh_i")).as("_ni"), size(col("sh_j")).as("_nj")))
     scored
       .withColumn("containment_i", col("_inter") / col("_ni"))
       .withColumn("containment_j", col("_inter") / col("_nj"))
@@ -253,34 +242,20 @@ object Dedup {
     * that already ran [[ngramJaccard]] (or any pair source: embedding
     * near-dups, simhash bands) cluster without re-deriving the sketch.
     *
-    * Each iteration is checkpointed: iterative plans otherwise nest the
-    * previous iteration's plan several times over, and after ~10 iterations
-    * the (exponentially grown) plan tree stalls planning/AQE — caching
-    * alone reuses DATA but not the PLAN. Checkpointing truncates lineage to
-    * the materialized blocks, keeping every iteration O(1) plan size.
-    * (Found live: a 257-edge, large-diameter graph hung the persist-only
-    * version.)
-    *
-    * @param reliableCheckpoint use `checkpoint()` (to
-    *   `spark.sparkContext.setCheckpointDir`, which the CALLER must have
-    *   set — typically durable storage) instead of `localCheckpoint()`.
-    *   Local blocks die with their executor, which on a long cluster run
-    *   means one lost node re-runs the whole loop; the reliable variant
-    *   trades a write per iteration (the label relation is doc_id+label —
-    *   tiny next to the corpus) for executor-loss safety. Keep the default
-    *   for local / short-lived jobs.
+    * Each iteration is pinned ([[Materialize.pin]]): iterative plans
+    * otherwise nest the previous iteration's plan several times over, and
+    * after ~10 iterations the (exponentially grown) plan tree stalls
+    * planning/AQE — caching alone reuses DATA but not the PLAN. A pin
+    * truncates lineage to the stored data, keeping every iteration O(1)
+    * plan size. (Found live: a 257-edge, large-diameter graph hung the
+    * persist-only version.) Under a deployment checkpoint dir every pin
+    * is a durable write: the label relation is doc_id+label, tiny next to
+    * the corpus.
     */
   def clustersFromEdges(docs: DataFrame, edgesIn: DataFrame, idCol: String,
-                        maxIterations: Int = 30,
-                        reliableCheckpoint: Boolean = false): DataFrame = {
-    // lazy for the local variant (materialized by the first iteration's
-    // convergence count — see clustersFromCheckpointedEdges); eager for
-    // the reliable variant (durability before dependence)
-    def cp(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint() else df.localCheckpoint(false)
-    clustersFromCheckpointedEdges(docs, cp(edgesIn.select(col("i"), col("j"))),
-      idCol, maxIterations, reliableCheckpoint)
-  }
+                        maxIterations: Int = 30): DataFrame =
+    clustersFromCheckpointedEdges(docs,
+      Materialize.pin(edgesIn.select(col("i"), col("j"))), idCol, maxIterations)
 
   /** [[clustersFromEdges]] over an edge relation the CALLER already
     * materialized (checkpoint/persisted blocks) — skips the entry
@@ -290,28 +265,30 @@ object Dedup {
     * blocks outlive the loop. */
   private[graft] def clustersFromCheckpointedEdges(
       docs: DataFrame, edges: DataFrame, idCol: String,
-      maxIterations: Int = 30,
-      reliableCheckpoint: Boolean = false): DataFrame = {
-    // LAZY checkpoints: each iteration's only action (the convergence
-    // count below) doubles as the materialization job, so one job per
-    // iteration instead of checkpoint-then-count — lineage still
-    // truncates to the stored blocks once that job runs, which is all the
-    // O(1)-plan-size argument needs. The reliable variant stays eager:
-    // a durable checkpoint exists to survive executor loss, so write it
-    // before anything downstream depends on it.
-    def cp(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint() else df.localCheckpoint(false)
+      maxIterations: Int = 30): DataFrame = {
+    // Each iteration's only action (the convergence count below) doubles
+    // as the lazy pin's materialization job, so one job per iteration
+    // instead of pin-then-count — lineage still truncates to the stored
+    // blocks once that job runs, which is all the O(1)-plan-size
+    // argument needs.
     // symmetric adjacency
-    val adj = cp(edges.union(edges.select(col("j").as("i"), col("i").as("j"))))
+    val adj = Materialize.pin(
+      edges.union(edges.select(col("j").as("i"), col("i").as("j"))))
 
-    var labels = cp(adj.select(col("i").as("node")).distinct()
+    var labels = Materialize.pin(adj.select(col("i").as("node")).distinct()
       .withColumn("lbl", col("node")))
     var converged = false
     var iter = 0
     while (!converged && iter < maxIterations) {
+      // Left outer, though every j has a label (labels covers every node
+      // of the symmetric adj), so the rows are the inner join's: a left
+      // outer join can only build labels, which the pointer-jumping join
+      // below reuses. An inner join lets AQE broadcast whichever side's
+      // shuffle stage finishes first, and broadcasting adj costs one
+      // more job per iteration.
       val neighborMin = adj
         .join(labels.withColumnRenamed("node", "j").withColumnRenamed("lbl", "nlbl"),
-              Seq("j"))
+              Seq("j"), "left_outer")
         .groupBy(col("i").as("node")).agg(min(col("nlbl")).as("nmin"))
       // The previous label RIDES ALONG as `_old` so the convergence check
       // below is a filter-count over the iteration's own checkpointed
@@ -326,7 +303,7 @@ object Dedup {
       // convergence in O(log diameter) instead of O(diameter), which is what
       // makes long chains (observed: a 500-node graph with diameter > 10)
       // terminate quickly.
-      val next = cp(stepped
+      val next = Materialize.pin(stepped
         .join(labels.select(col("node").as("lbl"), col("lbl").as("lbl2")),
               Seq("lbl"), "left_outer")
         .select(col("node"), col("_old"),
@@ -378,14 +355,11 @@ object Dedup {
       struct(lit(b).as("band"),
         shiftrightunsigned(col("simhash"), 16 * b).bitwiseAND(lit(0xFFFFL)).as("bits"))
     }
-    // lazy localCheckpoint: both self-join branches share one materialized
-    // relation (otherwise the corpus is scanned and simhashed TWICE), and
-    // the blocks are released when the plan is dropped — same treatment as
-    // Similarity.neardupPairsLsh's bucket relation.
-    val banded = simhash(docs, idCol, textCol)
+    // pinned: both self-join branches share one materialized relation
+    // (otherwise the corpus is scanned and simhashed TWICE)
+    val banded = Materialize.pin(simhash(docs, idCol, textCol)
       .select(col(idCol), col("simhash"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col(idCol), col("simhash"), col("bb.band").as("band"), col("bb.bits").as("bits"))
-      .localCheckpoint(false)
+      .select(col(idCol), col("simhash"), col("bb.band").as("band"), col("bb.bits").as("bits")))
     val a = banded.select(col(idCol).as("i"), col("simhash").as("sim_i"),
       col("band"), col("bits"))
     val b = banded.select(col(idCol).as("j"), col("simhash").as("sim_j"),

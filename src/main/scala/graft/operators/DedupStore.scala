@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Incremental near-dup detection against a PERSISTED fingerprint store —
   * the production shape for a growing corpus: each new shard dedups
@@ -56,11 +56,10 @@ object DedupStore {
     */
   def incrementalCandidates(newDocs: DataFrame, idCol: String,
                             textCol: String, store: DataFrame): DataFrame = {
-    // one checkpointed band relation feeds both legs (and the self-join's
+    // one pinned band relation feeds both legs (and the self-join's
     // two branches) — the increment is fingerprinted exactly once
-    val newBands = Dedup.lshBands(
-        Dedup.minhashSignatures(newDocs, idCol, textCol), idCol)
-      .localCheckpoint(false)
+    val newBands = Materialize.pin(Dedup.lshBands(
+      Dedup.minhashSignatures(newDocs, idCol, textCol), idCol))
     // disjoint by construction: a mixed pair has exactly one side in the
     // store, a fresh pair neither
     mixedLeg(newBands, idCol, store)
@@ -120,9 +119,8 @@ object DedupStore {
   def incrementalCandidatesBloom(newDocs: DataFrame, idCol: String,
                                  textCol: String, store: DataFrame,
                                  bloomBytes: Array[Byte]): DataFrame = {
-    val newBands = Dedup.lshBands(
-        Dedup.minhashSignatures(newDocs, idCol, textCol), idCol)
-      .localCheckpoint(false)
+    val newBands = Materialize.pin(Dedup.lshBands(
+      Dedup.minhashSignatures(newDocs, idCol, textCol), idCol))
     val mightMatch = org.apache.spark.sql.graft.Bridge.column(
       graft.functions.BloomMightContain(
         org.apache.spark.sql.graft.Bridge.expression(
@@ -185,9 +183,9 @@ object DedupStore {
                           store: DataFrame,
                           threshold: Double = 0.75): DataFrame = {
     // the candidate relation feeds both orientations — one materialization
-    val cand = incrementalCandidates(newDocs, idCol, textCol, store)
-      .where(col("est_sim") >= threshold)
-      .localCheckpoint(false)
+    val cand = Materialize.pin(
+      incrementalCandidates(newDocs, idCol, textCol, store)
+        .where(col("est_sim") >= threshold))
     val oriented = cand
       .select(col("i").as("_doc"), col("j").as("_other"), col("est_sim"))
       .union(cand

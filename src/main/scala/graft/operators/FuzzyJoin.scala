@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Edit-distance (fuzzy) join — entity resolution over short keys
   * (names, titles, canonical URLs) at corpus scale.
   *
@@ -68,16 +70,13 @@ object FuzzyJoin {
   /** Fuzzy self-join: unordered pairs `a_id < b_id` within `maxDist`.
     * The id column must be orderable (the pair canonicalization).
     *
-    * The variant relation rides ONE lazy localCheckpoint shared by both
-    * join legs (the [[graft.operators.Dedup.minhashCandidates]] band
-    * discipline): the deletion-variant Generate builds ~len strings per
-    * row, and without the barrier BOTH legs re-ran the whole explode —
-    * measured ~20% of the self-join at sf0.1. Blocks release with the
-    * plan; results unchanged. */
+    * The variant relation rides ONE pin ([[Materialize.pin]]) shared by
+    * both join legs: the deletion-variant Generate builds ~len strings
+    * per row, and without the barrier BOTH legs re-ran the whole
+    * explode — measured ~20% of the self-join at sf0.1. */
   def selfJoin(df: DataFrame, idCol: String, strCol: String,
                maxDist: Int): DataFrame = {
-    val keys = keyed(df, idCol, strCol, maxDist, "a")
-      .localCheckpoint(false)
+    val keys = Materialize.pin(keyed(df, idCol, strCol, maxDist, "a"))
     val other = keys.withColumnsRenamed(
       Map("_a_id" -> "_b_id", "_a_s" -> "_b_s"))
     rescore(keys.join(other, "_v").where(col("_a_id") < col("_b_id")),

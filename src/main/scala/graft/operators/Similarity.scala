@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
+import graft.Materialize
 import graft.functions.{DotProduct, Hyperplanes, HyperplaneSignatures}
 
 /** Embedding similarity search.
@@ -76,28 +77,21 @@ object Similarity {
     * all-pairs variant is (1-(1-p^P)^T) per pair, p = 1 - θ/π — tune
     * `planesPerTable` up for high-similarity dedup corpora (see SCALING.md).
     *
-    * The bucket relation is materialized once via a lazy `localCheckpoint`
-    * (both self-join branches would otherwise recompute normalization +
-    * signatures for the whole corpus). Unlike `persist`, which pins an entry
-    * in the session CacheManager until someone explicitly unpersists it, the
-    * checkpoint blocks are released by the ContextCleaner as soon as the
-    * returned plan is unreferenced — a builder that leaks executor storage
-    * per call would defeat its own 100 TB purpose. (Caveat shared with
-    * [[Dedup.clustersFromEdges]]: `localCheckpoint` is not executor-loss
-    * safe; on a real cluster prefer a reliable checkpoint dir for long jobs.)
+    * The bucket relation is pinned once ([[Materialize.pin]]): both
+    * self-join branches would otherwise recompute normalization +
+    * signatures for the whole corpus.
     */
   def neardupPairsLsh(corpus: DataFrame, idCol: String, vecCol: String,
                       threshold: Double, nTables: Int, planesPerTable: Int,
                       dim: Int, seed: Long = 42L): DataFrame = {
-    val buckets = corpus
+    val buckets = Materialize.pin(corpus
       // signatures from the RAW vector (what the oracle sees) — signs are
       // normalization-invariant mathematically, this keeps them bitwise so.
       // Both expressions are fused + codegen'd and take the raw column
       // directly: no asDouble lambda, the projection stays in one span.
       .select(col(idCol), unitNorm(col(vecCol)).as("_vn"),
         lshSignatures(col(vecCol), nTables, planesPerTable, dim, seed).as("_sigs"))
-      .select(col(idCol), col("_vn"), posexplode(col("_sigs")).as(Seq("tbl", "sig")))
-      .localCheckpoint(false)
+      .select(col(idCol), col("_vn"), posexplode(col("_sigs")).as(Seq("tbl", "sig"))))
     val a = buckets.select(col(idCol).as("i"), col("_vn").as("va"), col("tbl"), col("sig"))
     val b = buckets.select(col(idCol).as("j"), col("_vn").as("vb"), col("tbl"), col("sig"))
     a.join(b, Seq("tbl", "sig")).where(col("i") < col("j"))
@@ -200,9 +194,9 @@ object Similarity {
     * is cell-local (equi-join on `cell`, never all-pairs, never
     * BroadcastNestedLoop); components run over EDGES only (near-dups,
     * vanishingly few at corpus scale); the final verdict join is id-keyed
-    * at doc grain. The assigned relation rides ONE scan via lazy
-    * localCheckpoint — both self-join branches and the verdict join reuse
-    * it. Cell skew (a dense semantic region) is AQE's skew-join case on
+    * at doc grain. The assigned relation rides ONE scan via a pin —
+    * both self-join branches and the verdict join reuse it. Cell skew
+    * (a dense semantic region) is AQE's skew-join case on
     * the cell key; the SemDeDup answer is raising `nCells` so cells stay
     * small. */
   /** SEMANTIC decontamination — the embedding-space sibling of
@@ -239,7 +233,7 @@ object Similarity {
                     seed: Long = 42L,
                     maxFitRows: Long = Ivf.MaxFitRows): DataFrame = {
     val (assigned, _) = Ivf.assign(corpus, idCol, vecCol, nCells, seed, maxFitRows)
-    semanticDedupAssigned(assigned.localCheckpoint(false), idCol, threshold)._1
+    semanticDedupAssigned(Materialize.pin(assigned), idCol, threshold)._1
   }
 
   /** [[semanticDedup]] against an ALREADY-BUILT IVF index — the amortized
@@ -251,7 +245,7 @@ object Similarity {
     semanticDedupAssigned(index.assigned, index.idCol, threshold)._1
 
   /** [[semanticDedupIndexed]] that ALSO hands back the operator's own
-    * materialized edge relation (columns `i`,`j`, checkpointed) — the
+    * materialized edge relation (columns `i`,`j`, pinned) — the
     * contract gate audits verdicts against exactly this edge set, and
     * re-deriving it there cost a second full cell-local rescoring pass
     * (same kernel, same threshold — bit-identical by construction, so
@@ -268,10 +262,9 @@ object Similarity {
     val b = local.select(col("cell"), col(idCol).as("j"), col("_vn").as("vb"))
     // materialized ONCE here; the component loop below and any caller
     // needing the edge set (the contract gate) share these blocks
-    val edges = a.join(b, Seq("cell")).where(col("i") < col("j"))
+    val edges = Materialize.pin(a.join(b, Seq("cell")).where(col("i") < col("j"))
       .where(round(dotCol(col("va"), col("vb")), 6) >= threshold)
-      .select("i", "j")
-      .localCheckpoint()
+      .select("i", "j"))
     val verdicts = Dedup.clustersFromCheckpointedEdges(
         local.select(col(idCol)), edges, idCol)
       .join(local.select(col(idCol), col("cell")), Seq(idCol))

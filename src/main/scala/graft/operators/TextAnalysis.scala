@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.functions.TextFunctions._
 
 /** Text-analysis operators for training-data pipelines: language ID,
@@ -373,11 +374,10 @@ object TextAnalysis {
       .select(col(idCol), explode(normWords(col(textCol))).as("term"))
       .where(col("term") =!= "")
     // tf feeds BOTH the scoring join and the df rollup: without a
-    // checkpoint Catalyst plans the corpus explode twice — one token scan
+    // pin Catalyst plans the corpus explode twice — one token scan
     // vs two is the dominant cost at scale, and (doc, term) counts are far
     // smaller than raw tokens
-    val tf = terms.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
+    val tf = Materialize.pin(terms.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf")))
     // tf rows are distinct per (doc, term) by construction, so df is a
     // plain count — countDistinct planned a second distinct aggregate
     // over an already-distinct relation
@@ -405,7 +405,7 @@ object TextAnalysis {
     * `score = idf · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))`.
     *
     * Scale shape: identical to tf-idf — the (doc, term) count relation is
-    * computed ONCE (localCheckpoint) and feeds the df rollup, the
+    * computed ONCE (pinned) and feeds the df rollup, the
     * per-document length rollup (`dl = Σ tf`, derived from tf so the raw
     * token explode is never re-scanned), and the scoring join; N and
     * avgdl ride a broadcast one-row join. Every input to the score is an
@@ -419,8 +419,7 @@ object TextAnalysis {
     val terms = docs
       .select(col(idCol), explode(normWords(col(textCol))).as("term"))
       .where(col("term") =!= "")
-    val tf = terms.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
+    val tf = Materialize.pin(terms.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf")))
     // tf rows are distinct per (doc, term) — plain count, no second
     // distinct aggregate (see tfidfTopTerms)
     val dfreq = tf.groupBy(col("term"))
@@ -453,9 +452,9 @@ object TextAnalysis {
     * tokens (sum rounded, then divided — the SURVEY §4 rule, so the score
     * is oracle-comparable).
     *
-    * Scale shape: the (doc, term) counts ride ONE corpus explode (lazy
-    * localCheckpoint, shared by the vocabulary rollup and the scoring
-    * join); vocabulary and the (T, V) totals are shrinking aggregates, the
+    * Scale shape: the (doc, term) counts ride ONE corpus explode (pinned,
+    * shared by the vocabulary rollup and the scoring join); vocabulary
+    * and the (T, V) totals are shrinking aggregates, the
     * totals a broadcast one-row join; the per-doc mean weights by tf so
     * the join is (doc, DISTINCT term) grain, not raw tokens. */
   /** @param carryCols doc-level columns to thread through to the output
@@ -469,10 +468,8 @@ object TextAnalysis {
     val terms = docs
       .select(keyCols :+ explode(normWords(col(textCol))).as("term"): _*)
       .where(col("term") =!= "")
-    val tf = terms.groupBy(keyCols :+ col("term"): _*).agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
-    val freq = tf.groupBy(col("term")).agg(sum(col("tf")).as("cnt"))
-      .localCheckpoint(false)
+    val tf = Materialize.pin(terms.groupBy(keyCols :+ col("term"): _*).agg(count(lit(1)).as("tf")))
+    val freq = Materialize.pin(tf.groupBy(col("term")).agg(sum(col("tf")).as("cnt")))
     val tot = freq.agg(sum(col("cnt")).as("t_total"), count(lit(1)).as("v"))
     tf.join(freq, "term")
       .crossJoin(broadcast(tot))
@@ -571,8 +568,8 @@ object TextAnalysis {
     * tf-weighted mean over the doc's bigrams (sum rounded, then divided —
     * the SURVEY §4 rule).
     *
-    * Scale shape: the (doc, bigram) counts ride ONE corpus explode (lazy
-    * localCheckpoint shared by the corpus-frequency rollup, the
+    * Scale shape: the (doc, bigram) counts ride ONE corpus explode (pinned,
+    * shared by the corpus-frequency rollup, the
     * context-count rollup, and the scoring join); both rollups shrink to
     * distinct bigrams / contexts; V is a broadcast one-row; scoring joins
     * at (doc, DISTINCT bigram) grain, never raw tokens. */
@@ -586,18 +583,16 @@ object TextAnalysis {
         element_at(col("_ws"), col("_i")).as("ctx"),
         element_at(col("_ws"), col("_i") + 1).as("nxt"))
       .where(col("ctx") =!= "" && col("nxt") =!= "")
-    val tf = bigrams.groupBy(col(idCol), col("ctx"), col("nxt"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
+    val tf = Materialize.pin(bigrams.groupBy(col(idCol), col("ctx"), col("nxt"))
+      .agg(count(lit(1)).as("tf")))
     // every model rollup derives from the TYPE-grain bgFreq relation
     // (strictly smaller than the (doc,bigram) tf relation), and the
     // model is assembled at type grain BEFORE touching tf — the former
     // formulation joined the doc-grain relation twice (once per rollup
     // key), paying a doc-grain exchange per join. Integer sums/distincts
     // recombine exactly, so every lp input is bit-identical.
-    val bgFreq = tf.groupBy(col("ctx"), col("nxt"))
-      .agg(sum(col("tf")).as("bg_cnt"))
-      .localCheckpoint(false)
+    val bgFreq = Materialize.pin(tf.groupBy(col("ctx"), col("nxt"))
+      .agg(sum(col("tf")).as("bg_cnt")))
     val ctxFreq = bgFreq.groupBy(col("ctx")).agg(sum(col("bg_cnt")).as("ctx_cnt"))
     val vocab = bgFreq.agg(countDistinct(col("nxt")).as("v"))
     val model = bgFreq.join(ctxFreq, Seq("ctx"))
@@ -628,7 +623,7 @@ object TextAnalysis {
     * the SURVEY §4 rule).
     *
     * Scale shape: identical to [[bigramLogProb]] — ONE corpus explode
-    * (lazy localCheckpoint), with the refinement that every model rollup
+    * (pinned), with the refinement that every model rollup
     * derives from the TYPE-grain `bgFreq` relation (strictly smaller than
     * the (doc,bigram) tf relation): c(ctx·) and N1+(ctx·) ride one
     * ctx-keyed pass, N1+(·nxt) one nxt-keyed pass, B a one-row broadcast.
@@ -645,12 +640,10 @@ object TextAnalysis {
         element_at(col("_ws"), col("_i")).as("ctx"),
         element_at(col("_ws"), col("_i") + 1).as("nxt"))
       .where(col("ctx") =!= "" && col("nxt") =!= "")
-    val tf = bigrams.groupBy(col(idCol), col("ctx"), col("nxt"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
-    val bgFreq = tf.groupBy(col("ctx"), col("nxt"))
-      .agg(sum(col("tf")).as("bg_cnt"))
-      .localCheckpoint(false)
+    val tf = Materialize.pin(bigrams.groupBy(col(idCol), col("ctx"), col("nxt"))
+      .agg(count(lit(1)).as("tf")))
+    val bgFreq = Materialize.pin(tf.groupBy(col("ctx"), col("nxt"))
+      .agg(sum(col("tf")).as("bg_cnt")))
     val ctxStats = bgFreq.groupBy(col("ctx"))
       .agg(sum(col("bg_cnt")).as("ctx_cnt"), count(lit(1)).as("n1_fwd"))
     val contStats = bgFreq.groupBy(col("nxt")).agg(count(lit(1)).as("n1_bwd"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.operators._
 
 /** Round-1 extension queries: skew-salted aggregation, batch twin of the
@@ -1389,12 +1389,12 @@ object ExtraQueries {
     // and sketch updates on 8-byte longs beat re-hashing ~30-char
     // strings — same estimate, a fraction of the explode volume and
     // per-row cost
-    val sh = Tables.load(s, dir, "documents")
+    // read 3×: batch sketches, single-pass twin, exact
+    val sh = Materialize.pin(Tables.load(s, dir, "documents")
       .select(col("lang"), col("source"),
         explode(Bridge.column(graft.functions.ShingleSet(
           Bridge.expression(normWords(col("text"))), 3))).as("_s"))
-      .select(col("lang"), col("source"), xxhash64(col("_s")).as("shingle"))
-      .localCheckpoint() // read 3×: batch sketches, single-pass twin, exact
+      .select(col("lang"), col("source"), xxhash64(col("_s")).as("shingle")))
     // the three contract aggregations (merged-from-batches, the direct
     // single-pass twin, and the exact baseline) fused into ONE union job
     // over the checkpointed shingle relation — their independent stages
@@ -1532,12 +1532,13 @@ object ExtraQueries {
     val d = Tables.load(s, dir, "documents")
     // hashed per-doc-deduped 8-shingles (see [[corpusSketch]]) — set
     // overlap is hash-invariant up to 2^-64 collisions
-    def sh(df: DataFrame) = df
+    // set semantics (distinct): theta estimates are dedup-invariant,
+    // and each side is read twice (sketch + exact)
+    def sh(df: DataFrame) = Materialize.pin(df
       .select(explode(Bridge.column(graft.functions.ShingleSet(
         Bridge.expression(normWords(col("text"))), 8))).as("_s"))
       .select(xxhash64(col("_s")).as("sh"))
-      .distinct() // set semantics: theta estimates are dedup-invariant,
-      .localCheckpoint() // and each side is read twice (sketch + exact)
+      .distinct())
     val ta = sh(d.where(pmod(col("doc_id"), lit(11)) =!= 0))
     val tb = sh(d.where(pmod(col("doc_id"), lit(11)) === 0))
     val r = SketchStats.overlap(ta, "sh", tb, "sh").collect().head // 1 row

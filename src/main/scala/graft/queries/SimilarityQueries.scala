@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.Hyperplanes
 import graft.operators.{Ivf, IvfPq, Opq, PcaAnn, Pq, Similarity, Sq}
 
@@ -69,10 +69,11 @@ object SimilarityQueries {
         .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet })
 
   /** Calibrated recall floors: (mean, min-per-query). Quantizer seeds are
-    * fixed, so recall per corpus is deterministic — tools/RecallScan
-    * measured sf0.001/0.01/0.1 and each floor sits a margin under the
-    * worst sf (e.g. IVF nProbe=4/16 measured mean 0.60–0.69, min
-    * 0.40–0.50 → floors 0.55/0.30). */
+    * fixed, so recall per corpus is deterministic: recall@K against
+    * [[exactTopK]] was measured at sf0.001/0.01/0.1 and each floor sits a
+    * margin under the worst sf (e.g. IVF nProbe=4/16 measured mean
+    * 0.60–0.69, min 0.40–0.50 → floors 0.55/0.30). A gate whose floor
+    * fails reports the recall it observed in its verdict row. */
   private val IvfFloors = (0.55, 0.30)
   private val PqFloors = (0.80, 0.60)
   private val OpqFloors = (0.85, 0.70)
@@ -260,8 +261,7 @@ object SimilarityQueries {
     // rescoring pass
     val (verdictsRaw, edges) =
       Similarity.semanticDedupIndexedWithEdges(idx, threshold = 0.45)
-    val verdictRows = verdictsRaw
-      .localCheckpoint() // read by every contract aggregate below
+    val verdictRows = Materialize.pin(verdictsRaw) // read by every contract aggregate below
     val n = emb(s, dir).count()
     // ONE aggregation job answers every row-local contract quantity —
     // total rows, distinct ids, canonical>member violations, dup count —

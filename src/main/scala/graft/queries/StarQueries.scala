@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.operators._
 
 /** Star-schema core + datamart queries (reference surface) wired for the
@@ -233,12 +233,12 @@ object StarQueries {
     starFixtureCache.getOrElseUpdate((s, dir), {
       val root = Fixtures.tempDir("star-idx")
       val layout = graft.streaming.StarStream.Layout(root)
-      val fact = FactBuild.factOrders(
+      // two batch filters over one materialization
+      val fact = Materialize.pin(FactBuild.factOrders(
           Tables.load(s, dir, "orders"), Tables.load(s, dir, "lineitem"),
           dimCustomersUnordered(s, dir), dimPartsUnordered(s, dir))
         .where(col("order_date").between(
-          lit("1998-01-01").cast("date"), lit("1998-01-31").cast("date")))
-        .localCheckpoint() // two batch filters over one materialization
+          lit("1998-01-01").cast("date"), lit("1998-01-31").cast("date"))))
       val dimP = dimPartsUnordered(s, dir)
       val dates = DateDim.fromTableSpan(Tables.load(s, dir, "orders"), "o_orderdate")
       graft.streaming.StarStream.applyFactBatch(

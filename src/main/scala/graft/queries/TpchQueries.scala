@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Classic TPC-H-shaped analytics (Q1/Q3/Q5 adapted to the testdata schema)
   * — the "switchover completeness" set: a consumer of the reference's
@@ -202,17 +202,16 @@ object TpchQueries {
 
   /** Q15: top supplier — quarter revenue per supplier, keep the max via a
     * broadcast one-row join (no global sort). The per-supplier relation is
-    * referenced twice (max + join), so it rides a lazy localCheckpoint:
+    * referenced twice (max + join), so it is pinned:
     * ONE scan of lineitem feeds both, instead of Catalyst planning the
     * whole scan+aggregate twice. */
   def q15(s: SparkSession, dir: String): DataFrame = {
-    val rev = Tables.load(s, dir, "lineitem")
+    val rev = Materialize.pin(Tables.load(s, dir, "lineitem")
       .where(to_date(col("l_shipdate")) >= lit("1996-01-01") &&
              to_date(col("l_shipdate")) < lit("1996-04-01"))
       .groupBy(col("l_suppkey"))
       .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 4)
-        .as("total_revenue"))
-      .localCheckpoint(false)
+        .as("total_revenue")))
     rev.join(broadcast(rev.agg(max(col("total_revenue")).as("m"))),
         col("total_revenue") === col("m"))
       .drop("m")
@@ -232,11 +231,10 @@ object TpchQueries {
       Tables.load(s, dir, "part").where(col("p_brand") === "Brand#3" && col("p_size") <= 5)
         .select(col("p_partkey")))
     // referenced twice (threshold aggregate + final filter) — one scan,
-    // and the checkpointed relation is already brand-pruned tiny
-    val li = Tables.load(s, dir, "lineitem")
+    // and the pinned relation is already brand-pruned tiny
+    val li = Materialize.pin(Tables.load(s, dir, "lineitem")
       .join(parts, col("l_partkey") === col("p_partkey"))
-      .select(col("p_partkey"), col("l_quantity"), col("l_extendedprice"))
-      .localCheckpoint(false)
+      .select(col("p_partkey"), col("l_quantity"), col("l_extendedprice")))
     val perPart = li.groupBy(col("p_partkey").as("t_partkey"))
       .agg((lit(0.2) * avg(col("l_quantity"))).as("qty_threshold"))
     li.join(broadcast(perPart), col("p_partkey") === col("t_partkey"))
@@ -341,7 +339,7 @@ object TpchQueries {
   def q2(s: SparkSession, dir: String): DataFrame = {
     // referenced twice (per-part MIN + final equality filter) — one scan
     // of the part-pruned supply relation (q15/q17 treatment)
-    val joined = q2PrunedSupply(s, dir).localCheckpoint(false)
+    val joined = Materialize.pin(q2PrunedSupply(s, dir))
     val minCost = joined.groupBy(col("p_partkey").as("mc_partkey"))
       .agg(min(col("ps_supplycost")).as("min_cost"))
     // no broadcast hint: minCost is one row PER QUALIFYING PART — tiny at
@@ -358,9 +356,9 @@ object TpchQueries {
       .limit(100)
   }
 
-  /** q2's pre-checkpoint supply relation — exposed so the ScaleShapeSpec
-    * plan guard can audit the shape that the localCheckpoint hides from
-    * the final frame (post-checkpoint it reads as a Scan ExistingRDD). */
+  /** q2's pre-pin supply relation — exposed so the ScaleShapeSpec plan
+    * guard can audit the shape that the pin hides from the final frame
+    * (post-pin it reads as a Scan ExistingRDD). */
   private[graft] def q2PrunedSupply(s: SparkSession, dir: String): DataFrame = {
     val supply = Tables.load(s, dir, "lineitem")
       .groupBy(col("l_partkey").as("ps_partkey"), col("l_suppkey").as("ps_suppkey"))
@@ -407,12 +405,11 @@ object TpchQueries {
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"))
     // referenced twice (threshold total + final filter) — one scan, and the
-    // checkpointed relation is per-part tiny (same treatment as q15/q17)
-    val perPart = Tables.load(s, dir, "lineitem")
+    // pinned relation is per-part tiny (same treatment as q15/q17)
+    val perPart = Materialize.pin(Tables.load(s, dir, "lineitem")
       .join(broadcast(natSupp), col("l_suppkey") === col("s_suppkey"), "left_semi")
       .groupBy(col("l_partkey").as("p_partkey"))
-      .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long")).as("value_cents"))
-      .localCheckpoint(false)
+      .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long")).as("value_cents")))
     perPart
       .join(broadcast(perPart.agg(sum(col("value_cents")).as("total_cents"))),
         col("value_cents") > col("total_cents") / lit(1000))

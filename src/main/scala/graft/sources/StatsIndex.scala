@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** File-level min/max statistics index over a parquet table — the
   * metadata layer that makes [[graft.operators.ZOrder]]'s clustering
@@ -1029,7 +1029,7 @@ object StatsIndex extends org.apache.spark.internal.Logging {
     * file names are gone and the new ones unindexed, and an index used
     * AS the file listing must never name a deleted file. The directories
     * decode ([[partitionOf]]) to tuples of one partition layout; survivor
-    * rows are pinned eagerly (localCheckpoint) before the overwrite so
+    * rows are pinned eagerly ([[Materialize.pinNow]]) before the overwrite so
     * the rewrite never reads the files it replaces. The index is
     * derivable metadata — a crash mid-overwrite loses nothing [[build]]
     * cannot recreate. */
@@ -1046,8 +1046,8 @@ object StatsIndex extends org.apache.spark.internal.Logging {
     val fs = new Path(indexPath).getFileSystem(hconf)
     val survivors =
       if (!fs.exists(new Path(indexPath))) None
-      else Some(restrictToPartitions(load(spark, indexPath), cols,
-        parts.map(_.map(_._2)), keep = false).localCheckpoint())
+      else Some(Materialize.pinNow(restrictToPartitions(load(spark, indexPath),
+        cols, parts.map(_.map(_._2)), keep = false)))
     val fresh = partitionDirs.flatMap { d =>
       val dir = new Path(d)
       val dfs = dir.getFileSystem(hconf)
@@ -1169,7 +1169,7 @@ object StatsIndex extends org.apache.spark.internal.Logging {
     * [[pruneFilesBloom]] survivor list reads into PATH_NOT_FOUND (the
     * `replacePartitions` lesson, applied here as full reconciliation:
     * the bloom relation is metadata-scale, so the listing diff is the
-    * whole cost). Kept rows are pinned via localCheckpoint before the
+    * whole cost). Kept rows are pinned ([[Materialize.pinNow]]) before the
     * overwrite, the [[replacePartitions]] read-then-replace discipline. */
   def updateBlooms(spark: SparkSession, tablePath: String,
                    bloomsPath: String, columns: Seq[String],
@@ -1187,8 +1187,7 @@ object StatsIndex extends org.apache.spark.internal.Logging {
       else Some(bloomsForFiles(spark, fresh, columns,
         expectedItemsPerFile, fpp))
     if (stale.nonEmpty) {
-      val kept = existing.where(col("file").isin(current: _*))
-        .localCheckpoint()
+      val kept = Materialize.pinNow(existing.where(col("file").isin(current: _*)))
       freshRows.fold(kept)(kept.unionByName(_))
         .write.mode("overwrite").parquet(bloomsPath)
     } else freshRows.foreach(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Materialize
 import graft.operators.{Dedup, DedupStore}
 
 /** The production streaming dedup loop — probe, verdict, append — with
@@ -57,9 +58,8 @@ object DedupStream {
         Dedup.lshBands(
           Dedup.minhashSignatures(batch.limit(0), idCol, textCol), idCol)
     // one verdict relation feeds both the sink and the append filter
-    val verdicts = DedupStore
-      .incrementalVerdicts(batch, idCol, textCol, store, threshold)
-      .localCheckpoint(false)
+    val verdicts = Materialize.pin(
+      DedupStore.incrementalVerdicts(batch, idCol, textCol, store, threshold))
     StreamSink.writeBatch(verdicts, batchId, verdictsPath)
     val survivors = batch.join(
       verdicts.where(!col("is_dup")).select(col(idCol)), Seq(idCol))

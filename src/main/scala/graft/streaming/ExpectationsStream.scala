@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Materialize
 import graft.operators.Expectations
 
 /** Continuous data-quality gating — [[graft.operators.Expectations]] run
@@ -29,7 +30,7 @@ object ExpectationsStream {
                  checks: Seq[Expectations.Check], reportPath: String,
                  gate: Boolean): Unit = {
     // one evaluation feeds both the sink and the gate
-    val report = Expectations.run(batch, checks).localCheckpoint(false)
+    val report = Materialize.pin(Expectations.run(batch, checks))
     StreamSink.writeBatch(report, batchId, reportPath)
     if (gate) Expectations.requirePass(report)
   }

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.operators.{Ivf, Pq, Similarity}
 
 /** The coarse-IVF trainer decision, measured (VERDICT r21 #8): probe
@@ -72,7 +73,7 @@ object RecallTrainerAB {
 
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
       val dir = s"/root/testdata/$sf"
-      val e = graft.Tables.load(spark, dir, "embeddings").localCheckpoint()
+      val e = Materialize.pinNow(graft.Tables.load(spark, dir, "embeddings"))
       val queries = e.where(col("vec_id") < nQueries)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
       val exact = Similarity.bruteForceTopK(e, queries, "vec_id", "embedding",

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.operators.{Dedup, Pq, Scd2, Sessionize, Similarity}
 
 /** Scale-shape stress: replicate the test corpus 20-50× and run the
@@ -31,17 +31,16 @@ object Stress {
     // text, others get a per-replica token appended (near-dups of the
     // original, exact dups of nothing) → realistic cluster structure.
     val docs = Tables.read(spark, "/root/testdata/sf0.1/documents.parquet")
-    val big = docs.crossJoin(spark.range(20).select(col("id").as("rep")))
+    // pinned (not persisted): the corpus is FABRICATED via a crossJoin,
+    // and a cached plan would leak that BroadcastNestedLoop into every
+    // downstream executedPlan string, tripping the plan-shape asserts
+    // below on the wrong join.
+    val big = Materialize.pinNow(docs.crossJoin(spark.range(20).select(col("id").as("rep")))
       .select(
         (col("doc_id") * 20 + col("rep")).as("doc_id"),
         when(col("rep") === 0, col("text"))
           .otherwise(concat(col("text"), lit(" rep"), col("rep"))).as("text"))
-      .repartition(32)
-      // localCheckpoint (not persist): the corpus is FABRICATED via a
-      // crossJoin, and a cached plan would leak that BroadcastNestedLoop
-      // into every downstream executedPlan string, tripping the
-      // plan-shape asserts below on the wrong join.
-      .localCheckpoint()
+      .repartition(32))
     println(s"docs: ${big.count()}")
 
     val cand = time("minhashCandidates on 100k docs") {
@@ -200,7 +199,7 @@ object Stress {
       val twins = base.where(col("id") % 100 === 0).select(
         (col("id") + 2000000L).as("id"),
         concat(lit("z"), substring(col("name"), 2, 100)).as("name"))
-      val names = base.unionByName(twins).repartition(32).localCheckpoint()
+      val names = Materialize.pinNow(base.unionByName(twins).repartition(32))
       val pairs = graft.operators.FuzzyJoin
         .selfJoin(names, "id", "name", maxDist = 1).count()
       assert(pairs >= 20000, s"planted twins missed: $pairs")
@@ -296,10 +295,10 @@ object Stress {
     // widens the shuffle, not the window, which is how real user growth
     // behaves.
     val ev = graft.queries.StarQueries.events(spark, "/root/testdata/sf0.1")
-    val bigEv = ev.crossJoin(spark.range(20).select(col("id").as("rep")))
+    val bigEv = Materialize.pinNow(ev.crossJoin(spark.range(20).select(col("id").as("rep")))
       .select((col("user_id") * 20 + col("rep")).as("user_id"),
         col("ts"), col("event_type"))
-      .repartition(32).localCheckpoint()
+      .repartition(32))
     println(s"events: ${bigEv.count()}")
     time("funnel view->click->purchase over 2M events (per-step 12h windows)") {
       val f = graft.operators.Behavior.funnel(bigEv, "user_id", "ts", "event_type",
@@ -387,9 +386,8 @@ object Stress {
       }
       // a single-user point update touches ONE bucket: the rebuild prunes
       // to 1/64th of the raw log
-      val oneUser = feed.orderBy("user_id").limit(1)
-        .withColumn("ts", col("ts") + expr("INTERVAL 400 DAYS"))
-        .localCheckpoint()
+      val oneUser = Materialize.pinNow(feed.orderBy("user_id").limit(1)
+        .withColumn("ts", col("ts") + expr("INTERVAL 400 DAYS")))
       val tPoint = apply(oneUser, 4L)
       val dim = graft.streaming.Scd2Stream.readDim(spark, s"$root/dim")
       val want = Scd2.fromHistory(
@@ -409,8 +407,8 @@ object Stress {
       assert(rawRowsAfter < rawRowsBefore,
         s"compaction did not shrink the log: $rawRowsAfter vs $rawRowsBefore")
       // a post-compaction point update must still match the full rebuild
-      val oneUser2 = oneUser.withColumn("ts", col("ts") + expr("INTERVAL 1 DAYS"))
-        .localCheckpoint()
+      val oneUser2 = Materialize.pinNow(
+        oneUser.withColumn("ts", col("ts") + expr("INTERVAL 1 DAYS")))
       val tPoint2 = apply(oneUser2, 5L)
       val nd2 = graft.streaming.Scd2Stream.readDim(spark, s"$root/dim").count()
       val nw2 = Scd2.fromHistory(
@@ -428,7 +426,7 @@ object Stress {
       // for ONE arrived day must cost the day, not the warehouse.
       // fact: 2M lines / ~667k orders / 400 days / 30k customers / 50 parts
       val root = java.nio.file.Files.createTempDirectory("graft-stress-dm").toString
-      val fact = spark.range(2000000L).select(
+      val fact = Materialize.pinNow(spark.range(2000000L).select(
           (col("id") / 3).cast("long").as("order_id"),
           date_add(lit("1995-01-01").cast("date"),
             ((col("id") / 3) % 400).cast("int")).as("order_date"),
@@ -437,13 +435,13 @@ object Stress {
           concat(lit("p"), (col("id") % 50).cast("string")).as("part_sk"),
           ((col("id") % 7) + 1).cast("double").as("quantity"),
           ((col("id") % 1000) + 0.5).as("net_amount"))
-        .repartition(32).localCheckpoint()
-      val dimP = spark.range(50).select(
+        .repartition(32))
+      val dimP = Materialize.pinNow(spark.range(50).select(
         concat(lit("p"), col("id").cast("string")).as("part_sk"),
         concat(lit("cat"), (col("id") % 5).cast("string")).as("category"),
-        lit(true).as("is_current")).localCheckpoint()
-      val dates = graft.operators.DateDim
-        .fromTableSpan(fact, "order_date").localCheckpoint()
+        lit(true).as("is_current")))
+      val dates = Materialize.pinNow(graft.operators.DateDim
+        .fromTableSpan(fact, "order_date"))
       val day = "1995-02-03"
 
       // sales_summary: full rebuild vs one touched-date refresh, both
@@ -536,8 +534,8 @@ object Stress {
       val stats = graft.sources.StatsIndex.build(spark, s"$root/t")
       val blooms = graft.sources.StatsIndex.buildBlooms(spark, s"$root/t",
         Seq("k"), expectedItemsPerFile = 200000)
-      val dim = spark.range(5).select((col("id") * 399999L).as("k"),
-        concat(lit("tag"), col("id")).as("tag")).localCheckpoint()
+      val dim = Materialize.pinNow(spark.range(5).select((col("id") * 399999L).as("k"),
+        concat(lit("tag"), col("id")).as("tag")))
       def run(withBloom: Boolean): (Long, Double) = {
         val fact = graft.sources.IndexedScan.readIndexedFrom(spark,
           s"$root/t", stats, if (withBloom) Some(blooms) else None)
@@ -582,7 +580,7 @@ object Stress {
         stateKeepRecent = 2, stateCompactEvery = 2)
       // fact: 2M lines / ~667k orders / 400 days / 30k customers, sk =
       // md5(natural key) — the contract dimCustomersCurrent publishes
-      val fact = spark.range(2000000L).select(
+      val fact = Materialize.pinNow(spark.range(2000000L).select(
           (col("id") / 3).cast("long").as("order_id"),
           date_add(lit("1995-01-01").cast("date"),
             ((col("id") / 3) % 400).cast("int")).as("order_date"),
@@ -590,25 +588,25 @@ object Stress {
           concat(lit("p"), (col("id") % 50).cast("string")).as("part_sk"),
           ((col("id") % 7) + 1).cast("double").as("quantity"),
           ((col("id") % 1000) + 0.5).as("net_amount"))
-        .repartition(32).localCheckpoint()
-      val dimP = spark.range(50).select(
+        .repartition(32))
+      val dimP = Materialize.pinNow(spark.range(50).select(
         concat(lit("p"), col("id").cast("string")).as("part_sk"),
         concat(lit("cat"), (col("id") % 5).cast("string")).as("category"),
-        lit(true).as("is_current")).localCheckpoint()
-      val dates = graft.operators.DateDim
-        .fromTableSpan(fact, "order_date").localCheckpoint()
+        lit(true).as("is_current")))
+      val dates = Materialize.pinNow(graft.operators.DateDim
+        .fromTableSpan(fact, "order_date"))
       // CDC: ~6.7 observations per customer, every one a tracked-segment
       // change (so versions == observations), unique ts per (key, obs)
       val baseEpoch = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
         .getTime / 1000
-      val cdc = spark.range(200000L).select(
+      val cdc = Materialize.pinNow(spark.range(200000L).select(
           (col("id") % 30000).as("customer_id"),
           concat(lit("n"), (col("id") % 30000).cast("string")).as("name"),
           (lit(baseEpoch) + (col("id") / 30000) * (17L * 86400) +
             (col("id") % 24) * 3600).cast("timestamp").as("ts"),
           concat(lit("seg"), ((col("id") / 30000) % 5).cast("string"))
             .as("mkt_segment"))
-        .repartition(32).localCheckpoint()
+        .repartition(32))
 
       def tsec(f: => Unit): Double = {
         val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -631,13 +629,12 @@ object Stress {
         t
       }
       // steady state: one NEW day's ~5k arrivals; one customer's new obs
-      val newDay = spark.range(5000L).select(
+      val newDay = Materialize.pinNow(spark.range(5000L).select(
           (lit(700000L) + (col("id") / 3).cast("long")).as("order_id"),
           lit("1996-02-05").cast("date").as("order_date"),
           md5((col("id") % 30000).cast("long").cast("string")).as("customer_sk"),
           concat(lit("p"), (col("id") % 50).cast("string")).as("part_sk"),
-          lit(2.0).as("quantity"), lit(10.5).as("net_amount"))
-        .localCheckpoint()
+          lit(2.0).as("quantity"), lit(10.5).as("net_amount")))
       var dayTouched: Seq[String] = Nil
       val tDay = tsec { dayTouched = graft.streaming.StarStream.applyFactBatch(
         newDay, 4L, layout,
@@ -647,9 +644,9 @@ object Stress {
         cfg) }
       assert(dayTouched == Seq("1996-02-05"),
         s"steady-state batch touched $dayTouched")
-      val onePoint = cdc.orderBy("customer_id", "ts").limit(1)
+      val onePoint = Materialize.pinNow(cdc.orderBy("customer_id", "ts").limit(1)
         .withColumn("ts", col("ts") + expr("INTERVAL 500 DAYS"))
-        .withColumn("mkt_segment", lit("segX")).localCheckpoint()
+        .withColumn("mkt_segment", lit("segX")))
       val tPoint = tsec(graft.streaming.StarStream.applyCdcBatch(
         onePoint, 4L, layout, cfg))
 
@@ -690,8 +687,7 @@ object Stress {
       graft.operators.ZOrder.writeClustered(data, Seq("user_id", "value"),
         s"$root/z", nFiles = 32)
       val t0 = System.nanoTime()
-      val stats = graft.sources.StatsIndex.build(spark, s"$root/z")
-        .localCheckpoint()
+      val stats = Materialize.pinNow(graft.sources.StatsIndex.build(spark, s"$root/z"))
       val nStats = stats.count()
       val tBuild = (System.nanoTime() - t0) / 1e9
       val qs = data.selectExpr("CAST(user_id AS DOUBLE) AS u", "value")
@@ -807,8 +803,8 @@ object Stress {
       // rows through one partition; the split path slices the timeline
       // into census-driven subs and fixes the boundaries up with a tiny
       // broadcast relation — output pinned identical on a 200k sample
-      val one = bigEv.select(lit(1L).as("user_id"), col("ts"), col("event_type"))
-        .localCheckpoint()
+      val one = Materialize.pinNow(
+        bigEv.select(lit(1L).as("user_id"), col("ts"), col("event_type")))
       val purch = one.where(col("event_type") === "purchase")
         .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
       // count the MATCHED rows, not the rows: a bare count() lets column
@@ -882,10 +878,10 @@ object Stress {
     // 40k vectors: 20 replicas of the 2k embeddings (float jitter via
     // deterministic per-replica scale so replicas are near-parallel).
     val emb = Tables.read(spark, "/root/testdata/sf0.1/embeddings.parquet")
-    val bigEmb = emb.crossJoin(spark.range(20).select(col("id").as("rep")))
+    val bigEmb = Materialize.pinNow(emb.crossJoin(spark.range(20).select(col("id").as("rep")))
       .select((col("vec_id") * 20 + col("rep")).as("vec_id"),
               col("embedding"))
-      .repartition(32).localCheckpoint()
+      .repartition(32))
     println(s"vectors: ${bigEmb.count()}")
     val q = bigEmb.where(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
@@ -904,8 +900,8 @@ object Stress {
       // exact-replica truth set must survive the full two-level pipeline
       val idx = graft.operators.IvfPq.build(bigEmb, "vec_id", "embedding",
         nCells = 16, m = 16, ksub = 64, seed = 42L)
-      val out = graft.operators.IvfPq.probe(idx, bigEmb, "embedding",
-        q, "q_id", "q_vec", k = 10, nProbe = 4).localCheckpoint()
+      val out = Materialize.pinNow(graft.operators.IvfPq.probe(idx, bigEmb, "embedding",
+        q, "q_id", "q_vec", k = 10, nProbe = 4))
       val wrong = out.where(expr("vec_id div 20") =!= 0L).count()
       assert(wrong == 0L, s"$wrong results outside the exact-replica group")
       println(s"   rows: ${out.count()} (all from the cos=1.0 replica group; " +
@@ -919,8 +915,8 @@ object Stress {
       graft.operators.IvfPq.saveVectors(bigEmb, "vec_id", "embedding", dir, nFiles = 32)
       idx.unpersist()
       time("  probeSaved off the persisted id-clustered index") {
-        val saved = graft.operators.IvfPq.probeSaved(spark, dir, "vec_id",
-          "embedding", q, "q_id", "q_vec", k = 10, nProbe = 4).localCheckpoint()
+        val saved = Materialize.pinNow(graft.operators.IvfPq.probeSaved(spark, dir, "vec_id",
+          "embedding", q, "q_id", "q_vec", k = 10, nProbe = 4))
         val wrongS = saved.where(expr("vec_id div 20") =!= 0L).count()
         assert(wrongS == 0L, s"$wrongS probeSaved results outside the replica group")
         println(s"   rows: ${saved.count()} (shortlist ids pushed into the " +
@@ -933,9 +929,9 @@ object Stress {
       // replica-group members (identical vectors ⇒ identical codes ⇒ the
       // shortlist can't miss them; the exact rerank ranks them at 1.0)
       val cbS = Pq.fit(bigEmb, "embedding", m = 16, ksub = 64, seed = 42L)
-      val codes = Pq.encode(bigEmb, "vec_id", "embedding", cbS).localCheckpoint()
-      val out = Pq.topKRerank(codes, cbS, "vec_id", bigEmb, "embedding",
-        q, "q_id", "q_vec", k = 10, shortlistFactor = 5).localCheckpoint()
+      val codes = Materialize.pinNow(Pq.encode(bigEmb, "vec_id", "embedding", cbS))
+      val out = Materialize.pinNow(Pq.topKRerank(codes, cbS, "vec_id", bigEmb, "embedding",
+        q, "q_id", "q_vec", k = 10, shortlistFactor = 5))
       val wrong = out.where(expr("vec_id div 20") =!= 0L).count()
       assert(wrong == 0L, s"$wrong results outside the exact-replica group")
       println(s"   rows: ${out.count()} (all from the cos=1.0 replica group; " +

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.operators.{ChangeFeed, Compaction, SnapshotDiff, Upsert}
 import graft.sources.{IndexedScan, StatsIndex}
 
@@ -32,13 +32,12 @@ object StressVersioned {
 
     // 2M rows, 400 days, 5k rows/day; day-clustered so the bootstrap
     // write lands ~1 file per partition (the compacted steady state)
-    val fact = spark.range(2000000L).select(
+    val fact = Materialize.pinNow(spark.range(2000000L).select(
         col("id").as("order_id"),
         concat(lit("d"), lpad((col("id") % 400).cast("string"), 3, "0"))
           .as("day"),
         (col("id") % 997).cast("double").as("amount"))
-      .repartition(col("day"))
-      .localCheckpoint()
+      .repartition(col("day")))
 
     val g1 = time("bootstrap merge: 2M rows -> 400 partitions, gen 1") {
       Upsert.mergeIntoVersioned(path, fact, Seq("order_id"), "day", idx)
@@ -48,9 +47,8 @@ object StressVersioned {
     println(s"   manifest files: $filesG1")
 
     // the steady-state write: one day's 5k-row delta
-    val oneDay = fact.where(col("day") === "d007")
-      .withColumn("amount", col("amount") + 1.0)
-      .localCheckpoint()
+    val oneDay = Materialize.pinNow(fact.where(col("day") === "d007")
+      .withColumn("amount", col("amount") + 1.0))
     val g2 = time("one-day merge: 5k rows, 1 of 400 partitions") {
       Upsert.mergeIntoVersioned(path, oneDay, Seq("order_id"), "day", idx)
     }
@@ -107,10 +105,10 @@ object StressVersioned {
     // daily-ingest change. Before R19 this fell back to a full-table
     // diff (both 2M-row snapshots); now the from-slice is a schemed
     // empty relation and the hop reads one partition's files
-    val newDay = spark.range(5000L).select(
+    val newDay = Materialize.pinNow(spark.range(5000L).select(
         (col("id") + 10000000L).as("order_id"), lit("d400").as("day"),
         (col("id") % 997).cast("double").as("amount"))
-      .coalesce(1).localCheckpoint()
+      .coalesce(1))
     val gA = time("append-only merge: brand-new partition d400") {
       Upsert.mergeIntoVersioned(path, newDay, Seq("order_id"), "day", idx)
     }
@@ -196,27 +194,25 @@ object StressVersioned {
     // -----------------------------------------------------------------
     if (args.contains("big")) {
       val (bigPath, bigIdx) = (s"$root/big", s"$root/big/_stats_v")
-      val bigFact = spark.range(20000000L).select(
+      val bigFact = Materialize.pinNow(spark.range(20000000L).select(
           col("id").as("order_id"),
           concat(lit("d"), lpad((col("id") % 400).cast("string"), 3, "0"))
             .as("day"),
           (col("id") % 997).cast("double").as("amount"))
-        .repartition(col("day"))
-        .localCheckpoint()
+        .repartition(col("day")))
       val bg1 = time("BIG bootstrap merge: 20M rows -> 400 partitions") {
         Upsert.mergeIntoVersioned(bigPath, bigFact, Seq("order_id"), "day", bigIdx)
       }
-      val bman1 = StatsIndex.load(spark, s"${bigIdx}/_v=$bg1").localCheckpoint()
+      val bman1 = Materialize.pinNow(StatsIndex.load(spark, s"${bigIdx}/_v=$bg1"))
       val bFiles = bman1.select("file").distinct().count()
       println(s"   manifest files: $bFiles")
 
-      val bDelta = bigFact.where(col("day") === "d007")
-        .withColumn("amount", col("amount") + 1.0)
-        .localCheckpoint()
+      val bDelta = Materialize.pinNow(bigFact.where(col("day") === "d007")
+        .withColumn("amount", col("amount") + 1.0))
       val bg2 = time("BIG one-day merge: 50k rows, 1 of 400 partitions") {
         Upsert.mergeIntoVersioned(bigPath, bDelta, Seq("order_id"), "day", bigIdx)
       }
-      val bman2 = StatsIndex.load(spark, s"${bigIdx}/_v=$bg2").localCheckpoint()
+      val bman2 = Materialize.pinNow(StatsIndex.load(spark, s"${bigIdx}/_v=$bg2"))
 
       // scan-metric assertion: the hop's two restricted slices together
       // name exactly the changed day's files — never the table
