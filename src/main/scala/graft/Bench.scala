@@ -146,6 +146,8 @@ object Bench {
     val doReap = !sys.env.contains("SPARK_GRAFT_NO_REAP")
     def reap(): Unit =
       if (doReap) graft.queries.Fixtures.reapTransients(spark)
+    // generated classes each pass compiles (JVM-wide; nothing else runs)
+    val compiles0 = org.apache.spark.sql.graft.Bridge.codegenCompiles._1
     val colds = sorted.map { case (name, fn) =>
       val c0 = System.nanoTime()
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
@@ -153,6 +155,7 @@ object Bench {
       reap()
       name -> c
     }.toMap
+    val compiles1 = org.apache.spark.sql.graft.Bridge.codegenCompiles._1
     // PASS 2 — steady-state timing over the identically-ordered set.
     val pass2 = sorted.map { case (name, fn) =>
       val t0 = System.nanoTime()
@@ -167,6 +170,7 @@ object Bench {
       reap()
       (name, if (ok) t else -1.0, colds(name))
     }
+    val compiles2 = org.apache.spark.sql.graft.Bridge.codegenCompiles._1
     // PASS 3 — contention self-defense. This host is shared: a co-tenant
     // burst during one query's timed window has published ≥2× "regressions"
     // on untouched code three rounds running (r6/r11/r13 — the tell is
@@ -228,7 +232,8 @@ object Bench {
     // host-contention telemetry: the 1-min OS load average at sweep end
     // plus the cold/steady ratio let a contended artifact self-label
     // (the r19/r20 forensics needed cross-round comparison to spot it);
-    // -1 when the platform exposes no load average
+    // -1 when the platform exposes no load average. The per-pass compile
+    // counts show whether the steady pass reused the cold pass's classes.
     val loadAvg = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     // Locale.ROOT formatting (ADVICE r21): the f interpolator is
@@ -239,7 +244,8 @@ object Bench {
         java.lang.Double.valueOf(v))
     val telemetry =
       s""","load_avg":${num(loadAvg, 2)},"cold_steady_ratio":${
-        num(if (total > 0) coldTotal / total else -1.0, 3)}"""
+        num(if (total > 0) coldTotal / total else -1.0, 3)},"cold_compiles":${
+        compiles1 - compiles0},"steady_compiles":${compiles2 - compiles1}"""
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","cold_total":$coldTotal$telemetry,"queries":$qs$errJson$retimedJson,"sf":"$sfDir"}"""
     println(json)

@@ -8,6 +8,7 @@ import scala.collection.mutable
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.graft.Bridge
 
 /** One Spark job: its call site (the action of its SQL execution, else
   * its result stage's), the stages that ran (skipped ones excluded),
@@ -19,8 +20,14 @@ final case class Job(id: Int, callSite: String, stages: Int, tasks: Int,
   * to it) with its physical-plan description. */
 final case class Execution(id: Long, plan: String)
 
-/** The Spark work one measured call caused, and the call's wall time. */
-final case class Work(wallMs: Double, jobs: Seq[Job], executions: Seq[Execution])
+/** The Spark work one measured call caused, and the call's wall time.
+  *
+  * `compiles` and `compileMs` are the generated classes Spark compiled
+  * while the call ran and their Janino time. Spark counts compiles per
+  * JVM, not per job, so these two are exact only when nothing else runs
+  * at the same time; a concurrent query's compiles are counted too. */
+final case class Work(wallMs: Double, jobs: Seq[Job], executions: Seq[Execution],
+                      compiles: Long, compileMs: Double)
 
 /** The engine's one way to see what Spark work a call causes.
   *
@@ -49,16 +56,18 @@ object Obs {
     sc.addSparkListener(scope)
     try {
       sc.addJobTag(scope.tag)
+      val (n0, ns0) = Bridge.codegenCompiles
       val t0 = System.nanoTime()
       val out = try f finally sc.removeJobTag(scope.tag)
       val wallMs = (System.nanoTime() - t0) / 1e6
+      val (n1, ns1) = Bridge.codegenCompiles
       sc.setLocalProperty(MarkerProp, scope.tag)
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setLocalProperty(MarkerProp, null)
       if (!scope.drained.await(60, TimeUnit.SECONDS))
         throw new IllegalStateException("listener bus never delivered the marker job")
       val (jobs, executions) = scope.seen
-      (out, Work(wallMs, jobs, executions))
+      (out, Work(wallMs, jobs, executions, n1 - n0, (ns1 - ns0) / 1e6))
     } finally sc.removeSparkListener(scope)
   }
 

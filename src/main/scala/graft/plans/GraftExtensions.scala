@@ -1,9 +1,15 @@
 package graft.plans
 
+import java.util.concurrent.atomic.AtomicBoolean
+
+import org.apache.spark.SparkConf
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.internal.StaticSQLConf
 
 import graft.functions.{BloomBuildAgg, BpeTokens, CmsBuildAgg, CmsMergeAgg, CosineSimilarity, DotProduct, MinHashSignature, ShingleSet, SimHash64, Sq8Dot, Sq8Encode, TopKRows}
 
@@ -16,10 +22,14 @@ import graft.functions.{BloomBuildAgg, BpeTokens, CmsBuildAgg, CmsMergeAgg, Cosi
   *
   * after which `graft_cosine(a, b)` is available in SQL and via
   * `call_function("graft_cosine", ...)` in the DataFrame API.
+  *
+  * Either way it also sizes Spark's compiled-class cache for graft's
+  * plans ([[GraftExtensions.installCodegenCache]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftExtensions.installCodegenCache()
     // opt-in optimizer rewrite: window top-k idiom → bounded-heap
     // aggregate (spark.graft.rewrite.topk=true; no-op otherwise)
     ext.injectOptimizerRule(_ => TopKRewrite())
@@ -171,5 +181,64 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "graft_sq8_dot(code, unitVec) takes exactly 2 arguments")
         Sq8Dot(children.head, children(1))
       }))
+  }
+}
+
+/** The size of Spark's compiled-class cache in graft's sessions.
+  *
+  * Spark keeps one LRU of compiled generated classes per JVM. It is built
+  * at the JVM's first compile, sized by the static conf
+  * `spark.sql.codegen.cache.maxEntries` (default 100) of the SQL conf that
+  * compile sees, and never resized. A session that cycles through more
+  * classes than that gets no hits: the seven starbench `query_mix` queries
+  * generate 146 classes, so at 100 every pass compiled all 146 again.
+  * Sized to graft's working set, a warm session compiles nothing it
+  * already ran.
+  */
+object GraftExtensions extends Logging {
+
+  val CodegenCacheKey: String = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+
+  /** Entries for graft's plan working set: one `graft.Bench` sweep of the
+    * 159 gate queries compiles 1607 distinct classes at sf0.1, so the
+    * cache holds a whole sweep with room for the few classes a steady
+    * pass adds. */
+  val CodegenCacheEntries: Int = 2048
+
+  private val installed = new AtomicBoolean(false)
+
+  /** Put graft's cache size into `conf` unless it already sets one: a
+    * deployment's own value always wins. */
+  def defaultCodegenCache(conf: SparkConf): SparkConf =
+    conf.setIfMissing(CodegenCacheKey, CodegenCacheEntries.toString)
+
+  /** Default the cache size where the next session's SQL conf will read
+    * it, before that conf is built:
+    *
+    *  - with a running context (`spark.sql.extensions`: Spark applies the
+    *    extension after it starts the context and before it builds any
+    *    session state), in that context's own conf;
+    *  - with no context yet (`withExtensions`: the builder applies the
+    *    extension at once, then starts the context), in the `spark.*` JVM
+    *    system properties, which the builder's `SparkConf` reads as
+    *    defaults under the builder's own settings.
+    *
+    * Only the JVM's first compile reads the value, so if classes were
+    * compiled before graft's extensions were first installed, the cache
+    * keeps the size it was built with; that is logged once. */
+  private[graft] def installCodegenCache(): Unit = {
+    Bridge.activeContextConf match {
+      case Some(conf) => defaultCodegenCache(conf)
+      case None =>
+        if (System.getProperty(CodegenCacheKey) == null)
+          System.setProperty(CodegenCacheKey, CodegenCacheEntries.toString)
+    }
+    if (installed.compareAndSet(false, true)) {
+      val compiled = Bridge.codegenCompiles._1
+      if (compiled > 0)
+        logWarning(s"$compiled generated classes were compiled in this JVM " +
+          "before graft's extensions were installed; Spark's codegen cache " +
+          s"keeps the size it was built with, whatever $CodegenCacheKey says")
+    }
   }
 }

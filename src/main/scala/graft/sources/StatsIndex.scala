@@ -120,17 +120,8 @@ object StatsIndex extends org.apache.spark.internal.Logging {
     * file × indexed column. `columns` empty = every primitive leaf
     * column the footers carry. */
   def build(spark: SparkSession, tablePath: String,
-            columns: Seq[String] = Nil): DataFrame = {
-    import spark.implicits._
-    val files = listDataFiles(spark, tablePath)
-    if (files.isEmpty) return spark.emptyDataset[FileColStats].toDF()
-    val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
-    val wanted = columns.toSet
-    val par = math.min(files.size, spark.sparkContext.defaultParallelism)
-    spark.createDataset(files).repartition(par)
-      .mapPartitions(_.flatMap(f => footerStats(f, conf, wanted)))
-      .toDF()
-  }
+            columns: Seq[String] = Nil): DataFrame =
+    statsForFiles(spark, listDataFiles(spark, tablePath), columns)
 
   /** Stats rows for one file's footer. Per-column chunks aggregate
     * across row groups: min of mins, max of maxes, null counts summed
@@ -762,7 +753,7 @@ object StatsIndex extends org.apache.spark.internal.Logging {
     val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
     val wanted = columns.toSet
     val par = math.min(files.size, spark.sparkContext.defaultParallelism)
-    spark.createDataset(files.toSeq).repartition(par)
+    spark.createDataset(files).repartition(par)
       .mapPartitions(_.flatMap(f => footerStats(f, conf, wanted)))
       .toDF()
   }
@@ -792,14 +783,7 @@ object StatsIndex extends org.apache.spark.internal.Logging {
         .collect().map(_.getString(0)).toSet
     val fresh = candidates.filterNot(existing)
     if (fresh.isEmpty) return 0L
-    import spark.implicits._
-    val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
-    val columnSet = columns.toSet
-    val par = math.min(fresh.size, spark.sparkContext.defaultParallelism)
-    spark.createDataset(fresh).repartition(par)
-      .mapPartitions(_.flatMap(f => footerStats(f, conf, columnSet)))
-      .toDF()
-      .write.mode("append").parquet(indexPath)
+    statsForFiles(spark, fresh, columns).write.mode("append").parquet(indexPath)
     fresh.size.toLong
   }
 

@@ -8,14 +8,16 @@ import graft.queries.Fixtures
   *
   * Usage: runMain graft.tools.Prof <sfDir> <query1> [query2 ...]
   *
-  * Each query is built and counted once to warm it, then built and
-  * counted again under [[Obs.measure]]. The build (driver-side
-  * construction, including the eager jobs an operator runs while
-  * building) and the execution (`count()`, the action [[graft.Bench]]
-  * times) each print their wall time, their job count and one line per
-  * job: stages, tasks, wall time and call site. The session is shaped like
-  * the bench's: local[$SPARK_GRAFT_CPUS], as many shuffle partitions, the
-  * Graft extensions.
+  * Every query is first built and counted once, in order, to warm it;
+  * then each is built and counted again under [[Obs.measure]], the two
+  * passes [[graft.Bench]] makes. The build (driver-side construction,
+  * including the eager jobs an operator runs while building) and the
+  * execution (`count()`, the action [[graft.Bench]] times) each print
+  * their wall time, their job count, the generated classes Spark compiled
+  * and their compile time (JVM-wide counts, exact here because nothing
+  * else runs), and one line per job: stages, tasks, wall time and call
+  * site. The session is shaped like the bench's: local[$SPARK_GRAFT_CPUS],
+  * as many shuffle partitions, the Graft extensions.
   */
 object Prof {
   def main(args: Array[String]): Unit = {
@@ -27,16 +29,19 @@ object Prof {
     val spark = Graft.session(master = s"local[$cpus]", shufflePartitions = cpus)
     spark.sparkContext.setLogLevel("ERROR")
     def show(phase: String, w: Work): Unit = {
-      println(f"  $phase%-5s ${w.wallMs / 1e3}%8.3f s ${w.jobs.size}%4d jobs")
+      println(f"  $phase%-5s ${w.wallMs / 1e3}%8.3f s ${w.jobs.size}%4d jobs " +
+        f"${w.compiles}%4d compiles ${w.compileMs / 1e3}%7.3f s compiling")
       w.jobs.foreach { j =>
         println(f"    job ${j.id}%-5d ${j.stages}%3d stages ${j.tasks}%5d tasks " +
           f"${j.wallMs / 1e3}%8.3f s  ${j.callSite}")
       }
     }
     names.foreach { name =>
-      val query = SparkEntry.queries(name)
-      query(spark, sfDir).count()
+      SparkEntry.queries(name)(spark, sfDir).count()
       Fixtures.reapTransients(spark)
+    }
+    names.foreach { name =>
+      val query = SparkEntry.queries(name)
       val (df, build) = Obs.measure(spark)(query(spark, sfDir))
       val (rows, exec) = Obs.measure(spark)(df.count())
       println(s"$name: $rows rows")

@@ -32,4 +32,22 @@ object Bridge {
   def observedMetrics(obs: org.apache.spark.sql.Observation): Map[String, Any] =
     try obs.getOrEmpty
     catch { case _: NullPointerException => Map.empty }
+
+  /** The running context's own conf, not the copy `getConf` returns: a
+    * setting made on it reaches the SQL conf of session state built on
+    * the context afterwards. None while no context runs. Both
+    * `SparkContext.getActive` and `conf` are private[spark]. */
+  def activeContextConf: Option[org.apache.spark.SparkConf] =
+    org.apache.spark.SparkContext.getActive.map(_.conf)
+
+  /** Generated classes compiled in this JVM so far (Spark's
+    * `CodegenMetrics`, private[spark]) and their total compile time in
+    * nanoseconds. The time is read only once a class has been compiled:
+    * the first touch of `CodeGenerator` builds its cache, sized from the
+    * SQL conf of whichever thread touches it. */
+  def codegenCompiles: (Long, Long) = {
+    val n = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    (n, if (n == 0) 0L
+        else org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
+  }
 }
